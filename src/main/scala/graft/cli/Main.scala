@@ -3,6 +3,7 @@ package graft.cli
 import java.nio.file.{Files, Paths}
 import org.apache.spark.ml.classification.RandomForestClassificationModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.jobs.DailyEtlJob
@@ -98,8 +99,10 @@ object Main {
         write(state.bars, "bars")
         write(state.enrichments, "enrichments")
         write(fact, "fact")
-        println(s"[cli] backfill: bars=${state.bars.count()} " +
-          s"enrichments=${state.enrichments.count()} fact rows written")
+        // count the written files: counting state.* re-runs both plans
+        def written(t: String) = spark.read.parquet(path(t)).count()
+        println(s"[cli] backfill: bars=${written("bars")} " +
+          s"enrichments=${written("enrichments")} fact rows written")
 
       case "run" =>
         val state = DailyEtlJob.State(
@@ -162,24 +165,33 @@ object Main {
                 s"--early-stop-tol must be a number, got '$v'")
           }
         }
-        val labeled = features(spark, eventsDir, forPrediction = false)
-        val (train, valid, test) = ChronoSplit(labeled)
-        val (modelType, res) = modelDir match {
-          case "gbt" =>
-            // --early-stop-tol enables eval-set early stopping on the
-            // chronological validation split (reference train.py:95-102)
-            val validation = earlyStopTol.map(_ => valid)
-            val tol = earlyStopTol.getOrElse(0.01)
-            val (model, _) = Train.fitBoosted(train,
-              maxIter = opts.getOrElse("trees", "200").toInt,
-              validation = validation, validationTol = tol)
-            model.write.overwrite().save(path("models/gbt"))
-            ("gbt_one_vs_rest", Train.evaluateModel(model, test))
-          case _ =>
-            val (model, _) = Train.fit(train,
-              numTrees = opts.getOrElse("trees", "200").toInt)
-            model.write.overwrite().save(path("models/rf"))
-            ("random_forest", Train.evaluate(model, test))
+        // The split, the fit and the evaluation each run several jobs
+        // over the labeled frame; staged, the ~40-window feature plan
+        // executes once instead of once per consumer. OneVsRest caches
+        // its lazy input, and a cached plan keeps its uncoalesced
+        // shuffle partitions: that is the layout the boosted trees have
+        // always trained on, so the gbt path stages it uncoalesced.
+        val (modelType, res) = withLocalCheckpoint(
+            features(spark, eventsDir, forPrediction = false),
+            coalesce = modelDir != "gbt") { labeled =>
+          val (train, valid, test) = ChronoSplit(labeled)
+          modelDir match {
+            case "gbt" =>
+              // --early-stop-tol enables eval-set early stopping on the
+              // chronological validation split (reference train.py:95-102)
+              val validation = earlyStopTol.map(_ => valid)
+              val tol = earlyStopTol.getOrElse(0.01)
+              val (model, _) = Train.fitBoosted(train,
+                maxIter = opts.getOrElse("trees", "200").toInt,
+                validation = validation, validationTol = tol)
+              model.write.overwrite().save(path("models/gbt"))
+              ("gbt_one_vs_rest", Train.evaluateModel(model, test))
+            case _ =>
+              val (model, _) = Train.fit(train,
+                numTrees = opts.getOrElse("trees", "200").toInt)
+              model.write.overwrite().save(path("models/rf"))
+              ("random_forest", Train.evaluate(model, test))
+          }
         }
         val metricsJson = res.metrics.map { case (k, v) =>
           s""""$k": $v""" }.mkString("{", ", ", "}")
@@ -267,8 +279,34 @@ object Main {
     }
   }
 
-  private def features(spark: SparkSession, eventsDir: String,
-                       forPrediction: Boolean): DataFrame = {
+  /** Runs `f` over `df` materialized once, then releases the staged
+    * blocks. `localCheckpoint`, not `persist`: the staged rows keep the
+    * partition layout the lazy (AQE-coalesced) plan produces, and that
+    * layout feeds the model — MLlib's random-forest bagging and split
+    * sampling seed per partition, and tree learners sum non-integer
+    * sample weights partition by partition. A persisted frame keeps its
+    * uncoalesced shuffle partitions (3 where the lazy plan read 1 on a
+    * 40-user feed) and trains a different forest. `coalesce = false`
+    * stages that uncoalesced layout instead, with AQE partition
+    * coalescing off for the one staging job. */
+  private[graft] def withLocalCheckpoint[T](df: DataFrame,
+                                            coalesce: Boolean = true)(
+      f: DataFrame => T): T = {
+    val conf = df.sparkSession.conf
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prior = conf.getOption(key)
+    if (!coalesce) conf.set(key, "false")
+    val staged =
+      try df.localCheckpoint()
+      finally if (!coalesce) prior.fold(conf.unset(key))(conf.set(key, _))
+    try f(staged)
+    finally staged.queryExecution.logical
+      .collect { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = true))
+  }
+
+  private[graft] def features(spark: SparkSession, eventsDir: String,
+                              forPrediction: Boolean): DataFrame = {
     val events = Tables.events(spark, eventsDir)
     FeatureEngineering(EventSeries.dailyBars(events),
       Some(EventSeries.dailySentiment(events)

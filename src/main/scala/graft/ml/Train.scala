@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   *                    one-vs-rest over GBTClassifier with the reference's
   *                    boosting config (SURVEY §7.4 deviation note).
   * Balanced sample weights reproduce sklearn's
-  * compute_sample_weight('balanced') (train.py:89-91) as a groupBy-count
-  * + broadcast-join — set-oriented, no driver loop.
+  * compute_sample_weight('balanced') (train.py:89-91) from one collected
+  * per-class count (k ≤ 3 rows).
   */
 object Train {
 
@@ -35,15 +35,16 @@ object Train {
     .setOutputCol("features")
     .setHandleInvalid("skip")
 
-  /** n_samples / (n_classes * count_c) per class (A19/M5). */
+  /** n_samples / (n_classes * count_c) per class (A19/M5). One job
+    * collects the ≤k per-class counts; the weights enter the plan as a
+    * label → weight map literal, each `total / (k * n_c)` in doubles. */
   def withBalancedWeights(df: DataFrame): DataFrame = {
-    val counts = df.groupBy(col("label")).agg(count(lit(1)).as("_class_n"))
-    val total = df.count()
-    val nClasses = counts.count()
-    df.join(broadcast(counts), Seq("label"))
-      .withColumn("weight",
-        lit(total.toDouble) / (lit(nClasses.toDouble) * col("_class_n")))
-      .drop("_class_n")
+    val counts = df.groupBy(col("label")).count().collect()
+      .map(r => r.getDouble(0) -> r.getLong(1))
+    val total = counts.map(_._2).sum.toDouble
+    val k = counts.length.toDouble
+    val weights = counts.map { case (label, n) => label -> total / (k * n) }
+    df.withColumn("weight", element_at(typedLit(weights.toMap), col("label")))
   }
 
   def fit(train: DataFrame, numTrees: Int = 200, maxDepth: Int = 10,
@@ -135,19 +136,25 @@ object Train {
           .as("predicted_class"),
         FeatureEngineering.classOf(col("label")).as("actual_class"))
       .agg(count(lit(1)).as("n"))
-    Result(model, metricsOf(predictions), confusion, importances)
+    val metrics = metricsOf(predictions)
+    predictions.unpersist()
+    Result(model, metrics, confusion, importances)
   }
 
   /** The metric map for a frame already carrying (prediction, label):
-    * evaluator-derived accuracy + weighted P/R/F1, and exact macro
-    * averages from the collected confusion counts (k² rows of
-    * driver-side arithmetic; the per-label counting stays distributed). */
+    * evaluator-derived accuracy + weighted P/R/F1 from one
+    * `MulticlassMetrics` (the values `evaluate` returns per metric
+    * name), and exact macro averages from the collected confusion
+    * counts (k² rows of driver-side arithmetic; the per-label counting
+    * stays distributed). */
   def metricsOf(predictions: DataFrame): Map[String, Double] = {
-    val ev = new MulticlassClassificationEvaluator()
+    val m = new MulticlassClassificationEvaluator()
       .setLabelCol("label").setPredictionCol("prediction")
-    val weighted = Seq("accuracy", "f1", "weightedPrecision",
-      "weightedRecall").map(m =>
-      m -> ev.setMetricName(m).evaluate(predictions)).toMap
+      .getMetrics(predictions)
+    val weighted = Map("accuracy" -> m.accuracy,
+      "f1" -> m.weightedFMeasure,
+      "weightedPrecision" -> m.weightedPrecision,
+      "weightedRecall" -> m.weightedRecall)
     val counts = predictions
       .groupBy(col("prediction"), col("label"))
       .agg(count(lit(1)).as("n"))

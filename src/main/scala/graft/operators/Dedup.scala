@@ -90,26 +90,32 @@ object Dedup {
       org.apache.spark.sql.types.StringType,
       "corpusFingerprints.fingerprint must be StringType (the hex " +
         "form TextFns.fingerprint emits)")
-    val printed = batch.withColumn("fingerprint",
-      TextFns.fingerprint(col(textCol)))
-    // bloom over the PRE-dedup prints (identical distinct-key set, no
-    // window shuffle); sizing count on the raw batch unless supplied
-    val keyHash = xxhash64(col("fingerprint"))
-    val expected = math.max(expectedItems.getOrElse(batch.count()), 1L)
-    val bf = printed.stat.bloomFilter(keyHash, expected, fpp)
-    // within-batch dedup (min id per fingerprint survives)
-    val w = Window.partitionBy(col("fingerprint"))
-    val batchCanonical = printed
-      .withColumn("rk",
-        row_number().over(w.orderBy(col(idCol))))
-      .filter(col("rk") === 1).drop("rk")
-    val seen = corpusFingerprints
-      .filter(graft.plans.BloomFns.mightContain(
-        xxhash64(col("fingerprint")), bf))
-      .select(col("fingerprint"))
-    batchCanonical
-      .join(broadcast(seen), Seq("fingerprint"), "left_anti")
-      .select(batch.columns.map(col).toIndexedSeq: _*)
+    // sizing count on the raw batch unless supplied; an upper bound of
+    // zero is an empty batch, which has no survivors (and over zero rows
+    // stat.bloomFilter reads a null buffer and throws)
+    val expected = expectedItems.getOrElse(batch.count())
+    if (expected == 0) batch.limit(0)
+    else {
+      val printed = batch.withColumn("fingerprint",
+        TextFns.fingerprint(col(textCol)))
+      // bloom over the PRE-dedup prints (identical distinct-key set, no
+      // window shuffle)
+      val keyHash = xxhash64(col("fingerprint"))
+      val bf = printed.stat.bloomFilter(keyHash, expected, fpp)
+      // within-batch dedup (min id per fingerprint survives)
+      val w = Window.partitionBy(col("fingerprint"))
+      val batchCanonical = printed
+        .withColumn("rk",
+          row_number().over(w.orderBy(col(idCol))))
+        .filter(col("rk") === 1).drop("rk")
+      val seen = corpusFingerprints
+        .filter(graft.plans.BloomFns.mightContain(
+          xxhash64(col("fingerprint")), bf))
+        .select(col("fingerprint"))
+      batchCanonical
+        .join(broadcast(seen), Seq("fingerprint"), "left_anti")
+        .select(batch.columns.map(col).toIndexedSeq: _*)
+    }
   }
 
   /** MinHash signatures: `k` md5-seeded min-hashes over `n`-gram shingles.

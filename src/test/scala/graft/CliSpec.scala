@@ -121,6 +121,72 @@ class CliSpec extends SparkSuite {
     assert(!Files.exists(java.nio.file.Paths.get(s"$wh/models")))
   }
 
+  test("the staged feature frame trains and scores exactly like the " +
+    "lazy one: same metric map, same Predict rows (rf and gbt, AQE on)") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    import graft.ml.{ChronoSplit, Predict, Train}
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val src = "/root/testdata/sf0.001"
+    val scoring = Main.features(spark, src, forPrediction = true)
+    def labeled = Main.features(spark, src, forPrediction = false)
+    def rows(preds: DataFrame) = preds.orderBy(col("user_id")).collect().toSeq
+    def rf(labeled: DataFrame) = {
+      val (train, _, test) = ChronoSplit(labeled)
+      val (model, _) = Train.fit(train, numTrees = 20)
+      (Train.evaluate(model, test).metrics, rows(Predict(model, scoring, "rf")))
+    }
+    def gbt(labeled: DataFrame) = {
+      val (train, _, test) = ChronoSplit(labeled)
+      val (model, _) = Train.fitBoosted(train, maxIter = 3)
+      (Train.evaluateModel(model, test).metrics,
+        rows(Predict.withoutProbabilities(model, scoring, "gbt")))
+    }
+    assert(Main.withLocalCheckpoint(labeled)(rf) == rf(labeled))
+    assert(Main.withLocalCheckpoint(labeled, coalesce = false)(gbt) ==
+      gbt(labeled))
+  }
+
+  test("ml-train executes the feature plan (its window chain) exactly " +
+    "once and leaves no staged blocks or session settings behind") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def windowed(p: SparkPlan): Boolean = p match {
+      case a: AdaptiveSparkPlanExec => windowed(a.executedPlan)
+      case q: QueryStageExec => windowed(q.plan)
+      case _: WindowExec => true
+      case _ => (p.children ++ p.subqueries).exists(windowed)
+    }
+    Seq("rf", "gbt").foreach { model =>
+      val wh = Files.createTempDirectory(s"graft_wh_once_$model").toString
+      val executions = new AtomicInteger()
+      val listener = new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution,
+                               durationNs: Long): Unit =
+          if (windowed(qe.executedPlan)) executions.incrementAndGet()
+        override def onFailure(funcName: String, qe: QueryExecution,
+                               exception: Exception): Unit = ()
+      }
+      val persisted = spark.sparkContext.getPersistentRDDs.keySet
+      val coalescing = spark.conf.getOption(
+        "spark.sql.adaptive.coalescePartitions.enabled")
+      spark.listenerManager.register(listener)
+      try {
+        Main.run(spark, "ml-train", "/root/testdata/sf0.001", wh,
+          Map("model" -> model, "trees" -> "2"))
+        org.apache.spark.sql.graftbridge.ListenerDrain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      assert(executions.get == 1, s"--model $model")
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- persisted)
+        .isEmpty, s"--model $model")
+      assert(spark.conf.getOption(
+        "spark.sql.adaptive.coalescePartitions.enabled") == coalescing)
+    }
+  }
+
   test("csv export sink round-trips predictions (reference predict.py:209)") {
     val wh = Files.createTempDirectory("graft_csv").toString
     import spark.implicits._

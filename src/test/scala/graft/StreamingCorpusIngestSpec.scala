@@ -179,4 +179,43 @@ class StreamingCorpusIngestSpec extends SparkSuite {
       chained.fingerprints.as[String].collect().sorted.toSeq)
     assert(compact.sigIndex.count() == chained.sigIndex.count())
   }
+
+  test("a batch whose every document is filtered out before exact dedup " +
+    "lands zero survivors, in the batch job and in the stream, instead " +
+    "of failing the exact-dedup Bloom filter build") {
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    val evalSet = docs.filter(col("doc_id") < 20)
+    // every document of the batch is in the decontamination set
+    val batch = evalSet.filter(col("doc_id") < 10)
+
+    val empty = IncrementalIngestJob.State(
+      Seq.empty[String].toDF("fingerprint"),
+      graft.operators.Dedup.minhashSignatures(
+        Seq.empty[(Long, String)].toDF("doc_id", "text")),
+      simhashPrints = Some(Seq.empty[(Long, Long)].toDF("doc_id", "simhash")))
+    val (survivors, next, ledger) =
+      IncrementalIngestJob.run(empty, batch, evalSet)
+    assert(ledger.toMap.apply("decontaminated") == 0, ledger)
+    assert(survivors.count() == 0)
+    assert(next.fingerprints.count() == 0 && next.sigIndex.count() == 0 &&
+      next.simhashPrints.get.count() == 0)
+    survivors.unpersist()
+
+    val srcDir = Files.createTempDirectory("graft_sciem_src")
+    val tmp = Files.createTempDirectory("graft_sciem_half").toString
+    batch.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    Files.copy(part.toPath, srcDir.resolve("day0.parquet"))
+    val target = Files.createTempDirectory("graft_sciem_tgt").toString
+    val state = Files.createTempDirectory("graft_sciem_st").toString
+    val cp = Files.createTempDirectory("graft_sciem_cp").toString
+    StreamingCorpusIngest.ingest(spark, srcDir.toString, target, state, cp,
+      evalSet, maxFilesPerTrigger = Some(1), withSimhash = true)
+      .awaitTermination()
+    assert(StreamingCorpusIngest.readCorpus(spark, target).count() == 0)
+    val st0 = IncrementalIngestJob.loadState(spark, s"$state/delta_0")
+    assert(st0.fingerprints.count() == 0 &&
+      st0.simhashPrints.exists(_.count() == 0))
+  }
 }
