@@ -11,6 +11,13 @@ object SparkSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    // Plan strings (AQE posts one per re-plan, and the SQL status store
+    // keeps them) print every cached frame's plan inline wherever it is
+    // read. The incremental-ingest specs chain in-memory states whose
+    // stage caches nest, so the string doubles per stage and reached
+    // 400M characters, enough to exhaust the heap. Spec plans stay
+    // under 12k characters, far below this bound.
+    .config("spark.sql.maxPlanStringLength", "1000000")
     .getOrCreate()
 }
 
