@@ -55,28 +55,18 @@ object Bench {
       sizeOf(new java.io.File(s"$sfDir/$n.parquet"))).sum
     val defaultParts = math.min(cpus.toLong,
       math.max(4L, dataBytes / (16L << 20))).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_PARTS", defaultParts))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt,
+      "spark.sql.shuffle.partitions" ->
+        sys.env.getOrElse("SPARK_GRAFT_PARTS", defaultParts),
+      "spark.sql.adaptive.enabled" ->
+        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"),
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64m")
     // untimed warm-up: JIT + codegen + filesystem metadata, so the first
     // timed query doesn't absorb session start-up cost
     spark.range(1000).selectExpr("sum(id)").write
       .format("noop").mode("overwrite").save()
-    Tables.names.foreach { n =>
-      try Tables.table(spark, sfDir, n).limit(1).write
-        .format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
+    Tables.warm(spark, sfDir)
     // hot-run timing: best of `runs` executions per query — steady-state
     // throughput with codegen compiled, matching how the DuckDB baseline
     // is measured (warm OS cache, compiled pipelines)
@@ -270,23 +260,7 @@ object Bench {
     try {
       val dir = sys.env.getOrElse("SPARK_GRAFT_SF128_DIR",
         "/tmp/graft_sf128")
-      val want = InflateFixtures.fingerprint(sfDir, 128, cpus)
-      val marker = new java.io.File(dir, InflateFixtures.FingerprintFile)
-      val complete = Tables.names.forall(n =>
-        new java.io.File(s"$dir/$n.parquet/_SUCCESS").exists()) &&
-        marker.exists() &&
-        java.nio.file.Files.readString(marker.toPath) == want
-      if (!complete) {
-        System.err.println(s"[bench128] materializing $dir (one-time)")
-        InflateFixtures.materialize(spark, sfDir, dir, mult = 128,
-          cpus = cpus)
-      }
-      spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
-      Tables.names.foreach { n =>
-        try Tables.table(spark, dir, n).limit(1).write
-          .format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-      }
+      val want = InflateFixtures.ensure(spark, sfDir, dir, 128, cpus)
       val runs128 = sys.env.getOrElse("SPARK_GRAFT_BENCH128_RUNS", "2").toInt
       val (results, errors) =
         timeQueriesRuns(spark, dir, runs128, headline)
@@ -315,9 +289,8 @@ object Bench {
     * inflation; later sessions re-register the persisted locations
     * via [[operators.Bucketing.ensureExternalBucketed]]). None on any
     * failure — this extra never fails the leg. */
-  private[graft] def q06Bucketed(spark: SparkSession, cpus: Int,
-                                 dir: String, fingerprint: String,
-                                 runs: Int)
+  private def q06Bucketed(spark: SparkSession, cpus: Int, dir: String,
+                          fingerprint: String, runs: Int)
       : Option[Double] =
     try {
       import org.apache.spark.sql.functions._
@@ -351,7 +324,7 @@ object Bench {
   /** A loud in-JSON marker for any failed query run — an executor error
     * buried in the stderr tail once let a stalled sample pass as a real
     * measurement. Empty → omitted. */
-  private def errJson(errors: Seq[String]): String =
+  private[graft] def errJson(errors: Seq[String]): String =
     if (errors.isEmpty) ""
     else errors.map(JsonUtil.quote).mkString(""","errors":[""", ",", "]")
 
@@ -387,20 +360,11 @@ object Bench {
 
   /** Warm best-of-`runs` wall time per named query (noop-format
     * materialization, same discipline as the headline leg) — shared
-    * with [[Crossover]]. Returns min-of-runs per query PLUS every
-    * individual run time: `min` over one sampling window cannot
-    * reject a systemically contended interval (the r8/r10 bench32
-    * samples), so the artifact carries the raw runs and a contended
-    * window is diagnosable from the record itself. */
-  private[graft] def timeQueries(spark: SparkSession, sfDir: String,
-                                 runs: Int, names: Seq[String])
-      : (Seq[(String, Double)], Seq[String]) =
-    timeQueriesRuns(spark, sfDir, runs, names) match {
-      case (perRun, errors) =>
-        (perRun.map { case (k, ts) => k -> ts.min }, errors)
-    }
-
-  /** [[timeQueries]] with the full per-run samples. */
+    * with `Dev crossover`. Returns every individual run time per
+    * query: `min` over one sampling window cannot reject a
+    * systemically contended interval (the r8/r10 bench32 samples), so
+    * the artifact carries the raw runs and a contended window is
+    * diagnosable from the record itself. */
   private[graft] def timeQueriesRuns(spark: SparkSession, sfDir: String,
                                      runs: Int, names: Seq[String])
       : (Seq[(String, Seq[Double])], Seq[String]) = {
@@ -497,29 +461,8 @@ object Bench {
       val dir = sys.env.getOrElse("SPARK_GRAFT_SF32_DIR", "/tmp/graft_sf32")
       // inflate from the SAME fixture the main leg measures — a
       // hardcoded source would attach a bench32 object computed on
-      // unrelated data to a JSON line whose "sf" names this one. The
-      // fingerprint check re-materializes when the source, multiplier,
-      // layout, or key-shift scheme changed, not only when files are
-      // missing — _SUCCESS-existence alone reuses stale caches built by
-      // older code.
-      val want = InflateFixtures.fingerprint(sfDir, 32, cpus)
-      val marker = new java.io.File(dir, InflateFixtures.FingerprintFile)
-      val complete = Tables.names.forall(n =>
-        new java.io.File(s"$dir/$n.parquet/_SUCCESS").exists()) &&
-        marker.exists() &&
-        java.nio.file.Files.readString(marker.toPath) == want
-      if (!complete) {
-        System.err.println(s"[bench32] materializing $dir (one-time)")
-        InflateFixtures.materialize(spark, sfDir, dir, mult = 32,
-          cpus = cpus)
-      }
-      // measured shape at 32× (BASELINE.md): shuffle partitions = cores
-      spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
-      Tables.names.foreach { n =>
-        try Tables.table(spark, dir, n).limit(1).write
-          .format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-      }
+      // unrelated data to a JSON line whose "sf" names this one
+      InflateFixtures.ensure(spark, sfDir, dir, 32, cpus)
       // warm best-of-3 by default — the SAME discipline as the headline
       // leg. A single cold sample on a shared microVM swung this leg's
       // ratio 2.85× → 6.30× across two rounds with ZERO source changes;
@@ -527,7 +470,8 @@ object Bench {
       val runs32 = sys.env.getOrElse("SPARK_GRAFT_BENCH32_RUNS", "3").toInt
       val (results, errors32) = timeQueriesRuns(spark, dir, runs32,
         headline)
-      Some((results, duckdbTimes(dir, runs32), runs32, errors32, dir))
+      Some((results, duckdbTimesFor(dir, runs32, headline), runs32,
+        errors32, dir))
     } catch {
       // Throwable, not NonFatal: the sf-dir results measured minutes
       // earlier print only after this OPTIONAL leg, so even a
@@ -539,10 +483,6 @@ object Bench {
         None
     }
   }
-
-  private def duckdbTimes(dir: String, runs: Int)
-      : Option[(Double, Map[String, Double])] =
-    duckdbTimesFor(dir, runs, headline)
 
   /** DuckDB side of the 32× ratio via tools/duck_bench.py (driver-side
     * python; the library itself never depends on it): (total, per-query

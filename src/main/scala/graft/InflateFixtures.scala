@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev main: materialize key-shifted N× copies of the fixture tables as
+/** Materialize key-shifted N× copies of the fixture tables as
   * MULTI-ROW-GROUP, multi-file parquet — the amortized-scale bench input.
   *
   * The driver fixtures are single-row-group files, so a Spark scan of
@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * parallelizes, so the comparison measures per-row throughput, not
   * session constants.
   *
-  *   SPARK_GRAFT_SCALE=32 sbt 'runMain graft.InflateFixtures /tmp/graft_sf32'
+  *   SPARK_GRAFT_SCALE=32 sbt 'runMain graft.Dev inflate /tmp/graft_sf32'
   *
   * Foreign keys shift consistently with their referenced primary keys
   * (orders.o_custkey moves with customer.c_custkey, lineitem.l_suppkey
@@ -38,8 +38,11 @@ object InflateFixtures {
     "documents" -> Map("doc_id" -> 1000000L),
     "embeddings" -> Map("vec_id" -> 1000000L))
 
-  def inflate(spark: SparkSession, df: DataFrame,
-              shifts: Map[String, Long], mult: Int): DataFrame = {
+  /** `mult` key-shifted copies of `df`, shifting the key columns of
+    * fixture table `table` per [[keyShifts]]. */
+  def inflate(spark: SparkSession, df: DataFrame, table: String,
+              mult: Int): DataFrame = {
+    val shifts = keyShifts.getOrElse(table, Map.empty[String, Long])
     val copies = spark.range(mult).select(col("id").as("_copy"))
     df.crossJoin(copies)
       .select(df.columns.map { c =>
@@ -53,7 +56,7 @@ object InflateFixtures {
 
   /** What an inflated fixture dir was built from. Written to
     * [[FingerprintFile]] at materialize time and compared by reusers
-    * (Bench's bench32 leg): a _SUCCESS-only completeness check silently
+    * ([[ensure]]): a _SUCCESS-only completeness check silently
     * reuses a stale cache after the source dir, multiplier, layout, or
     * the key-shift scheme changes — cross-round bench ratios would then
     * compare different inputs while claiming the same leg. */
@@ -66,10 +69,10 @@ object InflateFixtures {
 
   val FingerprintFile = "_GRAFT_FINGERPRINT"
 
-  /** Write all inflated tables under `outDir` — callable from a host
-    * session (Bench's bench32 leg) as well as from [[main]]. The
-    * fingerprint marker is written LAST, so a run that dies mid-write
-    * leaves a cache that reads as incomplete, never as current. */
+  /** Write all inflated tables under `outDir` — from [[ensure]] or
+    * `Dev inflate`. The fingerprint marker is written LAST, so a run
+    * that dies mid-write leaves a cache that reads as incomplete, never
+    * as current. */
   def materialize(spark: SparkSession, sfDir: String, outDir: String,
                   mult: Int, cpus: Int): Unit = {
     val marker = new java.io.File(outDir, FingerprintFile)
@@ -78,7 +81,7 @@ object InflateFixtures {
       val base = Tables.table(spark, sfDir, name)
       val out =
         if (name == "region" || name == "nation") base // dims stay 1×
-        else inflate(spark, base, keyShifts.getOrElse(name, Map.empty), mult)
+        else inflate(spark, base, name, mult)
       val files = if (name == "region" || name == "nation") 1 else cpus
       out.repartition(files)
         .write.mode("overwrite")
@@ -92,20 +95,26 @@ object InflateFixtures {
       fingerprint(sfDir, mult, cpus))
   }
 
-  def main(args: Array[String]): Unit = {
-    val outDir = args.headOption.getOrElse("/tmp/graft_sf32")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-      "/root/testdata/sf0.1")
-    val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE", "32").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    materialize(spark, sfDir, outDir, mult, cpus)
-    spark.stop()
+  /** Reuse the inflation under `dir` when its fingerprint matches
+    * (sfDir, mult, cpus), materialize it otherwise, then set shuffle
+    * partitions = cpus (the measured shape on the inflated fixtures)
+    * and warm every table. Returns the fingerprint, which keys caches
+    * derived from this inflation (Bench's bucketed q06 tables). */
+  def ensure(spark: SparkSession, sfDir: String, dir: String, mult: Int,
+             cpus: Int): String = {
+    val want = fingerprint(sfDir, mult, cpus)
+    val marker = new java.io.File(dir, FingerprintFile)
+    val complete = Tables.names.forall(n =>
+      new java.io.File(s"$dir/$n.parquet/_SUCCESS").exists()) &&
+      marker.exists() &&
+      java.nio.file.Files.readString(marker.toPath) == want
+    if (!complete) {
+      System.err.println(
+        s"[inflate] materializing $dir at ${mult}x (one-time)")
+      materialize(spark, sfDir, dir, mult, cpus)
+    }
+    spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
+    Tables.warm(spark, dir)
+    want
   }
 }

@@ -2,54 +2,28 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Dev.time
+import graft.functions.MediaCodecs
 import graft.jobs.DailyEtlJob
-import graft.operators.{Dedup, Enrichment, EventSeries, Similarity}
+import graft.operators.{Dedup, Enrichment, EventSeries, Multimodal, Similarity}
 
-/** Dev main: inflate the sf0.1 fixtures N× (shifting keys so cardinality
-  * grows with volume, as it would in production) and time the heavy
-  * pipelines — a local check that plan shapes scale linearly in rows and
-  * keys rather than hitting a super-linear wall.
+/** `Dev scale`: inflate the sf0.1 fixtures N× (shifting keys so
+  * cardinality grows with volume, as it would in production) and time
+  * the heavy pipelines — a local check that plan shapes scale linearly
+  * in rows and keys rather than hitting a super-linear wall.
   *
-  *   SPARK_GRAFT_SCALE=32 sbt 'runMain graft.ScaleCheck'
+  *   SPARK_GRAFT_SCALE=32 sbt 'runMain graft.Dev scale'
   */
-object ScaleCheck {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-      "/root/testdata/sf0.1")
-    val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE", "32").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def inflate(df: DataFrame, keyCol: String, idCols: Seq[String],
-                m: Int): DataFrame =
-      df.crossJoin(spark.range(m).select(col("id").as("_copy")))
-        .withColumn(keyCol, col(keyCol) + col("_copy") * 1000000L)
-        .select((df.columns.map {
-          case c if idCols.contains(c) =>
-            (col(c) + col("_copy") * 1000000000L).as(c)
-          case c => col(c)
-        }).toIndexedSeq: _*)
-
-    def time[T](name: String, rows: Long)(f: => T): Unit = {
-      val t0 = System.nanoTime()
-      f
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"[scale] $name%-28s ${rows}%12d rows  $dt%7.2f s  " +
-        f"${rows / dt / 1e6}%6.2f M rows/s")
-    }
+private[graft] object ScaleCheck {
+  def run(spark: SparkSession, sfDir: String, mult: Int,
+          cpus: Int): Unit = {
+    import spark.implicits._
+    def inflated(table: String): DataFrame = InflateFixtures.inflate(
+      spark, Tables.table(spark, sfDir, table), table, mult)
     def sink(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
-    val events = inflate(Tables.events(spark, sfDir), "user_id",
-      Seq("event_id"), mult).cache()
+    val events = inflated("events").cache()
     val n = events.count()
 
     time("daily_bars", n) { sink(EventSeries.dailyBars(events)) }
@@ -183,8 +157,8 @@ object ScaleCheck {
     try {
       val slim = events.select(col("event_id"), col("user_id"), col("value"))
       Writes.writeSortedLayout(slim, s"$layoutBase/sorted",
-        Seq("event_id"), partitions = cpus.toInt * 2)
-      slim.repartition(cpus.toInt * 2).write
+        Seq("event_id"), partitions = cpus * 2)
+      slim.repartition(cpus * 2).write
         .mode("overwrite").parquet(s"$layoutBase/plain")
       def rangeScan(dir: String): Unit =
         sink(spark.read.parquet(dir)
@@ -194,7 +168,7 @@ object ScaleCheck {
       // 2-d: a box predicate over the Z-ordered layout prunes both
       // dimensions; the hash layout and the 1-d sort cannot
       Writes.writeZOrderLayout(slim, s"$layoutBase/zorder",
-        "user_id", "value", partitions = cpus.toInt * 2)
+        "user_id", "value", partitions = cpus * 2)
       def boxScan(dir: String): Unit =
         sink(spark.read.parquet(dir)
           .filter(col("user_id").between(100L, 200L) &&
@@ -205,8 +179,7 @@ object ScaleCheck {
       new java.io.File(layoutBase))
     events.unpersist()
 
-    val emb = inflate(Tables.embeddings(spark, sfDir), "vec_id",
-      Seq(), mult).cache()
+    val emb = inflated("embeddings").cache()
     val ne = emb.count()
     time("knn_bruteforce_top10", ne) {
       sink(Similarity.bruteForceTopK(emb,
@@ -374,8 +347,7 @@ object ScaleCheck {
     }
     emb.unpersist()
 
-    val docs = inflate(Tables.documents(spark, sfDir), "doc_id",
-      Seq(), mult).cache()
+    val docs = inflated("documents").cache()
     val nd = docs.count()
     time("minhash_signatures", nd) {
       sink(Dedup.minhashSignatures(docs, k = 8, n = 2))
@@ -464,9 +436,6 @@ object ScaleCheck {
     // cap binding (constant-gradient fixtures collide by design — the
     // cap is what keeps the bucket join linear; siblings still pair)
     time("image_phash_pairs_capped", nd) {
-      import spark.implicits._
-      import graft.functions.MediaCodecs
-      import graft.operators.Multimodal
       val media = docs.select(col("doc_id")).as[Long]
         .mapPartitions(_.map { id =>
           val base = id / 2
@@ -485,9 +454,6 @@ object ScaleCheck {
     // audio DSP at volume: decode + integer activity + FFT spectral,
     // both pure maps
     time("audio_activity_spectral", nd) {
-      import spark.implicits._
-      import graft.functions.MediaCodecs
-      import graft.operators.Multimodal
       val media = docs.select(col("doc_id")).as[Long]
         .mapPartitions(_.map { id =>
           val n = (256 + id % 64).toInt
@@ -509,9 +475,6 @@ object ScaleCheck {
     // (Formula channels cycle mod 256, so palette frames always fit
     // the 256-entry PLTE regardless of raster size.)
     time("png_color_roundtrip", nd) {
-      import spark.implicits._
-      import graft.functions.MediaCodecs
-      import graft.operators.Multimodal
       val media = docs.select(col("doc_id")).as[Long]
         .mapPartitions(_.map { id =>
           val ct = (id % 3) match { case 0 => 2; case 1 => 3; case _ => 6 }
@@ -642,8 +605,7 @@ object ScaleCheck {
     // exact-disc quantile patterns, and the embedding-space audits
     // (bounded-cluster fan-outs vs all-pairs probes)
     locally {
-      val ev5 = inflate(Tables.events(spark, sfDir), "user_id",
-        Seq("event_id"), mult).cache()
+      val ev5 = inflated("events").cache()
       val n5 = ev5.count()
       val bars5 = EventSeries.dailyBars(ev5)
       val staged5 = EventSeries.stgDailyPrices(bars5)
@@ -691,8 +653,7 @@ object ScaleCheck {
       time("calendar_gaps", n5) { sink(EventSeries.calendarGaps(ev5)) }
       ev5.unpersist()
 
-      val emb5 = inflate(Tables.embeddings(spark, sfDir), "vec_id",
-        Seq(), mult).cache()
+      val emb5 = inflated("embeddings").cache()
       val ne5 = emb5.count()
       // bounded-cluster fan-out (points × dims × 10 labels) — linear
       time("silhouette_centroid", ne5) {
@@ -706,8 +667,7 @@ object ScaleCheck {
       }
       emb5.unpersist()
 
-      val docs5 = inflate(Tables.documents(spark, sfDir), "doc_id",
-        Seq(), mult).cache()
+      val docs5 = inflated("documents").cache()
       val nd5 = docs5.count()
       time("vocab_richness", nd5) {
         sink(graft.operators.Relevance.vocabRichness(docs5))
@@ -728,6 +688,5 @@ object ScaleCheck {
       }
       docs5.unpersist()
     }
-    spark.stop()
   }
 }

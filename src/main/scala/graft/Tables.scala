@@ -26,6 +26,17 @@ object Tables {
       case other    => read(spark, dir, other)
     }
 
+  /** Untimed warm-up before a timed leg: a one-row noop read of every
+    * table compiles the scan paths and loads file metadata, so the
+    * first timed query doesn't absorb it. A table that fails to read
+    * is skipped here and reported by the query that needs it. */
+  def warm(spark: SparkSession, dir: String): Unit =
+    names.foreach { n =>
+      try table(spark, dir, n).limit(1).write
+        .format("noop").mode("overwrite").save()
+      catch { case _: Throwable => () }
+    }
+
   /** SQL-first entry point: register every fixture table as a temp view
     * (normalizations included), so `spark.sql("SELECT ... FROM
     * lineitem")` works directly — pair with GraftExtensions for the
@@ -92,11 +103,12 @@ object Tables {
     * scan no matter how many cores the session has, serializing any
     * expensive per-row kernel above it (the sf0.1 fixtures are exactly
     * this shape — q33's MinHash kernel measured 0.92 s single-task vs
-    * 0.62 s repartitioned, graft.AbR12). Round-robin repartition to
-    * session parallelism ONLY when the scan's split count cannot feed
-    * half the cores; any real-scale input (and the inflated bench legs,
-    * ≥cpus files) splits fine and passes through untouched, so this
-    * never adds a shuffle where the layout already parallelizes.
+    * 0.62 s repartitioned, OPTIMIZATION_r12.md). Round-robin
+    * repartition to session parallelism ONLY when the scan's split
+    * count cannot feed half the cores; any real-scale input (and the
+    * inflated bench legs, ≥cpus files) splits fine and passes through
+    * untouched, so this never adds a shuffle where the layout already
+    * parallelizes.
     * Deterministic: Spark's sort-before-repartition (on by default)
     * makes the round-robin assignment stable under task retries. */
   def parallelized(s: SparkSession, df: DataFrame): DataFrame = {

@@ -30,13 +30,7 @@ object Main {
       .collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
     val eventsDir = opts.getOrElse("events-dir", "/root/testdata/sf0.001")
     val warehouse = opts.getOrElse("warehouse", "/tmp/graft_warehouse")
-    val spark = SparkSession.builder()
-      .master(s"local[${opts.getOrElse("cpus", "8")}]")
-      .config("spark.sql.shuffle.partitions", opts.getOrElse("cpus", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(opts.getOrElse("cpus", "8").toInt)
     try runWithAlerts(spark, verb, eventsDir, warehouse, opts,
       new graft.alerts.WebhookSender.Http(),
       graft.alerts.Alerts.Config.fromEnv())

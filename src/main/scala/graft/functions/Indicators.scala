@@ -35,30 +35,18 @@ object Indicators {
     * delta = diff(close); gain/loss = clamped positive/negative parts;
     * rolling means use the pandas DEFAULT min_periods=period, so the
     * first `period-1` rows (0-based) are null and the first valid RSI is
-    * at row index period-1 — exactly pandas. Note the reference's
-    * `delta.where(delta > 0, 0)` CLAMPS the NaN first diff to 0 (NaN > 0
-    * is False in pandas), so `otherwise(0.0)` here is parity, not a
-    * deviation; the rolling count therefore includes the first row.
-    * Pinned against a precomputed pandas vector in IndicatorsSpec.
-    * pandas yields RSI=100 when avg_loss==0 (gain/0 → inf →
-    * 100-100/(1+inf)); we make that explicit instead of relying on
-    * float inf. */
-  def rsi(close: Column, w: WindowSpec, period: Int = 14): Column = {
-    val delta = diff(close, w)
-    val gain = when(delta > 0, delta).otherwise(0.0)
-    val loss = when(delta < 0, -delta).otherwise(0.0)
-    val avgGain = rollingMean(gain, period, period, w)
-    val avgLoss = rollingMean(loss, period, period, w)
-    val rsiVal = when(avgLoss === 0, 100.0)
-      .otherwise(lit(100.0) - lit(100.0) / (lit(1.0) + avgGain / avgLoss))
-    round(rsiVal, 4)
-  }
-
-  /** [[rsi]] with the window aggregates STAGED as intermediate columns
+    * at row index period-1 — exactly pandas. The reference's
+    * `delta.where(delta > 0, 0)` CLAMPS the NaN first diff to 0, so the
+    * rolling count includes the first row. avg_loss == 0 reads 100
+    * explicitly (pandas: gain/0 → inf → 100-100/(1+inf)).
+    *
+    * The window aggregates are STAGED as intermediate columns
     * (optimization round 12, guide §1.2 step 2 / §7.2): Catalyst's
     * ExtractWindowExpressions extracts one window expression PER TEXTUAL
-    * OCCURRENCE — the pure-Column [[rsi]] formula references avgLoss
-    * twice and each rollingMean embeds its own count gate, so its
+    * OCCURRENCE — the pure-Column formula (kept in test scope as
+    * `IndicatorColumnForms.rsi`, the equivalence reference and the
+    * pandas-vector pin in IndicatorsSpec) references avgLoss twice and
+    * each rollingMean embeds its own count gate, so its
     * physical Window operator evaluates SIX sliding-frame aggregates
     * (count/avg of loss twice, count/avg of gain) plus FOUR identical
     * lag(close) columns, and Spark's SlidingWindowFunctionFrame
@@ -68,9 +56,10 @@ object Indicators {
     * the count gates collapse to row_number because gain/loss are
     * never null BY CONSTRUCTION (`when(...).otherwise(0.0)` is non-null
     * even for a null delta), so count(gain) over a trailing(period)
-    * frame ≡ min(row_number, period). Identical values to [[rsi]] (same
-    * arithmetic on the same aggregates — equivalence spec-pinned in
-    * IndicatorsSpec); measured ~6→3 window expressions on q15's plan. */
+    * frame ≡ min(row_number, period). Identical values to the Column
+    * form (same arithmetic on the same aggregates — equivalence
+    * spec-pinned in IndicatorsSpec); measured ~6→3 window expressions
+    * on q15's plan. */
   def rsiStaged(df: DataFrame, close: Column, w: WindowSpec,
                 period: Int = 14, out: String = "rsi"): DataFrame = {
     val f = trailing(w, period)
@@ -106,16 +95,9 @@ object Indicators {
 
   /** Bollinger band width(period, k σ): `(upper-lower)/sma*100`
     * (reference: ml/feature_engineering.py:54-63). sma/std use pandas
-    * default min_periods=period. */
-  def bollingerWidth(close: Column, w: WindowSpec, period: Int = 20,
-                     numStd: Double = 2.0): Column = {
-    val sma = rollingMean(close, period, period, w)
-    val std = rollingStd(close, period, period, w)
-    round((lit(2 * numStd) * std) / nullif(sma, lit(0)) * 100, 4)
-  }
-
-  /** [[bollingerWidth]] with the window aggregates staged as columns
-    * (same rationale as [[rsiStaged]]): the pure-Column form embeds a
+    * default min_periods=period. The window aggregates are staged as
+    * columns (same rationale as [[rsiStaged]]): the pure-Column form
+    * (test scope, `IndicatorColumnForms.bollingerWidth`) embeds a
     * count(close) gate in BOTH rollingMean and rollingStd, so the
     * Window operator evaluates four sliding aggregates where three are
     * distinct. The count gate stays a real count (close CAN be null in
@@ -172,22 +154,14 @@ object Indicators {
     * − min low) · 100` over the trailing `period` rows, pandas-default
     * min_periods=period warm-up nulls, flat-range (hi == lo) → null via
     * NULLIF — the indicator family's next rung after RSI/ATR/Bollinger
-    * (same rolling-frame shape, SURVEY §2.5 W8-W10). */
-  def stochasticK(high: Column, low: Column, close: Column,
-                  w: WindowSpec, period: Int = 14): Column = {
-    val f = trailing(w, period)
-    val gate = count(low).over(f) >= period
-    val lo = when(gate, min(low).over(f))
-    val hi = when(gate, max(high).over(f))
-    round((close - lo) / nullif(hi - lo, lit(0)) * 100, 4)
-  }
-
-  /** [[stochasticK]] with each distinct window aggregate staged ONCE
-    * as an intermediate column (the r12 rsiStaged discipline): window
-    * expressions extract per textual occurrence, so the Column form
-    * plans duplicate sliding aggregates (q147 before-plan: 6 window
-    * exprs for %K where three suffice — NULLIF and the gate each
-    * re-reference their argument).
+    * (same rolling-frame shape, SURVEY §2.5 W8-W10).
+    *
+    * Each distinct window aggregate is staged ONCE as an intermediate
+    * column (the r12 rsiStaged discipline): window expressions extract
+    * per textual occurrence, so the Column form (test scope,
+    * `IndicatorColumnForms.stochasticK`) plans duplicate sliding
+    * aggregates (q147 before-plan: 6 window exprs for %K where three
+    * suffice — NULLIF and the gate each re-reference their argument).
     * Values are bit-identical (same arithmetic over the staged
     * columns; pinned in R13FusedSpec). */
   def stochasticKStaged(df: DataFrame, high: Column, low: Column,
@@ -233,21 +207,13 @@ object Indicators {
     * · −100` over the trailing `period` rows INCLUDING the current row
     * (the classic lookback), pandas-default min_periods=period warm-up
     * nulls, flat range → null via NULLIF. The bounded-[−100,0] mirror
-    * of stochastic %K. */
-  def williamsR(high: Column, low: Column, close: Column,
-                w: WindowSpec, period: Int = 14): Column = {
-    val f = trailing(w, period)
-    val gate = count(high).over(f) >= period
-    val hi = when(gate, max(high).over(f))
-    val lo = when(gate, min(low).over(f))
-    round((hi - close) / nullif(hi - lo, lit(0)) * -100, 4)
-  }
-
-  /** [[williamsR]] with each distinct window aggregate staged ONCE
-    * (the r12 rsiStaged discipline — see [[stochasticKStaged]]): the
-    * Column form planned count ×3 / max ×2 / min ×1 (q167
-    * before-plan) where three aggregates suffice. Values
-    * bit-identical (pinned in R13FusedSpec). */
+    * of stochastic %K.
+    *
+    * Each distinct window aggregate is staged ONCE (the r12 rsiStaged
+    * discipline — see [[stochasticKStaged]]): the Column form (test
+    * scope, `IndicatorColumnForms.williamsR`) planned count ×3 / max
+    * ×2 / min ×1 (q167 before-plan) where three aggregates suffice.
+    * Values bit-identical (pinned in R13FusedSpec). */
   def williamsRStaged(df: DataFrame, high: Column, low: Column,
                       close: Column, w: WindowSpec, period: Int = 14,
                       out: String = "wr"): DataFrame = {
@@ -377,7 +343,7 @@ object Indicators {
   }
 
   /** Directional movement system (Wilder's ADX, rolling-sum form —
-    * the same simple-rolling variant [[rsi]] adopts from the
+    * the same simple-rolling variant [[rsiStaged]] adopts from the
     * reference's pandas code): `+DM/−DM` from consecutive extremes,
     * `DI± = 100·ΣDM±/ΣTR`, `DX = 100·|DI₊−DI₋|/(DI₊+DI₋)`, ADX its
     * rolling mean. Returns (di_plus, di_minus, adx) columns. */

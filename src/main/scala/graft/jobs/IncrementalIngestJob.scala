@@ -124,7 +124,8 @@ object IncrementalIngestJob {
     * multi-path parquet scan; optional side tables union over the
     * dirs that have them (None when none do); centroids — a fixed
     * k-row array, not append-only — come from the LATEST dir carrying
-    * them. Equivalent to loadState(dir) when `dirs` has one element. */
+    * them. Every table must have the same schema in every dir that
+    * has it. Equivalent to loadState(dir) when `dirs` has one element. */
   def loadStateUnion(spark: org.apache.spark.sql.SparkSession,
                      dirs: Seq[String]): State = {
     require(dirs.nonEmpty, "need at least one state dir")
@@ -133,9 +134,22 @@ object IncrementalIngestJob {
     def present(sub: String): Seq[String] = dirs
       .map(d => s"$d/$sub")
       .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+    // a multi-path scan reads every path under ONE schema: a dir saved
+    // with a different layout (another minhashK → other sig_* columns)
+    // would read as nulls instead of failing
     def union(sub: String): Option[org.apache.spark.sql.DataFrame] = {
       val ps = present(sub)
-      if (ps.isEmpty) None else Some(spark.read.parquet(ps: _*))
+      if (ps.isEmpty) None
+      else {
+        val schema = spark.read.parquet(ps.head).schema
+        ps.tail.foreach { p =>
+          val other = spark.read.parquet(p).schema
+          require(other == schema, s"state table $sub has schema " +
+            s"${other.simpleString} in $p but ${schema.simpleString} " +
+            s"in ${ps.head}")
+        }
+        Some(spark.read.schema(schema).parquet(ps: _*))
+      }
     }
     val centroids = present("centroids").lastOption.map(p =>
       spark.read.parquet(p).collect()

@@ -17,8 +17,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * comfortable working set (128–512 MB); both sides need the same
   * bucket count (or a divisor) for co-location.
   *
-  * Measured (round-9 A/B, graft.AbBucket, q06's orders⋈customer at
-  * the 128× inflation, warm best-of-3): co-bucketed SMJ 1.69 s and
+  * Measured (BASELINE.md round 9, "q06 layout A/B": q06's
+  * orders⋈customer at the 128× inflation, warm best-of-3):
+  * co-bucketed SMJ 1.69 s and
   * bucketed scan + broadcast 1.49 s vs 1.97–2.21 s for the same join
   * over flat parquet — ~25% from layout alone on a single join, on
   * top of removing the per-join shuffle that dominates when the key
@@ -54,8 +55,8 @@ object Bucketing {
     * next to the data); later sessions RE-REGISTER the persisted
     * location (CREATE TABLE ... CLUSTERED BY ... LOCATION) instead of
     * rewriting — a fresh JVM's in-memory catalog forgets table names,
-    * not data (the AbBucket lesson: an existence check against the
-    * in-memory catalog is dead code across JVMs). `df` is by-name so
+    * not data (the round-9 layout A/B's lesson: an existence check
+    * against the in-memory catalog is dead code across JVMs). `df` is by-name so
     * the cached path never constructs the source plan. */
   def ensureExternalBucketed(spark: SparkSession, df: => DataFrame,
                              table: String, key: String, buckets: Int,

@@ -107,8 +107,8 @@ object EventSeries {
       .agg(count(lit(1)).as("n"))
     // r12 optimization note: a single-hash-agg top-1 via
     // min_by(struct(type,n), struct(-n,type)) was A/B'd against this
-    // row_number form (graft.AbR12) — identical output, −8% at sf0.1
-    // but consistently +5-16% SLOWER at 128× in two samples (the
+    // row_number form (OPTIMIZATION_r12.md) — identical output, −8% at
+    // sf0.1 but consistently +5-16% SLOWER at 128× in two samples (the
     // struct-valued min_by buffer falls off the primitive fast path,
     // while this form's WindowGroupLimit partial prunes to ≤1 row per
     // key per partition BELOW the exchange). Scale wins: kept as-is.
@@ -165,7 +165,8 @@ object EventSeries {
     * with the merge), the dominant-type top-1 is a row_number in the
     * SAME partitioning, and the join disappears. Value-identical to
     * the two-scan form (R13FusedSpec pins ties, single-event days,
-    * cross-type open/close; oracle re-proved). 128× A/B (AbR13, two
+    * cross-type open/close; oracle re-proved). 128× A/B
+    * (OPTIMIZATION_r13.md item 2, two
     * fresh-JVM samples): 8.41→4.52 / 8.00→4.07 s; sf0.1 1.33→1.20 s.
     * [[dailySentiment]] stays for its standalone callers. */
   def fctPricesWithSentiment(events: DataFrame): DataFrame = {

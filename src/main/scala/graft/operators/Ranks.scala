@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, NumericType, TimestampType}
 
 /** Scale-safe replacements for unpartitioned (single-task) analytic
   * windows — the r13 burn-down of `WindowExec: No Partition Defined`
@@ -37,11 +38,12 @@ import org.apache.spark.sql.functions._
   * (the multiset of outputs is invariant within a tie run — equal
   * keys always share a bucket).
   *
-  * The first `order` column must be numeric (castable to double —
-  * every current caller orders on counts, micro-unit longs or double
-  * scores); the cast is only used for BUCKETING and is monotone, so
-  * ties introduced by the cast stay within one bucket and the exact
-  * within-bucket sort still uses the original columns.
+  * The first `order` column must be numeric, date or timestamp (every
+  * current caller orders on counts, micro-unit longs or double scores;
+  * anything else is rejected). Its double image is only used for
+  * BUCKETING and is monotone, so ties introduced by the cast stay
+  * within one bucket and the exact within-bucket sort still uses the
+  * original columns.
   */
 object Ranks {
 
@@ -52,7 +54,18 @@ object Ranks {
                          parallelism: Int): Column = {
     val (key, asc, nullsFirst) =
       org.apache.spark.sql.graftbridge.Bridge.sortOrderOf(order.head)
-    val k = key.cast("double")
+    // the double cast must preserve the key's order: a string key
+    // would bucket by its numeric reading (or fail to parse) while the
+    // within-bucket sort orders lexicographically — silently wrong ranks
+    val keyType = df.select(key).schema.head.dataType
+    require(keyType match {
+      case _: NumericType | DateType | TimestampType => true
+      case _ => false
+    }, s"the first sort key must be numeric, date or timestamp; got " +
+      s"${keyType.simpleString} for $key")
+    // dates have no double cast; their day number orders the same way
+    val k = (if (keyType == DateType) unix_date(key) else key)
+      .cast("double")
     val nb = math.min(512, math.max(parallelism * 4, 4))
     val probs = (1 until nb).map(_.toDouble / nb).toArray
     val bounds0 = df.select(k.as("__k")).stat

@@ -22,7 +22,8 @@ object Writes {
     * hash-aggregable — the old form planned a SortAggregate PAIR,
     * while this form's WindowGroupLimit partial prunes to one row per
     * key per partition BELOW the exchange (the same shape that beat
-    * min_by in the r12 q18 A/B; 128× A/B in AbR13: 3.74→3.57 /
+    * min_by in the r12 q18 A/B; 128× A/B in OPTIMIZATION_r13.md
+    * item 4: 3.74→3.57 /
     * 3.52→3.41 s over two fresh-JVM samples, and flatter run-to-run). */
   private def dedupeByKey(incoming: DataFrame, keys: Seq[String],
                           targetCols: Seq[String]): DataFrame = {

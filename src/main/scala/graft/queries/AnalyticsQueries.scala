@@ -12,8 +12,8 @@ import graft.operators.{AnalyticsViews, EventSeries, ModelEval}
 object AnalyticsQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  // Partial-aggregate experiment (round-9 verdict item 3, graft
-  // .AbPartial at 128×, warm best-of-3 ×2 passes): the bar aggregate's
+  // Partial-aggregate experiment (round-9 verdict item 3, BASELINE.md
+  // round 9, 128×, warm best-of-3 ×2 passes): the bar aggregate's
   // combine factor is ~1 (keys grow with the inflation at ~5
   // events/(user,day)), so pre-partitioning raw events by user_id —
   // the only realizable "skip the doomed partial" in Spark 4.1 (no

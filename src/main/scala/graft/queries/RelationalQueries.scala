@@ -95,7 +95,7 @@ object RelationalQueries {
     // wall. Remaining DuckDB gap (~12×, 1.84 s vs 0.21 s) is hash-join
     // probe throughput (row-at-a-time codegen vs vectorized radix
     // join), not plan shape.
-    // Layout A/B (round-9, graft.AbBucket at 128×, warm best-of-3):
+    // Layout A/B (BASELINE.md round 9, 128×, warm best-of-3):
     // writing orders+customer bucketed/sorted by custkey
     // (operators.Bucketing) converts the probe to a merge —
     // co-bucketed SMJ 1.69 s, bucketed scan + broadcast 1.49 s, vs

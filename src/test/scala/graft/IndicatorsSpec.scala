@@ -31,7 +31,7 @@ class IndicatorsSpec extends SparkSuite {
 
   test("rsi stays within [0,100] and warms up null for period rows") {
     val out = priceSeries
-      .withColumn("rsi", Indicators.rsi(col("close"), w, 14))
+      .withColumn("rsi", IndicatorColumnForms.rsi(col("close"), w, 14))
       .filter(col("k") === "a")
       .orderBy("t").select("rsi").as[Option[Double]].collect()
     // pandas parity: the null diff at row 1 clamps to gain=loss=0, so the
@@ -52,14 +52,16 @@ class IndicatorsSpec extends SparkSuite {
       Some(70.5882), Some(64.2857))
     val df = prices.zipWithIndex.map { case (p, i) => ("a", i, p) }
       .toDF("k", "t", "close")
-    val out = df.withColumn("rsi", Indicators.rsi(col("close"), w, 3))
+    val out = df.withColumn("rsi",
+      IndicatorColumnForms.rsi(col("close"), w, 3))
       .orderBy("t").select("rsi").as[Option[Double]].collect().toSeq
     assert(out == expected)
   }
 
   test("rsi is 100 when there are no losses") {
     val rising = (1 to 20).map(t => ("a", t, t.toDouble)).toDF("k", "t", "close")
-    val out = rising.withColumn("rsi", Indicators.rsi(col("close"), w, 14))
+    val out = rising.withColumn("rsi",
+      IndicatorColumnForms.rsi(col("close"), w, 14))
       .orderBy("t").select("rsi").as[Option[Double]].collect()
     assert(out.last.contains(100.0))
   }

@@ -81,8 +81,8 @@ class OscillatorSpec extends SparkSuite {
     "close at the window high reads 0 (not -0)") {
     val p = 3
     val out = df.select(col("date"),
-        Indicators.williamsR(col("high"), col("low"), col("close"), w, p)
-          .as("wr"))
+        IndicatorColumnForms.williamsR(col("high"), col("low"),
+          col("close"), w, p).as("wr"))
       .orderBy("date").select("wr").as[Option[Double]].collect()
     val exp = rows.indices.map { i =>
       if (i < p - 1) None
@@ -102,8 +102,8 @@ class OscillatorSpec extends SparkSuite {
       .toDF("user_id", "date_s", "high", "low", "close", "volume")
       .select(col("user_id"), to_date(col("date_s")).as("date"),
         col("high"), col("low"), col("close"))
-    val wr3 = atHigh.select(Indicators.williamsR(col("high"), col("low"),
-        col("close"), w, 3).as("wr"))
+    val wr3 = atHigh.select(IndicatorColumnForms.williamsR(col("high"),
+        col("low"), col("close"), w, 3).as("wr"))
       .orderBy("wr").as[Option[Double]].collect().last
     assert(wr3.contains(0.0) &&
       java.lang.Double.doubleToLongBits(wr3.get) == 0L)

@@ -32,7 +32,7 @@ class R12OptimizationSpec extends SparkSuite {
   test("rsiStaged equals the pure-Column rsi cell-for-cell incl. " +
     "warm-up, flat-window (avg_loss=0) and null-close rows") {
     val a = series
-      .withColumn("rsi", Indicators.rsi(col("close"), w, 14))
+      .withColumn("rsi", IndicatorColumnForms.rsi(col("close"), w, 14))
       .orderBy("k", "t").select("k", "t", "rsi").collect().toSeq
     val b = Indicators.rsiStaged(series, col("close"), w, 14, "rsi")
       .orderBy("k", "t").select("k", "t", "rsi").collect().toSeq
@@ -44,7 +44,8 @@ class R12OptimizationSpec extends SparkSuite {
   test("bollingerStaged equals the pure-Column bollingerWidth " +
     "cell-for-cell incl. warm-up and null-close rows") {
     val a = series
-      .withColumn("bb", Indicators.bollingerWidth(col("close"), w, 20, 2.0))
+      .withColumn("bb",
+        IndicatorColumnForms.bollingerWidth(col("close"), w, 20, 2.0))
       .orderBy("k", "t").select("k", "t", "bb").collect().toSeq
     val b = Indicators.bollingerStaged(series, col("close"), w, 20, 2.0, "bb")
       .orderBy("k", "t").select("k", "t", "bb").collect().toSeq
@@ -55,7 +56,8 @@ class R12OptimizationSpec extends SparkSuite {
     "(the deduped shape) where the Column form planned six + four") {
     val staged = Indicators.rsiStaged(series, col("close"), w, 14, "rsi")
       .queryExecution.executedPlan.toString
-    val column = series.withColumn("rsi", Indicators.rsi(col("close"), w, 14))
+    val column = series.withColumn("rsi",
+      IndicatorColumnForms.rsi(col("close"), w, 14))
       .queryExecution.executedPlan.toString
     def slidingAggs(p: String) =
       "(?:avg|count)\\([^)]*\\) windowspecdefinition".r.findAllIn(p).size

@@ -1,7 +1,9 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.Indicators
 import graft.operators.EventSeries
 
 /** Round-13 q18 fusion equivalence pin: the single-scan fused fact
@@ -15,6 +17,31 @@ import graft.operators.EventSeries
   * global arg-min/arg-max), and multi-user lag boundaries. */
 class R13FusedSpec extends SparkSuite {
   import spark.implicits._
+
+  /** The PRE-r13 two-scan q18 formulation (dailyBars branch +
+    * dailySentiment branch + broadcast join), the reference the fused
+    * [[EventSeries.fctPricesWithSentiment]] is pinned to. */
+  private def twoScanFct(events: DataFrame): DataFrame = {
+    val p = EventSeries.stgDailyPrices(EventSeries.dailyBars(events))
+    val g = EventSeries.dailySentiment(events)
+    p.join(broadcast(g), Seq("user_id", "date"), "left")
+      .withColumn("move_category",
+        Indicators.moveCategory(col("pct_change")))
+  }
+
+  /** The PRE-r13 min(struct)-based in-batch dedup (SortAggregate
+    * pair), the reference Writes.dedupeByKey's row_number top-1 form
+    * is pinned to. */
+  private def dedupeMinStruct(incoming: DataFrame, keys: Seq[String],
+                              targetCols: Seq[String]): DataFrame = {
+    val keyCols = keys.map(col)
+    val valueCols = incoming.columns.filterNot(keys.contains)
+    incoming
+      .groupBy(keyCols: _*)
+      .agg(min(struct(valueCols.map(col).toIndexedSeq: _*)).as("_v"))
+      .select(keyCols ++ valueCols.map(c => col(s"_v.$c").as(c)): _*)
+      .select(targetCols.map(col).toIndexedSeq: _*)
+  }
 
   private def ts(d: Int, h: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-$d%02d $h%02d:00:00")
@@ -44,7 +71,7 @@ class R13FusedSpec extends SparkSuite {
     val cols = Seq("user_id", "date", "open", "high", "low", "close",
       "volume", "prev_close", "price_change", "pct_change",
       "sentiment", "n_events", "move_category")
-    val a = AbR13.twoScanFct(events)
+    val a = twoScanFct(events)
       .select(cols.map(col): _*)
       .orderBy("user_id", "date").collect().toSeq
     val b = EventSeries.fctPricesWithSentiment(events)
@@ -82,7 +109,7 @@ class R13FusedSpec extends SparkSuite {
     val got = Writes.insertIgnore(existing, incoming, Seq("k"))
       .orderBy("k").collect().toSeq
     val ref = existing.unionByName(
-        AbR13.dedupeMinStruct(incoming, Seq("k"),
+        dedupeMinStruct(incoming, Seq("k"),
             existing.columns.toIndexedSeq)
           .join(existing.select(col("k")).distinct(), Seq("k"),
             "left_anti"))
@@ -95,7 +122,7 @@ class R13FusedSpec extends SparkSuite {
 
   test("stochasticKStaged / williamsRStaged equal the Column forms " +
     "cell-for-cell incl. warm-up nulls and flat-range (hi == lo) rows") {
-    import graft.functions.{Indicators, WindowFns}
+    import graft.functions.WindowFns
     val rows = for (k <- Seq("a", "b"); t <- 1 to 40) yield {
       val base = if (t >= 10 && t <= 30) 50.0 // flat range: hi == lo
         else 50.0 + 5 * math.sin(t / 2.0)
@@ -107,10 +134,10 @@ class R13FusedSpec extends SparkSuite {
     }.toDF("k", "t", "high", "low", "close")
     val w = WindowFns.series(col("k"), col("t"))
     val a = flat.select(col("k"), col("t"),
-        Indicators.stochasticK(col("high"), col("low"), col("close"),
-          w, 14).as("pk"),
-        Indicators.williamsR(col("high"), col("low"), col("close"),
-          w, 14).as("wr"))
+        IndicatorColumnForms.stochasticK(col("high"), col("low"),
+          col("close"), w, 14).as("pk"),
+        IndicatorColumnForms.williamsR(col("high"), col("low"),
+          col("close"), w, 14).as("wr"))
       .orderBy("k", "t").collect().toSeq
     val b = Indicators.williamsRStaged(
         Indicators.stochasticKStaged(flat, col("high"), col("low"),

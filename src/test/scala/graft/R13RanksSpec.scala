@@ -115,4 +115,27 @@ class R13RanksSpec extends SparkSuite {
     val d2 = got.find(_.getLong(0) == 2L).get
     assert(d2.getLong(1) == 0L && d2.isNullAt(2) && d2.getLong(3) == 0L)
   }
+
+  test("a string first sort key is rejected: its numeric bucketing " +
+    "would disagree with the lexicographic within-bucket order") {
+    // "10" < "9" as strings but not as doubles
+    val keyed = Seq(("9", 1L), ("10", 2L), ("100", 3L), ("20", 4L))
+      .toDF("k", "id")
+    val e1 = intercept[IllegalArgumentException](
+      Ranks.distributedNtile(keyed, Seq(col("k").asc, col("id").asc), 2,
+        "bkt"))
+    assert(e1.getMessage.contains("string"), e1.getMessage)
+    intercept[IllegalArgumentException](
+      Ranks.prefixSums(keyed, Seq(col("k").desc), Seq("c" -> col("id"))))
+    // numeric, date and timestamp keys pass the guard
+    val dated = keyed
+      .withColumn("d", expr("date_add(date'2024-01-01', cast(id AS INT))"))
+      .withColumn("t", col("d").cast("timestamp"))
+    for (key <- Seq("id", "d", "t")) {
+      val got = Ranks.distributedRowNumber(dated,
+          Seq(col(key).asc, col("id").asc), "rk")
+        .orderBy("id").select("rk").as[Long].collect().toSeq
+      assert(got == Seq(1L, 2L, 3L, 4L), key)
+    }
+  }
 }

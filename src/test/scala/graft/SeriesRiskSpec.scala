@@ -139,7 +139,7 @@ class SeriesRiskSpec extends SparkSuite {
 
   test("stochastic %K: warm-up nulls until the period fills, then " +
     "(close-lo)/(hi-lo); flat range -> null") {
-    import graft.functions.{Indicators, WindowFns}
+    import graft.functions.WindowFns
     val df = Seq(
       (1L, 1, 10.0, 10.0, 10.0), (1L, 2, 20.0, 12.0, 18.0),
       (1L, 3, 18.0, 14.0, 16.0), (1L, 4, 19.0, 15.0, 19.0),
@@ -148,8 +148,8 @@ class SeriesRiskSpec extends SparkSuite {
     ).toDF("user_id", "t", "high", "low", "close")
     val w = WindowFns.series(col("user_id"), col("t"))
     val out = df.withColumn("k",
-        Indicators.stochasticK(col("high"), col("low"), col("close"),
-          w, period = 3))
+        IndicatorColumnForms.stochasticK(col("high"), col("low"),
+          col("close"), w, period = 3))
       .orderBy("user_id", "t").select("k")
       .as[Option[Double]].collect().toSeq
     // key 1: rows 1-2 warm up; row 3: lo=10 hi=20 c=16 -> 60; row 4:

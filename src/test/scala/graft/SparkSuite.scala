@@ -6,19 +6,14 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM-wide session — Spark
   * startup dominates test wall-clock otherwise). */
 object SparkSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = Sessions.local(4,
     // Plan strings (AQE posts one per re-plan, and the SQL status store
     // keeps them) print every cached frame's plan inline wherever it is
     // read. The incremental-ingest specs chain in-memory states whose
     // stage caches nest, so the string doubles per stage and reached
     // 400M characters, enough to exhaust the heap. Spec plans stay
     // under 12k characters, far below this bound.
-    .config("spark.sql.maxPlanStringLength", "1000000")
-    .getOrCreate()
+    "spark.sql.maxPlanStringLength" -> "1000000")
 }
 
 abstract class SparkSuite extends AnyFunSuite {

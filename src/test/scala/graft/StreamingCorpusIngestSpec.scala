@@ -218,4 +218,26 @@ class StreamingCorpusIngestSpec extends SparkSuite {
     assert(st0.fingerprints.count() == 0 &&
       st0.simhashPrints.exists(_.count() == 0))
   }
+
+  test("loadStateUnion refuses state dirs whose tables disagree on " +
+    "schema, naming the table (a multi-path scan would read nulls)") {
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+      .filter(col("doc_id") < 40)
+    def stateWith(k: Int) = IncrementalIngestJob.State(
+      docs.select(graft.functions.TextFns.fingerprint(col("text"))
+        .as("fingerprint")),
+      graft.operators.Dedup.minhashSignatures(docs, k = k))
+    val compact = Files.createTempDirectory("graft_scsch_a").toString
+    val delta = Files.createTempDirectory("graft_scsch_b").toString
+    IncrementalIngestJob.saveState(
+      stateWith(IncrementalIngestJob.Config().minhashK), compact)
+    IncrementalIngestJob.saveState(stateWith(4), delta)
+    val e = intercept[IllegalArgumentException](
+      IncrementalIngestJob.loadStateUnion(spark, Seq(compact, delta)))
+    assert(e.getMessage.contains("sig_index"), e.getMessage)
+    // matching layouts still union
+    val same = IncrementalIngestJob.loadStateUnion(spark,
+      Seq(compact, compact))
+    assert(same.sigIndex.count() == 2 * docs.count())
+  }
 }
