@@ -80,7 +80,7 @@ object Dev {
   }
 
   /** The >2× set from BENCH_r07 (ratio, descending). */
-  val crossoverQueries: Seq[String] = Seq(
+  private val crossoverQueries: Seq[String] = Seq(
     "q31_dedup_exact", "q35_knn", "q06_join3", "q02_group_agg",
     "q01_global_agg", "q44_class_metrics", "q41_accuracy_by_user",
     "q03_supplier_stats", "q28_token_stats", "q07_anti_join")

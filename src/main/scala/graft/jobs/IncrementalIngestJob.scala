@@ -181,8 +181,8 @@ object IncrementalIngestJob {
     * instrumentation — was A/B'd and REJECTED: without the eager
     * materialization the lazily-cached stages race-recompute under
     * the ladder's fan-out inside the caller's first action, and
-    * StreamingThroughput read 10-22 s/batch vs 8-11 s with the eager
-    * counts. The counts stay.) */
+    * `Dev stream-throughput` read 10-22 s/batch vs 8-11 s with the
+    * eager counts. The counts stay.) */
   def run(state: State, batch: DataFrame, evalSet: DataFrame,
           cfg: Config = Config(),
           batchEmbeddings: Option[DataFrame] = None)
