@@ -19,7 +19,7 @@ import graft.streaming.StreamingCorpusIngest
   *   scale              [[ScaleCheck]]'s timed ops on N× inflated fixtures
   *   inflate [outDir]   materialize an N× inflation (InflateFixtures)
   *   explain <query>..  formatted physical plans of catalog queries
-  *   smoke              SparkEntry.entry, as the driver smoke-checks it
+  *   smoke              SparkEntry.entry's rows and row count
   *
   * Subcommands read the SPARK_GRAFT_* variables Bench reads (SF_DIR,
   * CPUS, SCALE, BENCH_RUNS, ...) with their own defaults.
@@ -379,9 +379,9 @@ object Dev {
     }
   }
 
-  /** Local smoke of the driver's entry-point contract: runs
-    * SparkEntry.entry (flagship fact query at sf0.001) exactly as the
-    * driver's smoke check does, prints the rows and the row count. */
+  /** Smoke of the entry-point contract: runs SparkEntry.entry (the
+    * flagship fact query at sf0.001) and prints its first rows and its
+    * row count. */
   private def smoke(): Unit =
     withSession(8) { spark =>
       val df = SparkEntry.entry(spark)

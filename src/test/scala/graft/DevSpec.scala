@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The program has four entry points: the driver's `Bench` and
-  * `Verify`, the CLI, and `Dev` for every measurement or inspection
-  * tool. A new tool is a `Dev` subcommand, not another main. */
+/** The program has four entry points: `Bench` (timing), `Verify`
+  * (correctness dump), the CLI, and `Dev` for every measurement or
+  * inspection tool. A new tool is a `Dev` subcommand, not another
+  * main. */
 class DevSpec extends AnyFunSuite {
 
   test("exactly Bench, Verify, cli.Main and Dev define a main under " +
