@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
+import scala.jdk.CollectionConverters._
 
 /** Readers for the driver parquet fixtures (TESTDATA.md).
   *
@@ -15,7 +19,58 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without its schema-inference job. Spark
+    * infers a parquet schema in a one-task Spark job (~115 ms even in a
+    * warm session) that reads a single footer when mergeSchema is off;
+    * this reads that same footer on the driver, converts it as Spark
+    * would, and hands the result to the reader as its schema. Paths
+    * [[schemaFile]] cannot resolve go to Spark's inference unchanged. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    schemaFile(spark, path) match {
+      case Some(f) => spark.read.schema(
+        Bridge.parquetSchema(spark, f, Bridge.parquetFooter(spark, f)))
+        .parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The one file whose footer Spark's own inference reads for `path`
+    * with mergeSchema off (`ParquetUtils.inferSchema`): the path itself
+    * when it is a file; in a directory `_common_metadata`, else
+    * `_metadata`, else the first data file by path, among the names
+    * Spark's file listing keeps. None for a glob, a missing path, a
+    * directory with any subdirectory (partition columns, a streaming
+    * sink's `_spark_metadata` log) or without a data file, and with
+    * mergeSchema on. */
+  private def schemaFile(spark: SparkSession, path: String)
+      : Option[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(Bridge.hadoopConf(spark))
+    if (Bridge.parquetMergeSchema(spark) ||
+        path.exists("{}[]*?\\".contains(_)) || !fs.exists(p)) None
+    else {
+      val st = fs.getFileStatus(p)
+      if (st.isFile) Some(st)
+      else {
+        val children = fs.listStatus(p).toSeq
+        if (children.exists(_.isDirectory)) None
+        else {
+          // HadoopFSUtils.shouldFilterOutPathName
+          def listed(n: String) =
+            !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+              n.endsWith("._COPYING_")) ||
+              n.startsWith("_common_metadata") || n.startsWith("_metadata")
+          val files = children.filter(c => listed(c.getPath.getName))
+            .sortBy(_.getPath.toString)
+          val summaries = Seq("_common_metadata", "_metadata")
+          summaries.flatMap(n => files.find(_.getPath.getName == n))
+            .headOption
+            .orElse(files.find(c => !summaries.contains(c.getPath.getName)))
+        }
+      }
+    }
+  }
 
   /** Name-dispatched reader that routes through the per-table accessors,
     * so tables needing read-time normalization (events' nanosecond
@@ -67,17 +122,17 @@ object Tables {
     * conf is set ONLY when the footer actually declares TIMESTAMP(NANOS)
     * — Spark 4 refuses the scan otherwise — never preemptively, so the
     * conf cannot leak into reads of micros-flavored data. */
-  def readEventsFlavored(s: SparkSession, path: String): DataFrame =
-    try s.read.parquet(path)
-    catch {
-      case e: Exception if causeChain(e).exists(t =>
-          t.getMessage != null && t.getMessage.contains("NANOS")) =>
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        s.read.parquet(path)
+  def readEventsFlavored(s: SparkSession, path: String): DataFrame = {
+    val nanos = schemaFile(s, path).exists { f =>
+      Bridge.parquetFooter(s, f).getFileMetaData.getSchema.getColumns
+        .asScala.exists(_.getPrimitiveType.getLogicalTypeAnnotation match {
+          case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+          case _ => false
+        })
     }
-
-  private def causeChain(t: Throwable): Seq[Throwable] =
-    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8).toSeq
+    if (nanos) s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    parquet(s, path)
+  }
 
   /** Branch on the ARRIVED type of a timestamp column and cast to the
     * session TimestampType: LongType means epoch nanos (integer DIV, no

@@ -72,7 +72,7 @@ object Main {
     // silently restart the table from empty
     def readOr(t: String, fallback: => DataFrame): DataFrame =
       if (graft.operators.StagedSwap.recover(path(t)))
-        spark.read.parquet(path(t))
+        Tables.parquet(spark, path(t))
       else fallback
     // Two-phase overwrite via StagedSwap: STAGE materializes a frame to
     // a __tmp dir (a real parquet write, so no plan re-reads the source
@@ -94,7 +94,7 @@ object Main {
         write(state.enrichments, "enrichments")
         write(fact, "fact")
         // count the written files: counting state.* re-runs both plans
-        def written(t: String) = spark.read.parquet(path(t)).count()
+        def written(t: String) = Tables.parquet(spark, path(t)).count()
         println(s"[cli] backfill: bars=${written("bars")} " +
           s"enrichments=${written("enrichments")} fact rows written")
 
@@ -114,7 +114,8 @@ object Main {
         stage(next.enrichments, "enrichments")
         stage(fact, "fact")
         Seq("bars", "enrichments", "fact").foreach(swap)
-        println(s"[cli] run: bars=${spark.read.parquet(path("bars")).count()}")
+        println(
+          s"[cli] run: bars=${Tables.parquet(spark, path("bars")).count()}")
 
       case "status" =>
         val bars = readOr("bars", spark.emptyDataFrame)
@@ -263,7 +264,7 @@ object Main {
           println(s"[cli] ml-predict: csv export at $out")
         }
         println(s"[cli] ml-predict: " +
-          s"${spark.read.parquet(path("predictions")).count()} rows")
+          s"${Tables.parquet(spark, path("predictions")).count()} rows")
 
       case other =>
         // same contract as unknown --model: scripted callers need a

@@ -141,15 +141,6 @@ object Indicators {
       .otherwise(next)
   }
 
-  /** Sentiment → signed score {positive:+1, neutral:0, negative:-1},
-    * null → 0 (reference: ml/feature_engineering.py:152-155). */
-  def sentimentScore(sentiment: Column): Column =
-    coalesce(
-      when(sentiment === "positive", 1)
-        .when(sentiment === "negative", -1)
-        .when(sentiment === "neutral", 0),
-      lit(0))
-
   /** Stochastic oscillator %K(period): `(close − min low) / (max high
     * − min low) · 100` over the trailing `period` rows, pandas-default
     * min_periods=period warm-up nulls, flat-range (hi == lo) → null via

@@ -16,6 +16,12 @@ import org.apache.spark.sql.functions._
   */
 object TextFns {
 
+  /** Spark's `lower`/`upper`, value for value, without building ICU's
+    * case-mapping table for all-ASCII input
+    * ([[graft.plans.AsciiFirstCaseMap]]). */
+  def lower(text: Column): Column = graft.plans.AsciiFirstCaseMap.lower(text)
+  def upper(text: Column): Column = graft.plans.AsciiFirstCaseMap.upper(text)
+
   /** Whitespace tokenization of trimmed text. */
   def tokens(text: Column): Column = split(trim(text), "\\s+")
 
@@ -55,16 +61,6 @@ object TextFns {
   def stopwordRatioR4(text: Column): Column = {
     val t = tokens(text)
     ExactRound.ratio(hitCount(t, enStopwords), nullif(size(t), lit(0)), 4)
-  }
-
-  /** [[meanTokenLength]] rounded 4dp in exact integer arithmetic (sum
-    * of lengths over count — same tie exposure). Fused TokenStats
-    * scan; `n_tokens >= 1` for non-null text, so the old
-    * `nullif(size,0)` guard is vacuous and dropped. */
-  def meanTokenLengthR4(text: Column): Column = {
-    val st = graft.plans.TokenStats.column(text)
-    ExactRound.ratio(st.getField("sum_tok_len"),
-      st.getField("n_tokens"), 4)
   }
 
   /** Composite quality score in [0,1]: length band + stopword presence +
@@ -149,12 +145,6 @@ object TextFns {
       array_distinct(filter(grams, g => g.isNotNull))
     }
   }
-
-  /** One MinHash signature: min over shingles of md5(seed|shingle).
-    * Hex-string min — identical in any engine with md5. */
-  def minhashSig(shingleCol: Column, seed: Int): Column =
-    array_min(transform(shingleCol,
-      s => md5(concat(lit(seed.toString), lit("|"), s))))
 
   /** 64-bit SimHash over distinct tokens (Charikar 2002), as one fused
     * native expression: per-token hash = first 64 bits of md5 (engine-

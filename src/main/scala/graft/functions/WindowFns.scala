@@ -72,12 +72,6 @@ object WindowFns {
     else when(count(c).over(f) >= minPeriods, sum(c).over(f))
   }
 
-  /** Rolling min/max over a trailing frame. */
-  def rollingMin(c: Column, n: Int, w: WindowSpec): Column =
-    min(c).over(trailing(w, n))
-  def rollingMax(c: Column, n: Int, w: WindowSpec): Column =
-    max(c).over(trailing(w, n))
-
   /** Last row per key — pandas `groupby(k).tail(1)`
     * (reference: ml/predict.py:135). Implemented as max_by over a struct so
     * it is a single hash aggregation (no sort, no row_number shuffle+filter).

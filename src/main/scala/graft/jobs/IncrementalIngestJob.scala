@@ -2,6 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.functions.{TextClean, TextFns}
 import graft.operators.{Decontaminate, Dedup, SemDedup}
 
@@ -108,14 +109,14 @@ object IncrementalIngestJob {
       if (fs.exists(p)) Some(s"$dir/$sub") else None
     }
     val centroids = opt("centroids").map(p =>
-      spark.read.parquet(p).collect()
+      Tables.parquet(spark, p).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
         .sortBy(_._1))
-    State(spark.read.parquet(s"$dir/fingerprints"),
-      spark.read.parquet(s"$dir/sig_index"),
+    State(Tables.parquet(spark, s"$dir/fingerprints"),
+      Tables.parquet(spark, s"$dir/sig_index"),
       centroids,
-      opt("kept_embeddings").map(spark.read.parquet(_)),
-      opt("simhash_prints").map(spark.read.parquet(_)))
+      opt("kept_embeddings").map(Tables.parquet(spark, _)),
+      opt("simhash_prints").map(Tables.parquet(spark, _)))
   }
 
   /** Reopen the UNION of several [[saveState]] layouts (a compact
@@ -141,9 +142,9 @@ object IncrementalIngestJob {
       val ps = present(sub)
       if (ps.isEmpty) None
       else {
-        val schema = spark.read.parquet(ps.head).schema
+        val schema = Tables.parquet(spark, ps.head).schema
         ps.tail.foreach { p =>
-          val other = spark.read.parquet(p).schema
+          val other = Tables.parquet(spark, p).schema
           require(other == schema, s"state table $sub has schema " +
             s"${other.simpleString} in $p but ${schema.simpleString} " +
             s"in ${ps.head}")
@@ -152,7 +153,7 @@ object IncrementalIngestJob {
       }
     }
     val centroids = present("centroids").lastOption.map(p =>
-      spark.read.parquet(p).collect()
+      Tables.parquet(spark, p).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
         .sortBy(_._1))
     State(

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Experiment-run registry + best-run search (reference:
   * ml/mlflow_utils.py:32-241 — run logging, and the best-run-by-metric
@@ -37,7 +38,7 @@ object RunRegistry {
   }
 
   def runs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    Tables.parquet(spark, dir)
 
   /** The reference's get-best-run: top run for `metric`, newest first on
     * value ties. Returns (run_id, model_type, created_at, value). */

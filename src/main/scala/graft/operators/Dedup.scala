@@ -248,28 +248,29 @@ object Dedup {
       .filter(col("bucket").isNotNull)
     val bdist = bsigs.filter(col("sig_0").isNotNull)
       .select(sigCols.map(col): _*).distinct()
-    val bb = bdist.select(array(sigCols.map(col): _*).as("_bsig"),
-        bucketsOf(bdist).as("bucket"))
+    // the batch side keeps sig_0..sig_{k-1} as plain columns through
+    // to the verdict join: join keys re-extracted from an array let
+    // Catalyst infer isnotnull(element_at(array(...), i)) filters that
+    // whole-stage codegen cannot compile (janino "is not an rvalue")
+    val bb = bdist.select(sigCols.map(col) :+ bucketsOf(bdist).as("bucket"): _*)
       .filter(col("bucket").isNotNull)
     val matches = (0 until k).map(i =>
-        when(element_at(col("_csig"), i + 1) ===
-          element_at(col("_bsig"), i + 1), 1).otherwise(0))
+        when(element_at(col("_csig"), i + 1) === col(s"sig_$i"), 1)
+          .otherwise(0))
       .reduce(_ + _)
     val pairs = cb.join(broadcast(bb), Seq("bucket"))
-      .select(col("_bsig"), col("_csig"), col("_n"), matches.as("_m"))
+      .select(sigCols.map(col) ++
+        Seq(col("_csig"), col("_n"), matches.as("_m")): _*)
       // a pair sharing several bands repeats with the SAME agreement
       // and multiplicity — max() collapses the band fanout
-      .groupBy(col("_bsig"), col("_csig"))
+      .groupBy(sigCols.map(col) :+ col("_csig"): _*)
       .agg(max(col("_n")).as("n"), max(col("_m")).as("m"))
-    val perSig = pairs.groupBy(col("_bsig")).agg(
+    // verdicts fan back out over the spine by the signature columns
+    // (null signatures never match — shingle-less docs read (0, 0, 1))
+    val verdictCols = pairs.groupBy(sigCols.map(col): _*).agg(
       sum(col("n")).cast("long").as("n_candidates"),
       sum(when(col("m") >= minMatches, col("n")).otherwise(0L))
         .cast("long").as("n_dups"))
-    // verdicts fan back out over the spine by the signature columns
-    // (null signatures never match — shingle-less docs read (0, 0, 1))
-    val verdictCols = perSig.select(
-      (0 until k).map(i => element_at(col("_bsig"), i + 1)
-        .as(s"sig_$i")) :+ col("n_candidates") :+ col("n_dups"): _*)
     bsigs.join(broadcast(verdictCols), sigCols, "left")
       .select(col(idCol),
         coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
@@ -691,13 +692,6 @@ object Dedup {
         when(coalesce(col("n_dups"), lit(0L)) === 0, 1L).otherwise(0L)
           .as("kept"))
   }
-
-  /** Embedding-cosine near-dup pairs above a similarity threshold.
-    * Delegates to Similarity; see there for the scale path. */
-  def embeddingNearDups(embeddings: DataFrame, threshold: Double = 0.95,
-                        vecCol: String = "embedding",
-                        idCol: String = "vec_id"): DataFrame =
-    Similarity.cosineSelfPairs(embeddings, threshold, vecCol, idCol)
 
   /** C4-style chunk-level duplication stats: each doc is cut into
     * consecutive non-overlapping `chunkTokens`-token chunks; a chunk is

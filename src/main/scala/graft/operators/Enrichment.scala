@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.functions.TextFns
 
 /** The reference's one non-relational stage: per-row LLM enrichment
   * (stock_grok_pipeline.py:211-257) behind a provider abstraction
@@ -70,7 +71,7 @@ object Enrichment {
       .filter(col("_r").isNotNull)
       .select(col("user_id"), col("date"),
         col("_r.explanation").as("explanation"),
-        lower(col("_r.sentiment")).as("sentiment"),
-        lower(col("_r.topic")).as("topic"))
+        TextFns.lower(col("_r.sentiment")).as("sentiment"),
+        TextFns.lower(col("_r.topic")).as("topic"))
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{Indicators, WindowFns}
+import graft.functions.{Indicators, TextFns, WindowFns}
 
 /** The reference's stock-pipeline shapes, bound to the `events` fixture.
   *
@@ -118,7 +118,8 @@ object EventSeries {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("user_id"), col("date"),
-        lower(col("event_type")).as("sentiment"), col("n").as("n_events"))
+        TextFns.lower(col("event_type")).as("sentiment"),
+        col("n").as("n_events"))
   }
 
   /** Batch sessionization: a session breaks when the gap from the
@@ -196,7 +197,7 @@ object EventSeries {
       .where(col("_rn") === 1)
       .select(col("user_id"), col("date"), col("open"), col("high"),
         col("low"), col("close"), col("volume"),
-        lower(col("event_type")).as("sentiment"),
+        TextFns.lower(col("event_type")).as("sentiment"),
         col("n").as("n_events"))
     val w = WindowFns.series(col("user_id"), col("date"))
     merged

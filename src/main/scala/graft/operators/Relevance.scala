@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.TextFns
 
 /** Corpus relevance scoring: TF-IDF over whitespace tokens. The
   * term-frequency and document-frequency aggregations are both partial
@@ -982,7 +983,7 @@ object Relevance {
   def vocabRichness(docs: DataFrame, textCol: String = "text",
                     groupCol: String = "source"): DataFrame = {
     val tok = docs.select(col(groupCol).as("grp"),
-        explode(graft.functions.TextFns.tokens(lower(col(textCol))))
+        explode(TextFns.tokens(TextFns.lower(col(textCol))))
           .as("token"))
       .where(col("token") =!= "")
     val tf = tok.groupBy(col("grp"), col("token"))
@@ -1036,7 +1037,7 @@ object Relevance {
     val bucketed = docs
       .withColumn("bucket", ntile(buckets).over(w).cast("long"))
     val tok = bucketed.select(col("bucket"), col(idCol).as("id"),
-        explode(graft.functions.TextFns.tokens(lower(col(textCol))))
+        explode(TextFns.tokens(TextFns.lower(col(textCol))))
           .as("token"))
       .where(col("token") =!= "")
     val vol = tok.groupBy(col("bucket"))
@@ -1069,7 +1070,7 @@ object Relevance {
                  minDf: Int = 5): DataFrame = {
     val d = docs.agg(count(lit(1)).cast("long").as("n_docs"))
     val tok = docs.select(col(idCol).as("id"),
-        explode(graft.functions.TextFns.tokens(lower(col(textCol))))
+        explode(TextFns.tokens(TextFns.lower(col(textCol))))
           .as("token"))
       .where(col("token") =!= "")
     val perDoc = tok.groupBy(col("token"), col("id"))

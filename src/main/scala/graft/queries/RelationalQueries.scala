@@ -49,12 +49,17 @@ object RelationalQueries {
           round(avg(col("l_discount")), 6).as("avg_disc"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))),
 
-    // A15: multi-agg (sample stddev / mean / count) per key
+    // A15: multi-agg (sample stddev / mean / count) per key. Prices are
+    // whole cents, so the mean is an exact ratio of integers and rounds
+    // in integer arithmetic: round(avg, 4) on the double lands on decimal
+    // ties (52531.86375) that Spark rounds up and DuckDB down.
     "q03_supplier_stats" -> ((s, d) =>
       Tables.lineitem(s, d)
         .groupBy(col("l_suppkey"))
         .agg(round(stddev_samp(col("l_extendedprice")), 2).as("std_price"),
-          round(avg(col("l_extendedprice")), 4).as("avg_price"),
+          graft.functions.ExactRound.ratio(
+            sum(round(col("l_extendedprice") * 100).cast("long")),
+            count(lit(1)) * 100, 4).as("avg_price"),
           count(lit(1)).as("n"))
         .orderBy(col("l_suppkey"))),
 
@@ -984,7 +989,9 @@ object RelationalQueries {
          FROM lineitem GROUP BY 1,2 ORDER BY 1,2""",
     "q03_supplier_stats" ->
       """SELECT l_suppkey, round(stddev_samp(l_extendedprice),2) AS std_price,
-         round(avg(l_extendedprice),4) AS avg_price, count(*) AS n
+         CAST((20000 * sum(CAST(round(l_extendedprice * 100) AS BIGINT))
+               + 100 * count(*)) // (200 * count(*)) AS DOUBLE) / 10000
+           AS avg_price, count(*) AS n
          FROM lineitem GROUP BY 1 ORDER BY 1""",
     "q04_cond_agg" ->
       """SELECT o_orderpriority, count(*) AS n,

@@ -480,7 +480,7 @@ object TextQueries {
     // opening diversity per source: distinct first tokens over docs —
     // the template-boilerplate complement at token granularity
     "q334_opening_diversity" -> ((s, d) => {
-      val first = element_at(TextFns.tokens(lower(col("text"))), 1)
+      val first = element_at(TextFns.tokens(TextFns.lower(col("text"))), 1)
       Tables.documents(s, d)
         .select(col("source"), first.as("f"))
         .groupBy(col("source"))
@@ -514,7 +514,7 @@ object TextQueries {
       val tok = Tables.documents(s, d).crossJoin(broadcast(ext))
         .select(when(col("doc_id") * 2 <= col("lo") + col("hi"),
           lit("a")).otherwise(lit("b")).as("h"),
-          explode(TextFns.tokens(lower(col("text")))).as("token"))
+          explode(TextFns.tokens(TextFns.lower(col("text")))).as("token"))
         .where(col("token") =!= "").distinct()
       val a = tok.where(col("h") === "a").select(col("token"))
       val b = tok.where(col("h") === "b").select(col("token"))
@@ -1874,7 +1874,7 @@ object TextQueries {
       val vOld = docs.filter(col("doc_id") % 7 =!= 0)
       val vNew = docs.filter(col("doc_id") % 3 =!= 0)
         .withColumn("lang", when(col("doc_id") % 4 === 0,
-          upper(col("lang"))).otherwise(col("lang")))
+          TextFns.upper(col("lang"))).otherwise(col("lang")))
       graft.operators.Writes.snapshotDiff(vOld, vNew, Seq("doc_id"),
           Seq("text", "lang", "source", "n_chars"))
         .orderBy(col("doc_id"))

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.Tables
 import graft.jobs.IncrementalIngestJob
 
 /** Structured Streaming framing of the incremental corpus ingest: an
@@ -41,7 +42,7 @@ object StreamingCorpusIngest {
     * the timestamp normalization documents don't need). */
   def readDocs(spark: SparkSession, sourceDir: String,
                maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(sourceDir).schema
+    val schema = Tables.parquet(spark, sourceDir).schema
     val reader = spark.readStream.schema(schema)
     maxFilesPerTrigger.foreach(n =>
       reader.option("maxFilesPerTrigger", n))

@@ -398,6 +398,41 @@ class DedupSpec extends SparkSuite {
       "least one cross-split near-dup for the test to bite")
   }
 
+  test("incrementalLshDedup's plan compiles: no codegen compile error " +
+    "or whole-stage fallback is logged") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-codegen-capture", null,
+        null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage +
+          Option(e.getThrown).map(t => s" $t").getOrElse(""))
+    }
+    appender.start()
+    val loggers = Seq(
+      "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator",
+      "org.apache.spark.sql.execution.WholeStageCodegenExec")
+      .map(n => LogManager.getLogger(n).asInstanceOf[Logger])
+    val levels = loggers.map(_.getLevel)
+    loggers.foreach { l => l.addAppender(appender); l.setLevel(Level.WARN) }
+    try {
+      val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+      val idx = Dedup.minhashSignatures(
+        docs.filter(col("doc_id") % 3 =!= 0), k = 8, n = 2)
+      val out = Dedup.incrementalLshDedup(idx,
+          docs.filter(col("doc_id") % 3 === 0), k = 8, bands = 4, n = 2,
+          minMatches = 6)
+        .agg(count(lit(1)), sum(col("kept"))).head()
+      assert(out.getLong(0) > 0)
+    } finally loggers.zip(levels).foreach { case (l, lv) =>
+      l.removeAppender(appender); l.setLevel(lv)
+    }
+    assert(seen.isEmpty, seen.toString)
+  }
+
   test("groupAwareSplit: every member of a dup group lands in its " +
     "CANONICAL id's md5 split — a dup pair can never straddle splits") {
     import spark.implicits._

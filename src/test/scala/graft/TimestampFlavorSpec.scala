@@ -95,6 +95,22 @@ class TimestampFlavorSpec extends SparkSuite {
     }
   }
 
+  test("Tables.parquet reads every flavor with the schema and rows " +
+    "spark.read.parquet infers, NANOS under the legacy conf") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try flavors.foreach { case (name, path) =>
+      val ours = Tables.parquet(spark, path)
+      val inferred = spark.read.parquet(path)
+      assert(ours.schema.json == inferred.schema.json, name)
+      assert(ours.collect().toSeq == inferred.collect().toSeq, name)
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("daily bars are flavor-independent end to end") {
     val expected = EventSeries.dailyBars(canonical)
     flavors.foreach { case (name, path) =>
