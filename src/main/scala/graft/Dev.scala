@@ -3,9 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
-import graft.functions.{TextClean, TextFns}
-import graft.jobs.IncrementalIngestJob
-import graft.operators.{Dedup, SemDedup}
+import graft.jobs.{IncrementalIngestJob, Ladder}
+import graft.operators.SemDedup
 import graft.streaming.StreamingCorpusIngest
 
 /** The development entry point beside [[Bench]] and [[Verify]]: one
@@ -147,8 +146,7 @@ object Dev {
     /** The inflated corpus side before text prep. */
     val corpusDocs: DataFrame = InflateFixtures.inflate(spark,
       rawDocs.filter(col("doc_id") % 5 =!= 0), "documents", mult)
-    val stateDocs: DataFrame = corpusDocs.withColumn("text",
-      TextClean.scrub(TextClean.canonicalizeClasses(col("text"))))
+    val stateDocs: DataFrame = Ladder.prepText(corpusDocs)
     val stateEmb: DataFrame = InflateFixtures.inflate(spark,
       rawEmb.filter(col("vec_id") % 5 =!= 0), "embeddings", mult)
     val centroids: Array[(Long, Array[Double])] =
@@ -158,14 +156,10 @@ object Dev {
 
     /** Build the state side tables and persist them under `dir`. */
     def saveState(dir: String): Unit =
-      IncrementalIngestJob.saveState(IncrementalIngestJob.State(
-        stateDocs.select(TextFns.fingerprint(col("text"))
-          .as("fingerprint")),
-        Dedup.minhashSignatures(stateDocs, k = cfg.minhashK,
-          n = cfg.shingleN),
-        Some(centroids), Some(keptEmb),
-        Some(stateDocs.select(col("doc_id"),
-          TextFns.simhash64(col("text")).as("simhash")))), dir)
+      IncrementalIngestJob.saveState(
+        IncrementalIngestJob.deriveState(stateDocs, cfg, simhash = true)
+          .copy(centroids = Some(centroids), keptEmbeddings = Some(keptEmb)),
+        dir)
   }
 
   /** Attributes the funnel probe's FIXED per-batch cost
@@ -248,14 +242,11 @@ object Dev {
       // window, LSH groups, hamming groups, batch domination) do
       // corpus-sized work instead of batch-sized. Same config, same
       // stages live.
-      val emptyState = IncrementalIngestJob.State(
-        Seq.empty[String].toDF("fingerprint"),
-        Dedup.minhashSignatures(
-          Seq.empty[(Long, String)].toDF("doc_id", "text"),
-          k = f.cfg.minhashK, n = f.cfg.shingleN),
-        Some(f.centroids),
-        Some(f.keptEmb.limit(0)),
-        Some(Seq.empty[(Long, Long)].toDF("doc_id", "simhash")))
+      val emptyState = IncrementalIngestJob.deriveState(
+          Seq.empty[(Long, String)].toDF("doc_id", "text"), f.cfg,
+          simhash = true)
+        .copy(centroids = Some(f.centroids),
+          keptEmbeddings = Some(f.keptEmb.limit(0)))
       val docCols = Seq("doc_id", "text", "lang", "source").map(col)
       val allDocs = f.corpusDocs.select(docCols: _*)
         .unionByName(f.batch.select(docCols: _*))

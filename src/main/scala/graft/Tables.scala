@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -35,6 +35,16 @@ object Tables {
       case None => spark.read.parquet(path)
     }
 
+  /** `path` with the Hadoop FileSystem serving its scheme (`file:`,
+    * `hdfs:`, `s3a:`, or the default FS for a bare path). A
+    * java.io.File check reads a `file:` URI or a remote path as a
+    * missing local file, so existence checks, listings and deletes
+    * under a user-given dir go through this. */
+  def fileSystem(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    (p.getFileSystem(Bridge.hadoopConf(spark)), p)
+  }
+
   /** The one file whose footer Spark's own inference reads for `path`
     * with mergeSchema off (`ParquetUtils.inferSchema`): the path itself
     * when it is a file; in a directory `_common_metadata`, else
@@ -45,8 +55,7 @@ object Tables {
     * mergeSchema on. */
   private def schemaFile(spark: SparkSession, path: String)
       : Option[FileStatus] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(Bridge.hadoopConf(spark))
+    val (fs, p) = fileSystem(spark, path)
     if (Bridge.parquetMergeSchema(spark) ||
         path.exists("{}[]*?\\".contains(_)) || !fs.exists(p)) None
     else {

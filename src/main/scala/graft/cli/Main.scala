@@ -99,14 +99,10 @@ object Main {
           s"enrichments=${written("enrichments")} fact rows written")
 
       case "run" =>
-        val state = DailyEtlJob.State(
-          readOr("bars", EventSeries.dailyBars(
-            Tables.events(spark, eventsDir)).limit(0)),
-          readOr("enrichments", spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType.fromDDL(
-              "user_id BIGINT, date DATE, explanation STRING, " +
-                "sentiment STRING, topic STRING"))))
+        lazy val empty = DailyEtlJob.emptyState(
+          Tables.events(spark, eventsDir))
+        val state = DailyEtlJob.State(readOr("bars", empty.bars),
+          readOr("enrichments", empty.enrichments))
         val (next, fact) = DailyEtlJob.step(state,
           Tables.events(spark, eventsDir), Enrichment.DeterministicProvider)
         // stage ALL outputs (all plans read the pre-swap dirs), then swap

@@ -34,6 +34,12 @@ object ExactRound {
     call_function("div", num * (2 * p) + den, den * 2)
   }
 
+  /** A 4dp value lifted to its exact scaled long (value · 10⁴) through
+    * DECIMAL(14,4), so moments over it are integer arithmetic and no
+    * float aggregation order reaches a rounding boundary. */
+  def fixed4(c: Column): Column =
+    (c.cast("decimal(14,4)") * 10000).cast("long")
+
   /** [[ratio]] for SIGNED numerators (den > 0): rounds half away from
     * zero — the semantics both engines' round() applies to doubles —
     * by running the nonnegative scheme on |num| and restoring the

@@ -48,13 +48,6 @@ object TextFns {
     hitCount(t, enStopwords).cast("double") / nullif(size(t), lit(0))
   }
 
-  /** Mean token length — a cheap fluency signal. */
-  def meanTokenLength(text: Column): Column = {
-    val t = tokens(text)
-    aggregate(t, lit(0), (acc, x) => acc + length(x)).cast("double") /
-      nullif(size(t), lit(0))
-  }
-
   /** [[stopwordRatio]] rounded 4dp in exact integer arithmetic — the
     * reporting form (count ratios land on decimal ties where double
     * round() is engine-dependent; [[ExactRound]] scaladoc). */

@@ -2,7 +2,6 @@ package graft.jobs
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.{TextClean, TextFns}
 import graft.operators.{Boilerplate, Decontaminate, Dedup, Sampling}
 
 /** End-to-end pretraining-corpus preparation: the composition a user of
@@ -73,36 +72,11 @@ object CorpusPrepJob {
   def run(docs: DataFrame, evalSet: DataFrame,
           cfg: Config = Config(),
           embeddings: Option[DataFrame] = None): (DataFrame, Seq[(String, Long)]) = {
-    val ledger = scala.collection.mutable.ListBuffer.empty[(String, Long)]
-    // each stage caches for its own count + the next stage's build,
-    // then the PREDECESSOR unpersists — only the live frontier (and
-    // the returned final frame) stays pinned in executor memory
-    var previous: DataFrame = null
-    def stage(name: String, df: DataFrame): DataFrame = {
-      val cached = df.cache()
-      ledger += name -> cached.count()
-      if (previous != null) previous.unpersist()
-      previous = cached
-      cached
-    }
+    val ladder = new Ladder()
+    import ladder.stage
 
-    val input = stage("input", docs.select(
-      col("doc_id"), col("text"), col("lang"), col("source")))
-
-    // 0. Unicode canonicalization (pure map) — BEFORE anything that
-    // hashes or tokenizes, so visually identical docs dedup identically.
-    // Classes only: the scrub stage ends with the whitespace collapse,
-    // so collapsing here too would be a redundant full-text regex pass
-    val canonical = stage("canonicalized", input.withColumn("text",
-      TextClean.canonicalizeClasses(col("text"))))
-
-    // 1. PII scrub + whitespace canonicalization (pure map)
-    val scrubbed = stage("scrubbed", canonical.withColumn("text",
-      TextClean.scrub(col("text"))))
-
-    // 2. heuristic quality gate (pure map)
-    val scored = stage("quality_gate", scrubbed
-      .filter(TextFns.qualityScore(col("text")) >= cfg.minQuality))
+    // 0-2. canonicalize → scrub → heuristic quality gate (pure maps)
+    val scored = ladder.prep(docs, cfg.minQuality)
 
     // 2b. optional Gopher rule gate (pure map predicate — q104 rules)
     val qualified =
@@ -116,7 +90,7 @@ object CorpusPrepJob {
     // (post-quality-gate), not the raw input — otherwise a selective
     // gate silently inflates the effective threshold.
     val minDocs = math.max(2L, math.ceil(
-      cfg.boilerplateMinDocFrac * ledger.last._2).toLong)
+      cfg.boilerplateMinDocFrac * ladder.lastCount).toLong)
     val stripped = stage("boilerplate_stripped", qualified
       .join(Boilerplate.stripFrequentLines(qualified,
           minDocs, splitPattern = "\\s+", joinWith = " "),
@@ -202,6 +176,6 @@ object CorpusPrepJob {
           .select(col("doc_id")),
         Seq("doc_id"), "left_semi"))
 
-    (budgeted, ledger.toList)
+    (budgeted, ladder.ledger)
   }
 }

@@ -38,14 +38,18 @@ object DailyEtlJob {
   /** Backfill semantics (backfill.py:38-43 destructive reload): empty
     * state, then one step over the whole history. */
   def backfill(events: DataFrame,
-               provider: Enrichment.SentimentProvider): (State, DataFrame) = {
+               provider: Enrichment.SentimentProvider): (State, DataFrame) =
+    step(emptyState(events), events, provider)
+
+  /** The state before any run: no bars (shaped like `events`' bars),
+    * no enrichments. */
+  def emptyState(events: DataFrame): State = {
     val spark = events.sparkSession
-    val emptyBars = EventSeries.dailyBars(events).limit(0)
-    val emptyEnrich = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id BIGINT, date DATE, explanation STRING, " +
-          "sentiment STRING, topic STRING"))
-    step(State(emptyBars, emptyEnrich), events, provider)
+    State(EventSeries.dailyBars(events).limit(0),
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType.fromDDL(
+          "user_id BIGINT, date DATE, explanation STRING, " +
+            "sentiment STRING, topic STRING")))
   }
 }

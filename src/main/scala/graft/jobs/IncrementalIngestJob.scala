@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.{TextClean, TextFns}
+import graft.functions.TextFns
 import graft.operators.{Decontaminate, Dedup, SemDedup}
 
 /** Incremental corpus ingest — the daily-batch sibling of
@@ -104,9 +104,8 @@ object IncrementalIngestJob {
   def loadState(spark: org.apache.spark.sql.SparkSession,
                 dir: String): State = {
     def opt(sub: String): Option[String] = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$sub")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) Some(s"$dir/$sub") else None
+      val (fs, p) = Tables.fileSystem(spark, s"$dir/$sub")
+      Option.when(fs.exists(p))(s"$dir/$sub")
     }
     val centroids = opt("centroids").map(p =>
       Tables.parquet(spark, p).collect()
@@ -130,8 +129,7 @@ object IncrementalIngestJob {
   def loadStateUnion(spark: org.apache.spark.sql.SparkSession,
                      dirs: Seq[String]): State = {
     require(dirs.nonEmpty, "need at least one state dir")
-    val fs = new org.apache.hadoop.fs.Path(dirs.head)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, _) = Tables.fileSystem(spark, dirs.head)
     def present(sub: String): Seq[String] = dirs
       .map(d => s"$d/$sub")
       .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
@@ -190,32 +188,14 @@ object IncrementalIngestJob {
       : (DataFrame, State, Seq[(String, Long)]) = {
     require(state.centroids.isDefined == state.keptEmbeddings.isDefined,
       "semantic state must come as a (centroids, keptEmbeddings) pair")
-    val ledger = scala.collection.mutable.ListBuffer.empty[(String, Long)]
-    var previous: DataFrame = null
-    def stage(name: String, df: DataFrame): DataFrame = {
-      val cached = df.cache()
-      val t0 = System.nanoTime()
-      ledger += name -> cached.count()
-      stageTimer.foreach(_(name, (System.nanoTime() - t0) / 1e9))
-      if (previous != null) previous.unpersist()
-      previous = cached
-      cached
-    }
-
-    val input = stage("input", batch.select(
-      col("doc_id"), col("text"), col("lang"), col("source")))
+    val ladder = new Ladder(stageTimer)
+    import ladder.stage
 
     // map-side gates first (cheapest per row, shrink before any probe):
-    // same canonicalize → scrub → quality order as CorpusPrepJob, so a
-    // batch ingested incrementally hashes identically to one that went
-    // through the full rebuild — the property that keeps the two jobs'
-    // indexes interchangeable
-    val canonical = stage("canonicalized", input.withColumn("text",
-      TextClean.canonicalizeClasses(col("text"))))
-    val scrubbed = stage("scrubbed", canonical.withColumn("text",
-      TextClean.scrub(col("text"))))
-    val scored = stage("quality_gate", scrubbed
-      .filter(TextFns.qualityScore(col("text")) >= cfg.minQuality))
+    // the CorpusPrepJob prefix, so a batch ingested incrementally hashes
+    // identically to one that went through the full rebuild — the
+    // property that keeps the two jobs' indexes interchangeable
+    val scored = ladder.prep(batch, cfg.minQuality)
 
     // benchmark decontamination (eval side broadcasts)
     val decontaminated = stage("decontaminated", Decontaminate.clean(
@@ -227,7 +207,7 @@ object IncrementalIngestJob {
     // instead of paying incrementalByFingerprint's own count action.
     val exactDeduped = stage("exact_deduped",
       Dedup.incrementalByFingerprint(state.fingerprints, decontaminated,
-        expectedItems = Some(ledger.last._2)))
+        expectedItems = Some(ladder.lastCount)))
 
     // near dedup, two verdicts: (a) the banded probe of the signature
     // index at `minMatches` agreement (corpus wins); (b) within-batch
@@ -302,7 +282,7 @@ object IncrementalIngestJob {
         state.centroids, newKept,
         state.simhashPrints.map(_.unionByName(
           delta.simhashPrints.get))),
-      ledger.toList)
+      ladder.ledger)
   }
 
   /** The per-batch state DELTA [[run]] appends: index rows built from
@@ -329,13 +309,24 @@ object IncrementalIngestJob {
             col("cluster")))
       case _ => None
     }
-    State(
-      survivors.select(TextFns.fingerprint(col("text"))
-        .as("fingerprint")),
-      Dedup.minhashSignatures(survivors, cfg.minhashK, cfg.shingleN),
-      state.centroids,
-      deltaKept,
-      state.simhashPrints.map(_ => survivors.select(col("doc_id"),
-        TextFns.simhash64(col("text")).as("simhash"))))
+    deriveState(survivors, cfg, state.simhashPrints.isDefined)
+      .copy(centroids = state.centroids, keptEmbeddings = deltaKept)
   }
+
+  /** The index tables of a doc frame (doc_id, text) whose text is
+    * already prepped ([[Ladder.prepText]]; a batch's survivors are):
+    * the fingerprint set, the signature index at `cfg.minhashK` /
+    * `cfg.shingleN`, and with `simhash` the SimHash prints. The
+    * semantic pair is trained, not derived, so it is left empty.
+    * Applied to an empty frame this is the day-0 state, shaped to the
+    * configured signature width (the first append needs
+    * sig_0..sig_{minhashK-1}: the probe requires them and unionByName
+    * rejects a width mismatch). */
+  def deriveState(prepped: DataFrame, cfg: Config,
+                  simhash: Boolean = false): State =
+    State(
+      prepped.select(TextFns.fingerprint(col("text")).as("fingerprint")),
+      Dedup.minhashSignatures(prepped, cfg.minhashK, cfg.shingleN),
+      simhashPrints = Option.when(simhash)(prepped.select(col("doc_id"),
+        TextFns.simhash64(col("text")).as("simhash"))))
 }

@@ -1,8 +1,9 @@
 package graft.ml
 
+import org.apache.spark.ml.Transformer
 import org.apache.spark.ml.classification.RandomForestClassificationModel
 import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{Indicators, WindowFns}
 
@@ -16,45 +17,38 @@ import graft.functions.{Indicators, WindowFns}
 object Predict {
 
   def apply(model: RandomForestClassificationModel, features: DataFrame,
-            modelVersion: String): DataFrame = {
-    val latest = WindowFns.latestPerKey(features, Seq("user_id"),
-      col("date"))
-    val scored = model.transform(Train.assembler.transform(latest))
-    val probs = vector_to_array(col("probability"))
-    scored.select(
-      col("user_id"),
-      col("date").as("as_of_date"),
-      Indicators.nextTradingDay(col("date")).as("prediction_date"),
-      FeatureEngineering.classOf(col("prediction"))
-        .as("predicted_class"),
-      round(array_max(probs), 4).as("confidence"),
-      round(probs.getItem(0), 4).as("prob_low"),
-      round(probs.getItem(1), 4).as("prob_medium"),
-      round(probs.getItem(2), 4).as("prob_high"),
-      lit(modelVersion).as("model_version"))
-  }
+            modelVersion: String): DataFrame =
+    score(model, features, modelVersion,
+      Some(vector_to_array(col("probability"))))
 
   /** Same output contract for classifiers that expose no calibrated
     * probability vector (the one-vs-rest GBT mapping of the reference's
     * xgboost choice): confidence and per-class probabilities are
     * explicitly null rather than fabricated. */
-  def withoutProbabilities(model: org.apache.spark.ml.Transformer,
-                           features: DataFrame,
-                           modelVersion: String): DataFrame = {
+  def withoutProbabilities(model: Transformer, features: DataFrame,
+                           modelVersion: String): DataFrame =
+    score(model, features, modelVersion, None)
+
+  /** Latest row per key, assembled and scored; `probs` is the class
+    * probability array, None for null probability columns. */
+  private def score(model: Transformer, features: DataFrame,
+                    modelVersion: String,
+                    probs: Option[Column]): DataFrame = {
     val latest = WindowFns.latestPerKey(features, Seq("user_id"),
       col("date"))
     val scored = model.transform(Train.assembler.transform(latest))
-    val nullProb = lit(null).cast("double")
+    def r4(f: Column => Column): Column =
+      probs.fold(lit(null).cast("double"))(p => round(f(p), 4))
     scored.select(
       col("user_id"),
       col("date").as("as_of_date"),
       Indicators.nextTradingDay(col("date")).as("prediction_date"),
       FeatureEngineering.classOf(col("prediction"))
         .as("predicted_class"),
-      nullProb.as("confidence"),
-      nullProb.as("prob_low"),
-      nullProb.as("prob_medium"),
-      nullProb.as("prob_high"),
+      r4(array_max).as("confidence"),
+      r4(_.getItem(0)).as("prob_low"),
+      r4(_.getItem(1)).as("prob_medium"),
+      r4(_.getItem(2)).as("prob_high"),
       lit(modelVersion).as("model_version"))
   }
 }

@@ -353,19 +353,15 @@ object Dedup {
     * Scale rationale (measured): enumerating candidate PAIRS is
     * quadratic in duplicate-cluster size — a corpus where each doc has
     * 32 copies produced millions of true pairs and 160 s of runtime at
-    * 160k docs, while labeling stays linear. Label-propagation rounds
-    * (bucket-min + id-min + pointer jump, see [[pointerJump]]) run
-    * UNTIL CONVERGED — a fixed round count silently under-merges any
-    * dup-cluster chain longer than its hop budget (correct-looking
-    * output, quietly incomplete; the sf0.01 fixture's sliding near-dup
-    * chain needs 5 jumping rounds where the old fixed-2 under-merged).
-    * Convergence is one changed-label count per round over the
-    * checkpointed label frames; the jump makes rounds O(log diameter),
-    * so `maxIterations` = 16 covers any component a real corpus can
-    * produce. Batch-sized inputs (banded rows ≤ `smallCutoff`) skip
-    * the loop for exact driver union-find — identical labels, one
-    * roundtrip (the incremental-ingest latency path; see
-    * [[labelPropagate]]). */
+    * 160k docs, while labeling stays linear. The bucket graph enters
+    * [[labelPropagate]] as STAR edges — each banded doc links to its
+    * bucket's minimum id, one edge per banded row instead of a
+    * bucket's all-pairs — so components (and their min-id labels) are
+    * the shared-bucket graph's, with its converged loop, pointer jump
+    * and small-graph union-find fast path (`maxIterations`,
+    * `smallCutoff`). Ids come from the signature frame, so a doc with
+    * no band bucket (null signatures: null, empty or single-token
+    * text) labels itself. */
   def minhashDedupGroups(docs: DataFrame, k: Int = 8, bands: Int = 4,
                          n: Int = 2, maxIterations: Int = 16,
                          textCol: String = "text",
@@ -375,63 +371,25 @@ object Dedup {
     require(k % bands == 0, "k must be divisible by bands")
     val r = k / bands
     val sigs = minhashSignatures(docs, k, n, textCol, idCol)
-    // null buckets (shingle-less docs) never band: they stay singletons.
-    // banded is read ~3× per round (two joins + the convergence count):
-    // materialize once instead of re-running the minhash scan each pass
+    // null buckets (shingle-less docs) never band. banded feeds both
+    // halves of labelPropagate's symmetric edge list: materialize once
+    // instead of re-running the minhash scan
     val banded = sigs.select(col(idCol).as("id"),
       explode(array((0 until bands).map(b =>
         bandBucket(lit(b.toString), (b * r until (b + 1) * r)
           .map(i => col(s"sig_$i")))): _*)).as("bucket"))
       .filter(col("bucket").isNotNull)
       .localCheckpoint()
-    // small-batch fast path (see [[labelPropagate]]): under the cutoff,
-    // components of the bipartite doc-bucket graph come from exact
-    // driver union-find (ids sharing a bucket union through the
-    // bucket's first-seen id) in one roundtrip — identical labels to
-    // the converged loop, none of its per-round scheduling overhead.
-    val labels: DataFrame = if (smallCutoff > 0 &&
-        banded.count() <= smallCutoff &&
-        banded.schema("id").dataType ==
-          org.apache.spark.sql.types.LongType) {
-      val firstSeen = scala.collection.mutable.HashMap.empty[String, Long]
-      val pairs = banded.collect().iterator.flatMap { row =>
-        val id = row.getLong(0)
-        val bucket = row.getString(1)
-        firstSeen.get(bucket) match {
-          case Some(first) => Iterator((first, id))
-          case None => firstSeen(bucket) = id; Iterator((id, id))
-        }
-      }
-      val spark = docs.sparkSession
-      import spark.implicits._
-      unionFindMinLabels(pairs).toSeq.toDF("id", "canonical")
-    } else {
-      var lbl = banded.select(col("id")).distinct()
-        .withColumn("canonical", col("id")) // self-label start
-        .localCheckpoint()
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIterations) {
-        val hop = banded
-          .join(banded.join(lbl, Seq("id"))
-            .groupBy(col("bucket")).agg(min(col("canonical")).as("bmin")),
-            Seq("bucket"))
-          .groupBy(col("id")).agg(min(col("bmin")).as("canonical"))
-        val next = pointerJump(hop).localCheckpoint()
-        converged = labelsChanged(next, lbl) == 0
-        freeCheckpointed(lbl) // superseded round — drop its blocks now
-        lbl = next
-        iter += 1
-      }
-      lbl
-    }
+    val edges = banded
+      .withColumn("id_a", min(col("id")).over(
+        Window.partitionBy(col("bucket"))))
+      .where(col("id_a") =!= col("id"))
+      .select(col("id_a"), col("id").as("id_b"))
+    // labelPropagate materializes its edge list before returning
+    val labels = labelPropagate(sigs.select(col(idCol).as("id")), edges,
+      maxIterations, smallCutoff)
     freeCheckpointed(banded)
-    // singleton pass-through: docs that produced no band bucket
-    val singletons = sigs.select(col(idCol).as("id"))
-      .join(labels.select(col("id")), Seq("id"), "left_anti")
-      .withColumn("canonical", col("id"))
-    labels.unionByName(singletons)
-      .select(col("id").as(idCol), col("canonical"))
+    labels.select(col("id").as(idCol), col("canonical"))
   }
 
   /** Changed-label count between consecutive propagation rounds — the
@@ -734,8 +692,7 @@ object Dedup {
     * O(log diameter), not O(diameter)) plus one changed-label count —
     * linear in edges, never materializing a component; label frames are
     * localCheckpoint-materialized per round so the iterative lineage
-    * never deepens. (The minhash variant propagates through bucket
-    * memberships instead.) */
+    * never deepens. */
   def labelPropagate(ids: DataFrame, edges: DataFrame,
                      maxIterations: Int = 16,
                      smallCutoff: Long = defaultSmallCutoff): DataFrame = {
@@ -795,11 +752,12 @@ object Dedup {
     labels
   }
 
-  /** Row-count bound under which the component loops switch to exact
-    * driver-side union-find. 500k (id, key) rows ≈ tens of MB on the
-    * driver — trivially safe — while a corpus-sized rebuild (e.g. the
-    * 32× ScaleCheck's 160k docs × 4 bands = 640k banded rows) stays on
-    * the distributed loop. Both paths produce the identical
+  /** Bound on the symmetric edge rows under which [[labelPropagate]]
+    * switches to exact driver-side union-find. 500k (id, id) rows ≈
+    * tens of MB on the driver — trivially safe — while a corpus-sized
+    * rebuild (e.g. the 32× ScaleCheck's 160k docs × 4 bands = 640k
+    * banded rows, over a million symmetric star edges) stays on the
+    * distributed loop. Both paths produce the identical
     * component-min labels (spec-pinned); the cutoff trades one driver
     * roundtrip against ~4 jobs × O(log diameter) rounds of scheduling
     * overhead, which dominate batch-sized graphs. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{Indicators, TextFns, WindowFns}
+import graft.functions.ExactRound.fixed4
 
 /** The reference's stock-pipeline shapes, bound to the `events` fixture.
   *
@@ -19,6 +20,17 @@ import graft.functions.{Indicators, TextFns, WindowFns}
   * so they co-partition with it.
   */
 object EventSeries {
+
+  /** Σ `v` over the rows where `cond` holds, as a long. */
+  private def csum(cond: Column, v: Column): Column =
+    sum(when(cond, v).otherwise(lit(0L))).cast("long")
+
+  /** A displayed mean s/(n·10⁴) of a scaled-4dp sum column `s` over
+    * count column `n`. It lands on decimal ties, so it rounds through
+    * the signed bridge ([[graft.functions.ExactRound.signedRatio]]). */
+  private def mean4(s: String, n: String): Column =
+    graft.functions.ExactRound.signedRatio(col(s), col(n), 0)
+      .divide(lit(10000.0))
 
   /** Per-(user_id, date) OHLCV-like bar from the raw event stream.
     * open/close are arg-min/arg-max by event_id — event ids are assigned in
@@ -665,8 +677,7 @@ object EventSeries {
     * one √ per correlation. Market means are bridge-exact integers
     * broadcast back; the lag alignment is one window pass. */
   def leadLag(staged: DataFrame, minN: Int = 20): DataFrame = {
-    val x4 = (col("pct_change").cast("decimal(14,4)") * 10000)
-      .cast("long")
+    val x4 = fixed4(col("pct_change"))
     val src = staged.where(col("pct_change").isNotNull)
       .select(col("user_id"), col("date"), x4.as("x"))
     val mkt = src.groupBy(col("date"))
@@ -761,8 +772,7 @@ object EventSeries {
     * `turnover = 1 − |overlap|/k` between consecutive weeks — the
     * rebalancing-cost driver. Bounded week×k tables, one lag join. */
   def portfolioTurnover(staged: DataFrame, k: Int = 10): DataFrame = {
-    val x4 = (col("pct_change").cast("decimal(14,4)") * 10000)
-      .cast("long")
+    val x4 = fixed4(col("pct_change"))
     val monthly = staged.where(col("pct_change").isNotNull)
       .groupBy(date_trunc("week", col("date")).as("m"),
         col("user_id"))
@@ -798,8 +808,7 @@ object EventSeries {
     * aggregate. */
   def informationRatio(staged: DataFrame, minN: Int = 20,
                        periodsPerYear: Int = 252): DataFrame = {
-    val x4 = (col("pct_change").cast("decimal(14,4)") * 10000)
-      .cast("long")
+    val x4 = fixed4(col("pct_change"))
     val src = staged.where(col("pct_change").isNotNull)
       .select(col("user_id"), col("date"), x4.as("x"))
     val mkt = src.groupBy(col("date"))
@@ -836,8 +845,7 @@ object EventSeries {
     * the points risk limits are written against. One conditional hash
     * aggregate, all bridges. */
   def tailProbs(staged: DataFrame, minDays: Int = 20): DataFrame = {
-    val x4 = (col("pct_change").cast("decimal(14,4)") * 10000)
-      .cast("long")
+    val x4 = fixed4(col("pct_change"))
     val src = staged.where(col("pct_change").isNotNull)
       .select(col("user_id"), x4.as("x"))
     def le(t: Long) =
@@ -860,7 +868,7 @@ object EventSeries {
     * return vs buy-and-hold. Deterministic first-trigger via one
     * min-date aggregate; returns through signed bridges. */
   def stopLossBacktest(bars: DataFrame, stopPct: Int = 5): DataFrame = {
-    val c4 = (col("close").cast("decimal(14,4)") * 10000).cast("long")
+    val c4 = fixed4(col("close"))
     val w = Window.partitionBy(col("user_id")).orderBy(col("date"))
     val withEntry = bars
       .withColumn("c4", c4)
@@ -988,8 +996,7 @@ object EventSeries {
     * accumulation is order-free and the only doubles are the final
     * exp/round. Starts at 100. One bounded date-frame window. */
   def marketIndex(staged: DataFrame): DataFrame = {
-    val x4 = (col("pct_change").cast("decimal(14,4)") * 10000)
-      .cast("long")
+    val x4 = fixed4(col("pct_change"))
     val mkt = staged.where(col("pct_change").isNotNull)
       .select(col("date"), x4.as("x"))
       .groupBy(col("date"))
@@ -1181,7 +1188,7 @@ object EventSeries {
     * window + one hash aggregate. */
   def forecastErrors(staged: DataFrame, season: Int = 7,
                      minDays: Int = 20): DataFrame = {
-    val c4 = (col("close").cast("decimal(14,4)") * 10000).cast("long")
+    val c4 = fixed4(col("close"))
     val w = WindowFns.series(col("user_id"), col("date"))
     val src = staged.select(col("user_id"), col("date"), c4.as("c"))
       .withColumn("e1", abs(col("c") - lag(col("c"), 1).over(w)))
@@ -1212,8 +1219,7 @@ object EventSeries {
     * bridge-rounded to an exact 4dp scaled long and broadcast back;
     * the final ratios divide two deterministic doubles. */
   def captureRatios(staged: DataFrame, minEach: Int = 5): DataFrame = {
-    val x4 = (col("pct_change").cast("decimal(14,4)") * 10000)
-      .cast("long")
+    val x4 = fixed4(col("pct_change"))
     val src = staged.where(col("pct_change").isNotNull)
       .select(col("user_id"), col("date"), x4.as("x"))
     // equal-weight market return per date, itself bridge-rounded to a
@@ -1244,8 +1250,6 @@ object EventSeries {
       .select(col("date"), col("m4"), col("_med"))
     val j = src.join(broadcast(mkt), Seq("date"))
     val up = col("m4") > col("_med")
-    def csum(cond: Column, v: Column) =
-      sum(when(cond, v).otherwise(lit(0L))).cast("long")
     val g = j.groupBy(col("user_id"))
       .agg(csum(up, lit(1L)).as("nu"), csum(up, col("x")).as("su"),
         csum(up, col("m4")).as("mu"),
@@ -1298,8 +1302,7 @@ object EventSeries {
     * the stale share — a flatlined feed reads here before it poisons
     * downstream indicators. One window pass + one hash agg. */
   def priceStaleness(staged: DataFrame, minDays: Int = 5): DataFrame = {
-    val x4 = (col("price_change").cast("decimal(14,4)") * 10000)
-      .cast("long")
+    val x4 = fixed4(col("price_change"))
     val w = WindowFns.series(col("user_id"), col("date"))
     val src = staged.where(col("price_change").isNotNull)
       .select(col("user_id"), col("date"),
@@ -1330,7 +1333,7 @@ object EventSeries {
     * drawdown DEPTH. One unbounded struct-max window on the series
     * key; all-integer day arithmetic. */
   def timeUnderwater(bars: DataFrame): DataFrame = {
-    val c4 = (col("close").cast("decimal(14,4)") * 10000).cast("long")
+    val c4 = fixed4(col("close"))
     val w = WindowFns.series(col("user_id"), col("date"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val peak = max(struct(col("_c4").as("c"), col("date").as("d")))
@@ -1351,7 +1354,7 @@ object EventSeries {
     * clustering audit — synthetic or truncated feeds overshoot it).
     * Pure integer mod arithmetic on 4dp cents + exact bridges. */
   def roundNumberBias(bars: DataFrame, minDays: Int = 5): DataFrame = {
-    val c4 = (col("close").cast("decimal(14,4)") * 10000).cast("long")
+    val c4 = fixed4(col("close"))
     bars.withColumn("_c4", c4)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).cast("long").as("n_days"),
@@ -1374,8 +1377,7 @@ object EventSeries {
     * final √. The pair join is quadratic in each key's OWN series
     * length (bounded by the eval window), never across keys. */
   def kendallTau(staged: DataFrame, minDays: Int = 20): DataFrame = {
-    val y4 = (abs(col("pct_change")).cast("decimal(14,4)") * 10000)
-      .cast("long")
+    val y4 = fixed4(abs(col("pct_change")))
     val src = staged.where(col("pct_change").isNotNull)
       .select(col("user_id"), col("date"),
         col("volume").cast("long").as("x"), y4.as("y"))
@@ -1411,8 +1413,7 @@ object EventSeries {
     * all (the omnibus complement of the q234 weekend pair test). Two
     * bounded hash aggregates on the key. */
   def dowAnova(staged: DataFrame, minN: Int = 20): DataFrame = {
-    val x4 = (col("pct_change").cast("decimal(14,4)") * 10000)
-      .cast("long")
+    val x4 = fixed4(col("pct_change"))
     val dow = graft.functions.Indicators.dayOfWeekMon0(col("date"))
       .cast("long")
     val src = staged.where(col("pct_change").isNotNull)
@@ -1449,8 +1450,7 @@ object EventSeries {
     * one hash aggregate, all-integer until two bridges. */
   def extremeClustering(staged: DataFrame, thresholdPct: Double = 5.0,
                         minExt: Int = 3): DataFrame = {
-    val x4 = (col("pct_change").cast("decimal(14,4)") * 10000)
-      .cast("long")
+    val x4 = fixed4(col("pct_change"))
     val t4 = math.round(thresholdPct * 10000)
     val w = WindowFns.series(col("user_id"), col("date"))
     val src = staged.where(col("pct_change").isNotNull)
@@ -1540,7 +1540,7 @@ object EventSeries {
     * `−ln2/ln(1+β)` for keys in the mean-reverting band −1<β<0.
     * One window + one hash aggregate. */
   def meanReversion(staged: DataFrame, minDays: Int = 20): DataFrame = {
-    val c4 = (col("close").cast("decimal(14,4)") * 10000).cast("long")
+    val c4 = fixed4(col("close"))
     val w = Window.partitionBy(col("user_id")).orderBy(col("date"))
     val src = staged.select(col("user_id"), col("date"), c4.as("c"))
       .withColumn("xl", lag(col("c"), 1).over(w))
@@ -1782,10 +1782,8 @@ object EventSeries {
     // price_change is 4dp — lift to scaled longs so the co-moment is
     // EXACT integer arithmetic (float covar_pop's agg-order noise
     // lands on rounding boundaries at volume)
-    def s4(c: org.apache.spark.sql.Column) =
-      (c.cast("decimal(14,4)") * 10000).cast("long")
     val src = staged.where(col("price_change").isNotNull)
-      .withColumn("x4", s4(col("price_change")))
+      .withColumn("x4", fixed4(col("price_change")))
       .withColumn("y4", lag(col("x4"), 1).over(w))
       .where(col("y4").isNotNull)
     val g = src.groupBy(col("user_id"))
@@ -1811,8 +1809,7 @@ object EventSeries {
     // OLS moments are exact; only the final divisions are doubles
     val src = staged.where(col("price_change").isNotNull)
       .select(col("user_id"), col("volume").cast("long").as("x"),
-        (abs(col("price_change")).cast("decimal(14,4)") * 10000)
-          .cast("long").as("y4"))
+        fixed4(abs(col("price_change"))).as("y4"))
     val g = src.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"),
         sum(col("x")).cast("long").as("sx"),
@@ -1839,15 +1836,11 @@ object EventSeries {
     * variances are EXACT integers until the final deterministic
     * doubles. One conditional aggregate per key. */
   def weekendEffect(staged: DataFrame, minEach: Int = 2): DataFrame = {
-    val x4 = (col("pct_change").cast("decimal(14,4)") * 10000)
-      .cast("long")
+    val x4 = fixed4(col("pct_change"))
     val isW = (graft.functions.Indicators.dayOfWeekMon0(col("date"))
       >= 5).cast("long")
     val src = staged.where(col("pct_change").isNotNull)
       .select(col("user_id"), x4.as("x"), isW.as("w"))
-    def csum(cond: org.apache.spark.sql.Column,
-             v: org.apache.spark.sql.Column) =
-      sum(when(cond, v).otherwise(lit(0L))).cast("long")
     val g = src.groupBy(col("user_id"))
       .agg(csum(col("w") === 1, lit(1L)).as("nw"),
         csum(col("w") === 1, col("x")).as("sw"),
@@ -1869,11 +1862,6 @@ object EventSeries {
     val t = (mean("sw", "nw") - mean("sd", "nd")) /
       sqrt(vr("qw", "sw", "nw") / col("nw") +
         vr("qd", "sd", "nd") / col("nd"))
-    // the DISPLAYED means are s/(n·10⁴) — the decimal-tie class — so
-    // they round through the signed bridge; t keeps the raw doubles
-    def mean4(s: String, n: String) =
-      graft.functions.ExactRound.signedRatio(col(s), col(n), 0)
-        .divide(lit(10000.0))
     g.select(col("user_id"), col("nw").as("n_weekend"),
       col("nd").as("n_weekday"),
       mean4("sw", "nw").as("mean_weekend"),
@@ -2301,11 +2289,9 @@ object EventSeries {
   def seasonalStrength(bars: DataFrame): DataFrame = {
     val dec = seasonalDecompose(bars)
       .where(col("residual").isNotNull)
-    def s4(c: org.apache.spark.sql.Column) =
-      (c.cast("decimal(14,4)") * 10000).cast("long")
     val lifted = dec.select(col("user_id"),
-      s4(col("close") - col("trend")).as("d4"),
-      s4(col("residual")).as("r4"))
+      fixed4(col("close") - col("trend")).as("d4"),
+      fixed4(col("residual")).as("r4"))
     val g = lifted.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"),
         sum(col("d4")).cast("long").as("sd"),
@@ -2437,8 +2423,7 @@ object EventSeries {
     * One per-key sort window + one hash aggregate. */
   def varEs(staged: DataFrame, tailPct: Int = 5,
             minDays: Int = 20): DataFrame = {
-    val x4 = (col("pct_change").cast("decimal(14,4)") * 10000)
-      .cast("long")
+    val x4 = fixed4(col("pct_change"))
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("x").asc, col("date").asc)
     val ranked = staged.where(col("pct_change").isNotNull)
@@ -2473,8 +2458,7 @@ object EventSeries {
     * hash aggregate. */
   def skewKurt(staged: DataFrame, minDays: Int = 10,
                clampPct: Int = 100): DataFrame = {
-    val x4 = (col("pct_change").cast("decimal(14,4)") * 10000)
-      .cast("long")
+    val x4 = fixed4(col("pct_change"))
     val c = clampPct * 10000L
     val src = staged.where(col("pct_change").isNotNull)
       .select(col("user_id"),
@@ -2580,7 +2564,7 @@ object EventSeries {
   def calendarMean(bars: DataFrame, days: Int = 7): DataFrame = {
     val epd = datediff(col("date"), lit("1970-01-01").cast("date"))
       .cast("long")
-    val c4 = (col("close").cast("decimal(14,4)") * 10000).cast("long")
+    val c4 = fixed4(col("close"))
     val w = Window.partitionBy(col("user_id")).orderBy(col("_epd"))
       .rangeBetween(-(days - 1L), Window.currentRow)
     bars.withColumn("_epd", epd).withColumn("_c4", c4)
@@ -2628,9 +2612,9 @@ object EventSeries {
     * the classic money-flow cumsum is engine-portable (a doji bar
     * H=L contributes 0 by convention). One window pass. */
   def adLine(bars: DataFrame): DataFrame = {
-    def p4(c: org.apache.spark.sql.Column) = (c.cast("decimal(14,4)") * 10000).cast("long")
-    val num4 = p4(col("close")) * 2 - p4(col("high")) - p4(col("low"))
-    val den4 = p4(col("high")) - p4(col("low"))
+    val num4 = fixed4(col("close")) * 2 - fixed4(col("high")) -
+      fixed4(col("low"))
+    val den4 = fixed4(col("high")) - fixed4(col("low"))
     val mag = call_function("div",
       abs(num4) * 2000000L + den4, den4 * 2)
     val clv6 = when(den4 === 0, lit(0L))
@@ -2649,8 +2633,7 @@ object EventSeries {
     * `period` frame, with gains/losses as 4dp scaled longs — the
     * whole oscillator is one exact signed bridge per row. */
   def chandeMomentum(staged: DataFrame, period: Int = 14): DataFrame = {
-    val d4 = (col("price_change").cast("decimal(14,4)") * 10000)
-      .cast("long")
+    val d4 = fixed4(col("price_change"))
     val w = WindowFns.series(col("user_id"), col("date"))
     val f = w.rowsBetween(-(period - 1L), Window.currentRow)
     val src = staged
@@ -2670,9 +2653,8 @@ object EventSeries {
     * exact 4dp scaled longs — up/down day counts, the signed-bridge
     * mean gap, and the extreme gaps. One window + one hash agg. */
   def gapStats(bars: DataFrame, minDays: Int = 5): DataFrame = {
-    def p4(c: org.apache.spark.sql.Column) = (c.cast("decimal(14,4)") * 10000).cast("long")
     val w = WindowFns.series(col("user_id"), col("date"))
-    val gap4 = p4(col("open")) - lag(p4(col("close")), 1).over(w)
+    val gap4 = fixed4(col("open")) - lag(fixed4(col("close")), 1).over(w)
     bars.withColumn("gap4", gap4)
       .where(col("gap4").isNotNull)
       .groupBy(col("user_id"))
@@ -2699,8 +2681,7 @@ object EventSeries {
     * (key × month) partition + one conditional aggregate. */
   def tomEffect(staged: DataFrame, edge: Int = 3,
                 minEach: Int = 2): DataFrame = {
-    val x4 = (col("pct_change").cast("decimal(14,4)") * 10000)
-      .cast("long")
+    val x4 = fixed4(col("pct_change"))
     val month = date_trunc("month", col("date"))
     val wa = Window.partitionBy(col("user_id"), month)
       .orderBy(col("date").asc)
@@ -2721,9 +2702,6 @@ object EventSeries {
         sum(when(col("tom") === 0, col("x")).otherwise(0L))
           .cast("long").as("s_mid"))
       .where(col("n_tom") >= minEach && col("n_mid") >= minEach)
-    def mean4(s: String, n: String) =
-      graft.functions.ExactRound.signedRatio(col(s), col(n), 0)
-        .divide(lit(10000.0))
     g.select(col("user_id"), col("n_tom"), col("n_mid"),
       mean4("s_tom", "n_tom").as("mean_tom"),
       mean4("s_mid", "n_mid").as("mean_mid"))
@@ -2736,8 +2714,7 @@ object EventSeries {
     * moments `2n₊n₋(2n₊n₋−n)/(n²(n−1))` (sqrt is the only double).
     * One window + one hash aggregate on the shared series key. */
   def runsTest(staged: DataFrame, minEach: Int = 2): DataFrame = {
-    val x4 = (col("pct_change").cast("decimal(14,4)") * 10000)
-      .cast("long")
+    val x4 = fixed4(col("pct_change"))
     val signs = staged.where(col("pct_change").isNotNull)
       .select(col("user_id"), col("date"), x4.as("x"))
       .where(col("x") =!= 0)
@@ -2773,8 +2750,7 @@ object EventSeries {
     * engine-portable integer arithmetic end to end. One map + one
     * hash aggregate. */
   def amihud(staged: DataFrame, minDays: Int = 5): DataFrame = {
-    val y4 = (abs(col("pct_change")).cast("decimal(14,4)") * 10000)
-      .cast("long")
+    val y4 = fixed4(abs(col("pct_change")))
     val src = staged.where(col("pct_change").isNotNull)
       .select(col("user_id"), y4.as("y"),
         col("volume").cast("long").as("v"))

@@ -531,8 +531,8 @@ object TextQueries {
     // does length predict quality? per-source Pearson of (n_chars,
     // 4dp quality) on exact HUGEINT moments
     "q319_len_quality_corr" -> ((s, d) => {
-      val q4 = (TextFns.qualityScore(col("text"))
-        .cast("decimal(14,4)") * 10000).cast("long")
+      val q4 = graft.functions.ExactRound.fixed4(
+        TextFns.qualityScore(col("text")))
       val src = Tables.documents(s, d)
         .select(col("source"), col("n_chars").cast("long").as("x"),
           q4.as("y"))
@@ -572,8 +572,8 @@ object TextQueries {
     "q303_source_quality_drift" -> ((s, d) => {
       val ext = Tables.documents(s, d)
         .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
-      val q4 = (TextFns.qualityScore(col("text"))
-        .cast("decimal(14,4)") * 10000).cast("long")
+      val q4 = graft.functions.ExactRound.fixed4(
+        TextFns.qualityScore(col("text")))
       val half = when(col("doc_id") * 2 <= col("lo") + col("hi"),
         lit(1L)).otherwise(lit(2L))
       Tables.documents(s, d).crossJoin(broadcast(ext))
@@ -1959,41 +1959,8 @@ object TextQueries {
     // stage is independently hash-anchored (q99/q74/q29/q69/q31/q346/
     // q58); this row anchors their COMPOSITION — run()'s stage order,
     // filters, and survivor plumbing — which until now was only
-    // ScalaTest-pinned. State = the prepped corpus's fingerprint +
-    // signature side tables (the layout a prior rebuild persists; the
-    // state derivations themselves are anchored by q32/q33). Small
-    // k (4, 2 bands, 3-of-4 agreement) keeps the oracle's signature
-    // replay compact, the q346 convention. Output carries the prepped
-    // text's fingerprint so the transform chain is pinned, not just
-    // survivor membership.
-    "q356_ingest_funnel" -> ((s, d) => {
-      import graft.functions.TextClean
-      val docs = Tables.documents(s, d)
-      val prepped = docs.filter(col("doc_id") % 5 =!= 0)
-        .withColumn("text",
-          TextClean.scrub(TextClean.canonicalizeClasses(col("text"))))
-      val state = graft.jobs.IncrementalIngestJob.State(
-        prepped.select(TextFns.fingerprint(col("text"))
-          .as("fingerprint")),
-        Dedup.minhashSignatures(prepped, k = 4, n = 2))
-      val cfg = graft.jobs.IncrementalIngestJob.Config(
-        minQuality = 0.25, minhashK = 4, bands = 2, shingleN = 2,
-        minMatches = 3, contaminationN = 5,
-        contaminationThreshold = 0.5)
-      val (survivors, _, _) = graft.jobs.IncrementalIngestJob.run(
-        state, docs.filter(col("doc_id") % 5 === 0),
-        docs.filter(col("doc_id") < 50), cfg)
-      // run()'s cache contract: the survivor frame is still cached —
-      // materialize the small gate rows eagerly, then release it (a
-      // leak here compounds one cached frame per bench/gate execution)
-      val out = survivors.select(col("doc_id"), col("lang"),
-          col("source"),
-          TextFns.fingerprint(col("text")).as("fingerprint"))
-        .orderBy(col("doc_id"))
-        .localCheckpoint(true)
-      survivors.unpersist()
-      out
-    }),
+    // ScalaTest-pinned. State and config: [[ingestGate]].
+    "q356_ingest_funnel" -> ((s, d) => ingestGate(s, d)._1),
 
     // empirical JL distortion: per-pair projected/original distance
     // ratio over the bounded audit sample — the dimensionality-
@@ -2027,34 +1994,8 @@ object TextQueries {
     // no embeddings here — q348 anchors the semantic stage). Oracle =
     // the q356 composition + the q358 print replay + hamming-edge
     // reachability over the surviving batch.
-    "q361_funnel_simhash" -> ((s, d) => {
-      import graft.functions.TextClean
-      val docs = Tables.documents(s, d)
-      val prepped = docs.filter(col("doc_id") % 5 =!= 0)
-        .withColumn("text",
-          TextClean.scrub(TextClean.canonicalizeClasses(col("text"))))
-      val state = graft.jobs.IncrementalIngestJob.State(
-        prepped.select(TextFns.fingerprint(col("text"))
-          .as("fingerprint")),
-        Dedup.minhashSignatures(prepped, k = 4, n = 2),
-        simhashPrints = Some(prepped.select(col("doc_id"),
-          TextFns.simhash64(col("text")).as("simhash"))))
-      val cfg = graft.jobs.IncrementalIngestJob.Config(
-        minQuality = 0.25, minhashK = 4, bands = 2, shingleN = 2,
-        minMatches = 3, contaminationN = 5,
-        contaminationThreshold = 0.5, simhashMaxHamming = 3)
-      val (survivors, _, _) = graft.jobs.IncrementalIngestJob.run(
-        state, docs.filter(col("doc_id") % 5 === 0),
-        docs.filter(col("doc_id") < 50), cfg)
-      // same cache discipline as q356: materialize, then release
-      val out = survivors.select(col("doc_id"), col("lang"),
-          col("source"),
-          TextFns.fingerprint(col("text")).as("fingerprint"))
-        .orderBy(col("doc_id"))
-        .localCheckpoint(true)
-      survivors.unpersist()
-      out
-    }),
+    "q361_funnel_simhash" -> ((s, d) =>
+      ingestGate(s, d, simhash = true)._1),
 
     // ALL FIVE near-dup flavors in one ladder: the q361 funnel with
     // the SEMANTIC stage live too — state carries centroids +
@@ -2066,12 +2007,7 @@ object TextQueries {
     // oracle restricts them to the SimHash-stage survivors) and the
     // DuckDB replay is pure integer algebra, the q348 discipline.
     "q362_funnel_semantic" -> ((s, d) => {
-      import graft.functions.TextClean
-      val docs = Tables.documents(s, d)
       val e = Tables.embeddings(s, d)
-      val prepped = docs.filter(col("doc_id") % 5 =!= 0)
-        .withColumn("text",
-          TextClean.scrub(TextClean.canonicalizeClasses(col("text"))))
       val stateVecs = e.filter(col("vec_id") % 5 =!= 0)
       val cs = graft.operators.SemDedup.seedCentroids(stateVecs, 8)
       val keptState = graft.operators.SemDedup
@@ -2080,14 +2016,6 @@ object TextQueries {
         .join(stateVecs, Seq("vec_id"))
         .select(col("vec_id"), col("embedding"), col("cluster"))
         .localCheckpoint() // feeds the cross grid AND run()'s probe
-      val state = graft.jobs.IncrementalIngestJob.State(
-        prepped.select(TextFns.fingerprint(col("text"))
-          .as("fingerprint")),
-        Dedup.minhashSignatures(prepped, k = 4, n = 2),
-        centroids = Some(cs),
-        keptEmbeddings = Some(keptState),
-        simhashPrints = Some(prepped.select(col("doc_id"),
-          TextFns.simhash64(col("text")).as("simhash"))))
       val batchEmb = e.filter(col("vec_id") % 5 === 0)
       val base = s"${MLQueries.stageDir(d)}/q362"
       val basg = graft.operators.SemDedup.assign(batchEmb, cs)
@@ -2113,23 +2041,8 @@ object TextQueries {
           round(Similarity.cosine(col("va"), col("vb")) * 1e4)
             .cast("long").as("sim4"))
         .coalesce(1).write.mode("overwrite").parquet(s"$base/bpairs")
-      val cfg = graft.jobs.IncrementalIngestJob.Config(
-        minQuality = 0.25, minhashK = 4, bands = 2, shingleN = 2,
-        minMatches = 3, contaminationN = 5,
-        contaminationThreshold = 0.5, simhashMaxHamming = 3,
-        semDedupTau = 0.4)
-      val (survivors, _, _) = graft.jobs.IncrementalIngestJob.run(
-        state, docs.filter(col("doc_id") % 5 === 0),
-        docs.filter(col("doc_id") < 50), cfg,
-        batchEmbeddings = Some(batchEmb))
-      // same cache discipline as q356: materialize, then release
-      val out = survivors.select(col("doc_id"), col("lang"),
-          col("source"),
-          TextFns.fingerprint(col("text")).as("fingerprint"))
-        .orderBy(col("doc_id"))
-        .localCheckpoint(true)
-      survivors.unpersist()
-      out
+      ingestGate(s, d, simhash = true,
+        semantic = Some((cs, keptState, batchEmb)))._1
     }),
 
     // the q356 funnel's LEDGER as its own gate row: run() returns the
@@ -2139,24 +2052,7 @@ object TextQueries {
     // q356 so the two rows cross-check.
     "q360_funnel_ledger" -> ((s, d) => {
       import s.implicits._
-      import graft.functions.TextClean
-      val docs = Tables.documents(s, d)
-      val prepped = docs.filter(col("doc_id") % 5 =!= 0)
-        .withColumn("text",
-          TextClean.scrub(TextClean.canonicalizeClasses(col("text"))))
-      val state = graft.jobs.IncrementalIngestJob.State(
-        prepped.select(TextFns.fingerprint(col("text"))
-          .as("fingerprint")),
-        Dedup.minhashSignatures(prepped, k = 4, n = 2))
-      val cfg = graft.jobs.IncrementalIngestJob.Config(
-        minQuality = 0.25, minhashK = 4, bands = 2, shingleN = 2,
-        minMatches = 3, contaminationN = 5,
-        contaminationThreshold = 0.5)
-      val (survivors, _, ledger) = graft.jobs.IncrementalIngestJob.run(
-        state, docs.filter(col("doc_id") % 5 === 0),
-        docs.filter(col("doc_id") < 50), cfg)
-      survivors.unpersist()
-      ledger.zipWithIndex
+      ingestGate(s, d)._2.zipWithIndex
         .map { case ((stage, n), i) => (i.toLong, stage, n) }
         .toDF("stage_idx", "stage", "n_docs")
         .orderBy(col("stage_idx"))
@@ -2178,6 +2074,45 @@ object TextQueries {
       Relevance.rm3Rescore(docs, s.read.parquet(termsPath), topK = 10)
         .orderBy(col("rank"))
     }))
+
+  /** The q356/q360/q361/q362 funnel fixture: the `doc_id % 5 ≠ 0`
+    * slice, text prepped like the batch, is the persisted state (the
+    * layout a prior rebuild persists; the state derivations themselves
+    * are anchored by q32/q33); the `% 5 = 0` slice arrives as the
+    * batch; `doc_id < 50` is the eval set. Small k (4, 2 bands, 3-of-4
+    * agreement) keeps the oracle's signature replay compact, the q346
+    * convention. `simhash` adds the state's SimHash prints; `semantic`
+    * adds (centroids, kept embeddings, batch embeddings). Returns the
+    * survivors — (doc_id, lang, source, fingerprint of the prepped
+    * text, so the transform chain is pinned, not just membership),
+    * materialized — and run()'s ledger. run() returns its survivor
+    * frame still cached; it is released here (a leak would compound
+    * one cached frame per bench/gate execution). */
+  private def ingestGate(s: SparkSession, d: String,
+                         simhash: Boolean = false,
+                         semantic: Option[(Array[(Long, Array[Double])],
+                           DataFrame, DataFrame)] = None)
+      : (DataFrame, Seq[(String, Long)]) = {
+    import graft.jobs.{IncrementalIngestJob, Ladder}
+    val docs = Tables.documents(s, d)
+    val cfg = IncrementalIngestJob.Config(
+      minQuality = 0.25, minhashK = 4, bands = 2, shingleN = 2,
+      minMatches = 3, contaminationN = 5, contaminationThreshold = 0.5,
+      simhashMaxHamming = 3, semDedupTau = 0.4)
+    val state = IncrementalIngestJob.deriveState(
+      Ladder.prepText(docs.filter(col("doc_id") % 5 =!= 0)), cfg, simhash)
+    val (survivors, _, ledger) = IncrementalIngestJob.run(
+      semantic.fold(state) { case (cs, kept, _) =>
+        state.copy(centroids = Some(cs), keptEmbeddings = Some(kept)) },
+      docs.filter(col("doc_id") % 5 === 0),
+      docs.filter(col("doc_id") < 50), cfg, semantic.map(_._3))
+    val out = survivors.select(col("doc_id"), col("lang"),
+        col("source"), TextFns.fingerprint(col("text")).as("fingerprint"))
+      .orderBy(col("doc_id"))
+      .localCheckpoint(true)
+    survivors.unpersist()
+    (out, ledger)
+  }
 
   /** BM25 top-20 CTE chain (TOKS must precede; ends with `r` carrying
     * (doc_id, dl, score, rank)) — shared verbatim by the q163 oracle

@@ -49,27 +49,18 @@ object StreamingCorpusIngest {
     reader.parquet(sourceDir)
   }
 
-  /** Day-0 empty state, shaped to the CONFIGURED signature width: the
-    * empty signature index must carry sig_0..sig_{minhashK-1} or the
-    * first state append fails (k > default: a require in the probe;
-    * k < default: a unionByName column mismatch) — so cfg threads
-    * through instead of taking minhashSignatures' default k. With
-    * `withSimhash`, the bootstrap carries an EMPTY prints table so the
-    * job's SimHash stage (presence-of-state activated) runs from
-    * batch 0 and every snapshot persists the prints side table. */
-  private def bootstrapState(spark: SparkSession,
-                             cfg: IncrementalIngestJob.Config,
-                             withSimhash: Boolean)
+  /** Day-0 empty state: [[IncrementalIngestJob.deriveState]] over an
+    * empty doc frame, so it carries the CONFIGURED signature width.
+    * With `withSimhash` it carries an EMPTY prints table, so the job's
+    * SimHash stage (activated by the presence of prints in the state)
+    * runs from batch 0 and every snapshot persists the prints. */
+  private def emptyState(spark: SparkSession,
+                         cfg: IncrementalIngestJob.Config,
+                         withSimhash: Boolean)
       : IncrementalIngestJob.State = {
     import spark.implicits._
-    IncrementalIngestJob.State(
-      Seq.empty[String].toDF("fingerprint"),
-      graft.operators.Dedup.minhashSignatures(
-        Seq.empty[(Long, String)].toDF("doc_id", "text"),
-        k = cfg.minhashK, n = cfg.shingleN),
-      simhashPrints =
-        if (!withSimhash) None
-        else Some(Seq.empty[(Long, Long)].toDF("doc_id", "simhash")))
+    IncrementalIngestJob.deriveState(
+      Seq.empty[(Long, String)].toDF("doc_id", "text"), cfg, withSimhash)
   }
 
   /** The state visible to `batchId`: the latest full compact
@@ -81,8 +72,7 @@ object StreamingCorpusIngest {
     * error). */
   private def latestStateBefore(spark: SparkSession, stateDir: String,
                                 batchId: Long): Option[IncrementalIngestJob.State] = {
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, root) = Tables.fileSystem(spark, stateDir)
     def ids(prefix: String): Seq[Long] =
       if (!fs.exists(root)) Seq.empty
       else fs.listStatus(root).toSeq
@@ -110,17 +100,14 @@ object StreamingCorpusIngest {
     readDocs(spark, sourceDir, maxFilesPerTrigger).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (batchId == 0L) {
-          // same FileSystem-resolution rule as latestStateBefore: the
-          // target/state dirs may live on any Hadoop-supported scheme
+          // the target/state dirs may live on any Hadoop scheme
           Seq(targetDir, stateDir).foreach { d =>
-            val p = new org.apache.hadoop.fs.Path(d)
-            val fs = p.getFileSystem(
-              spark.sparkContext.hadoopConfiguration)
-            if (fs.exists(p)) fs.delete(p, true)
+            val (fs, p) = Tables.fileSystem(spark, d)
+            fs.delete(p, true)
           }
         }
         val loaded = latestStateBefore(spark, stateDir, batchId)
-          .getOrElse(bootstrapState(spark, cfg, withSimhash))
+          .getOrElse(emptyState(spark, cfg, withSimhash))
         // restart-over-older-state guard: snapshots written by a run
         // started with withSimhash=false carry no prints table, and the
         // presence-of-state-activated SimHash stage would silently turn
@@ -132,9 +119,8 @@ object StreamingCorpusIngest {
             System.err.println(s"[ingest] batch $batchId: loaded state " +
               "has no simhash_prints but withSimhash=true — injecting " +
               "an empty prints table so the SimHash stage stays active")
-            import spark.implicits._
             loaded.copy(simhashPrints =
-              Some(Seq.empty[(Long, Long)].toDF("doc_id", "simhash")))
+              emptyState(spark, cfg, withSimhash).simhashPrints)
           } else loaded
         val (survivors, next, _) =
           IncrementalIngestJob.run(prev, batch, evalSet, cfg)

@@ -66,9 +66,10 @@ object StreamingIngest {
                       maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
     readEvents(spark, sourceDir, maxFilesPerTrigger).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId == 0L)
-          org.apache.commons.io.FileUtils.deleteQuietly(
-            new java.io.File(targetDir))
+        if (batchId == 0L) {
+          val (fs, p) = Tables.fileSystem(spark, targetDir)
+          fs.delete(p, true)
+        }
         EventSeries.dailyBarPartials(batch).write
           .mode("overwrite").parquet(s"$targetDir/batch_id=$batchId")
       }

@@ -169,6 +169,39 @@ class DedupSpec extends SparkSuite {
     assert(fastM == distM)
   }
 
+  test("minhashDedupGroups on sf0.01 docs plus shingle-less docs: the " +
+    "union-find path and the distributed loop give equal labels, each " +
+    "its component's minimum id") {
+    val sf = Tables.documents(spark, "/root/testdata/sf0.01")
+      .select("doc_id", "text")
+    val top = sf.agg(max("doc_id")).head().getLong(0)
+    val shingleLess = Seq((top + 1, null.asInstanceOf[String]),
+      (top + 2, ""), (top + 3, "solo")).toDF("doc_id", "text")
+    val corpus = sf.unionByName(shingleLess)
+    val fast = Dedup.minhashDedupGroups(corpus)
+      .as[(Long, Long)].collect().toMap
+    val dist = Dedup.minhashDedupGroups(corpus, smallCutoff = 0)
+      .as[(Long, Long)].collect().toMap
+    assert(fast == dist)
+    // components of the shared-bucket graph, from its candidate pairs;
+    // union puts the larger root under the smaller, so a root is its
+    // component's minimum id
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    Dedup.minhashLshPairs(corpus).select("id_a", "id_b")
+      .as[(Long, Long)].collect().foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+    val ids = corpus.select("doc_id").as[Long].collect()
+    assert(fast == ids.map(id => id -> find(id)).toMap)
+    assert(fast.exists { case (id, c) => id != c }) // some dups merged
+    (1 to 3).foreach(i => assert(fast(top + i) == top + i))
+  }
+
   test("ngramJaccardPairs maxDf drops corpus-frequent shingles so hot " +
     "posting lists stay bounded") {
     // every doc shares token "common"; only docs 1/2 share rare tokens

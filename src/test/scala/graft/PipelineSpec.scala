@@ -72,6 +72,30 @@ class PipelineSpec extends SparkSuite {
     assert(bars2.except(expected).count() == 0)
   }
 
+  test("streaming ingest into a file: URI target: batch 0 of a fresh " +
+    "checkpoint clears a stale batch partition before it writes") {
+    val target = new java.io.File(
+      Files.createTempDirectory("graft_stream_uri").toFile, "bars").toURI
+      .toString
+    assert(target.startsWith("file:"))
+    // an earlier run's partition: readDailyBars would merge its partials
+    EventSeries.dailyBarPartials(events).write
+      .parquet(s"$target/batch_id=7")
+    val srcDir = Files.createTempDirectory("graft_stream_uri_src")
+    val tmp = Files.createTempDirectory("graft_stream_uri_tmp").toString
+    events.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    Files.copy(part.toPath, srcDir.resolve("all.parquet"))
+    StreamingIngest.ingestDailyBars(spark, srcDir.toString, target,
+      Files.createTempDirectory("graft_stream_uri_cp").toString)
+      .awaitTermination()
+    val bars = StreamingIngest.readDailyBars(spark, target)
+    val expected = EventSeries.dailyBars(events)
+    assert(bars.exceptAll(expected).isEmpty)
+    assert(expected.exceptAll(bars).isEmpty)
+  }
+
   test("streaming sessionize (flatMapGroupsWithState) closes exactly " +
     "the batch operator's sessions, leaving at most one open tail per " +
     "user") {

@@ -240,4 +240,39 @@ class StreamingCorpusIngestSpec extends SparkSuite {
       Seq(compact, compact))
     assert(same.sigIndex.count() == 2 * docs.count())
   }
+
+  test("deriveState at minhashK = 4 carries sig_0..sig_3 and equals the " +
+    "hand-built q356 gate state; over an empty frame it is the day-0 " +
+    "state at that width") {
+    import graft.functions.{TextClean, TextFns}
+    val corpus = Tables.documents(spark, "/root/testdata/sf0.001")
+      .filter(col("doc_id") % 5 =!= 0)
+    val cfg = IncrementalIngestJob.Config(minhashK = 4, bands = 2,
+      minMatches = 3)
+    val sigCols = "doc_id" +: (0 until 4).map(i => s"sig_$i")
+    // the q356 state as the gate spelled it out by hand
+    val prepped = corpus.withColumn("text",
+      TextClean.scrub(TextClean.canonicalizeClasses(col("text"))))
+    val handFps = prepped.select(TextFns.fingerprint(col("text"))
+      .as("fingerprint"))
+    val handSigs = graft.operators.Dedup.minhashSignatures(prepped,
+      k = 4, n = 2)
+    val st = IncrementalIngestJob.deriveState(
+      graft.jobs.Ladder.prepText(corpus), cfg)
+    assert(st.sigIndex.columns.toSeq == sigCols)
+    assert(handSigs.count() > 0)
+    def same(a: org.apache.spark.sql.DataFrame,
+             b: org.apache.spark.sql.DataFrame) =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    assert(same(st.fingerprints, handFps))
+    assert(same(st.sigIndex, handSigs))
+    assert(st.simhashPrints.isEmpty && st.centroids.isEmpty &&
+      st.keptEmbeddings.isEmpty)
+    val empty = IncrementalIngestJob.deriveState(
+      Seq.empty[(Long, String)].toDF("doc_id", "text"), cfg,
+      simhash = true)
+    assert(empty.sigIndex.columns.toSeq == sigCols)
+    assert(empty.fingerprints.isEmpty && empty.sigIndex.isEmpty &&
+      empty.simhashPrints.exists(_.isEmpty))
+  }
 }
