@@ -593,8 +593,8 @@ private[graft] object ScaleCheck {
             .rowsBetween(Window.unboundedPreceding, Window.currentRow))))
       }
       time("prefix_scan_distributed", nd) {
-        sink(graft.operators.BudgetSelect.distributedPrefixSum(scored,
-          Seq(col("q").desc, col("doc_id").asc), col("v"), "cum"))
+        sink(graft.operators.Ranks.prefixSums(scored,
+          Seq(col("q").desc, col("doc_id").asc), Seq("cum" -> col("v"))))
       }
       scored.unpersist()
     }

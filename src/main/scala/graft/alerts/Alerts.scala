@@ -293,13 +293,6 @@ object Alerts {
       .filter(url => sender.post(url, teamsSuccess(ctx))).map(_ => "teams")
     slack ++ pd ++ teams
   }
-
-  /** SLA-miss fan-out (Slack-only in the reference, alerts.py:148). */
-  def notifySlaMiss(sender: WebhookSender, cfg: Config, pipelineId: String,
-                    lateTasks: Seq[String]): Seq[String] =
-    cfg.slackUrl.toSeq
-      .filter(url => sender.post(url, slackSlaMiss(pipelineId, lateTasks)))
-      .map(_ => "slack")
 }
 
 /** Delivery seam. Payload building is pure; everything effectful crosses

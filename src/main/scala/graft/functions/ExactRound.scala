@@ -48,7 +48,13 @@ object ExactRound {
     * scheme exists to fix. */
   def signedRatio(num: Column, den: Column, dp: Int): Column = {
     val p = math.pow(10, dp).toLong
+    signedScaled(num, den, dp).cast("double") / p
+  }
+
+  /** The scaled long behind [[signedRatio]]: round(num/den · 10^dp)
+    * half away from zero, for signed `num` and den > 0. */
+  def signedScaled(num: Column, den: Column, dp: Int): Column = {
     val mag = scaled(abs(num), den, dp)
-    (when(num < 0, -mag).otherwise(mag)).cast("double") / p
+    when(num < 0, -mag).otherwise(mag)
   }
 }

@@ -696,115 +696,6 @@ object MediaCodecs {
     bytes.length >= pos + 4 &&
       new String(bytes, pos, 4, "US-ASCII") == id
 
-  // ------------------------------------------------------------------ AVI
-
-  /** Wrap per-frame JPEG payloads in a real RIFF AVI container with an
-    * MJPG video stream (LIST hdrl with avih + strl, LIST movi with
-    * `00dc` chunks, trailing idx1) — the simplest genuinely-JVM-
-    * decodable video container: each frame is an independent baseline
-    * JPEG, so [[decodeAviMjpeg]] + ImageIO gives real frame extraction
-    * with no native codec. */
-  def encodeAviMjpeg(width: Int, height: Int, fps: Int,
-                     frames: Seq[Array[Byte]]): Array[Byte] = {
-    require(width > 0 && height > 0 && fps > 0 && frames.nonEmpty,
-      "need positive dims/fps and at least one frame")
-    def le32(v: Int): Array[Byte] =
-      ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN).putInt(v).array()
-    def fourcc(s: String): Array[Byte] = s.getBytes("US-ASCII")
-    def chunk(id: String, data: Array[Byte]): Array[Byte] = {
-      val pad = if ((data.length & 1) == 1) Array[Byte](0)
-        else Array.emptyByteArray
-      fourcc(id) ++ le32(data.length) ++ data ++ pad
-    }
-    def list(typ: String, data: Array[Byte]): Array[Byte] =
-      chunk("LIST", fourcc(typ) ++ data)
-    val maxBytes = frames.map(_.length).max
-    val avih = ByteBuffer.allocate(56).order(ByteOrder.LITTLE_ENDIAN)
-    avih.putInt(1000000 / fps) // dwMicroSecPerFrame
-      .putInt(maxBytes * fps)  // dwMaxBytesPerSec
-      .putInt(0)               // dwPaddingGranularity
-      .putInt(0x10)            // dwFlags: AVIF_HASINDEX
-      .putInt(frames.length)   // dwTotalFrames
-      .putInt(0).putInt(1)     // dwInitialFrames, dwStreams
-      .putInt(maxBytes)        // dwSuggestedBufferSize
-      .putInt(width).putInt(height)
-      .putInt(0).putInt(0).putInt(0).putInt(0) // dwReserved
-    val strh = ByteBuffer.allocate(56).order(ByteOrder.LITTLE_ENDIAN)
-    strh.put(fourcc("vids")).put(fourcc("MJPG"))
-      .putInt(0).putShort(0).putShort(0) // flags, priority, language
-      .putInt(0)                         // initial frames
-      .putInt(1).putInt(fps)             // scale, rate → fps
-      .putInt(0).putInt(frames.length)   // start, length
-      .putInt(maxBytes).putInt(-1).putInt(0) // bufSize, quality, sampleSize
-      .putShort(0).putShort(0)
-      .putShort(width.toShort).putShort(height.toShort) // rcFrame
-    val strf = ByteBuffer.allocate(40).order(ByteOrder.LITTLE_ENDIAN)
-    strf.putInt(40).putInt(width).putInt(height)
-      .putShort(1).putShort(24)  // planes, bitcount
-      .put(fourcc("MJPG"))       // biCompression
-      .putInt(width * height * 3).putInt(0).putInt(0).putInt(0).putInt(0)
-    val hdrl = list("hdrl", chunk("avih", avih.array()) ++
-      list("strl", chunk("strh", strh.array()) ++
-        chunk("strf", strf.array())))
-    val moviChunks = frames.map(f => chunk("00dc", f))
-    val movi = list("movi", moviChunks.flatten.toArray)
-    // idx1: one entry per frame, offsets relative to the movi list type
-    val idxEntries = new ByteArrayOutputStream()
-    var off = 4 // past the "movi" type fourcc
-    frames.zip(moviChunks).foreach { case (f, ck) =>
-      idxEntries.write(fourcc("00dc")); idxEntries.write(le32(0x10))
-      idxEntries.write(le32(off)); idxEntries.write(le32(f.length))
-      off += ck.length
-    }
-    val body = fourcc("AVI ") ++ hdrl ++ movi ++
-      chunk("idx1", idxEntries.toByteArray)
-    fourcc("RIFF") ++ le32(body.length) ++ body
-  }
-
-  /** Walk a RIFF AVI container and extract (width, height, per-frame
-    * JPEG payloads) from the MJPG video stream — the `00dc`/`00dd`
-    * chunks inside LIST movi, located by id like the WAV walk (never
-    * by fixed offset). None for non-AVI bytes, truncation, size
-    * overflow, or a container with no frames; individual frame bytes
-    * are returned undecoded (pair with ImageIO for pixels), so a
-    * corrupt FRAME quarantines at decode, not at the container walk. */
-  def decodeAviMjpeg(bytes: Array[Byte])
-      : Option[(Int, Int, Seq[Array[Byte]])] = {
-    if (bytes.length < 12) return None
-    val b = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    if (!chunkId(bytes, 0, "RIFF") || !chunkId(bytes, 8, "AVI ")) return None
-    var w = -1; var h = -1
-    val frames = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-    // video-data chunk ids are '<NN>dc'/'<NN>dd' (stream number prefix)
-    def frameChunk(pos: Int): Boolean =
-      bytes(pos) >= '0' && bytes(pos) <= '9' &&
-        bytes(pos + 1) >= '0' && bytes(pos + 1) <= '9' &&
-        bytes(pos + 2) == 'd'.toByte &&
-        (bytes(pos + 3) == 'c'.toByte || bytes(pos + 3) == 'd'.toByte)
-    // walk one LIST/chunk level; recurse into hdrl and movi lists
-    def walk(start: Int, end: Int): Boolean = {
-      var pos = start
-      while (pos + 8 <= end) {
-        val size = b.getInt(pos + 4)
-        if (size < 0 || pos.toLong + 8 + size > end) return false
-        if (chunkId(bytes, pos, "LIST") && size >= 4) {
-          if (!walk(pos + 12, pos + 8 + size)) return false
-        } else if (chunkId(bytes, pos, "avih")) {
-          if (size < 40) return false
-          w = b.getInt(pos + 8 + 32); h = b.getInt(pos + 8 + 36)
-        } else if (frameChunk(pos)) {
-          frames += java.util.Arrays.copyOfRange(bytes, pos + 8,
-            pos + 8 + size)
-        }
-        pos += 8 + size + (size & 1)
-      }
-      true
-    }
-    if (!walk(12, bytes.length)) return None
-    if (w <= 0 || h <= 0 || frames.isEmpty) return None
-    Some((w, h, frames.toSeq))
-  }
-
   // ------------------------------------------------------------------ GIF
 
   /** One animation frame: sub-rectangle position within the logical

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextFns
 
@@ -11,7 +10,7 @@ import graft.functions.TextFns
   *
   * The naive formulation is `SUM(tokens) OVER (ORDER BY quality DESC,
   * doc_id)` — a single-partition window, i.e. the whole corpus through
-  * one task. [[distributedPrefixSum]] instead computes the classic
+  * one task. [[Ranks.prefixSums]] instead computes the classic
   * two-phase parallel scan:
   *
   *   1. assign each row a range-bucket id that is MONOTONE along the
@@ -28,21 +27,6 @@ import graft.functions.TextFns
   */
 object BudgetSelect {
 
-  /** Adds `cumCol` = running sum of `valueCol` over the TOTAL order
-    * given by `order` (which must be tie-free), without a global
-    * single-partition window. Delegates to [[Ranks.prefixSums]] —
-    * whose range-bucket id is a pure row function (construction-time
-    * quantile literals), unlike this object's original
-    * `repartitionByRange` + `spark_partition_id()` formulation, where
-    * the offsets subtree and the running-sum subtree were separate
-    * executions whose SAMPLED range boundaries could legally disagree
-    * (observed under AQE in r13 as off-by-a-few global ranks). */
-  def distributedPrefixSum(df: DataFrame, order: Seq[Column],
-                           valueCol: Column, cumCol: String,
-                           numPartitions: Int = 0): DataFrame =
-    Ranks.prefixSums(df, order, Seq(cumCol -> valueCol),
-      numPartitions = numPartitions)
-
   /** Greedy budget selection over `documents`: score with
     * [[TextFns.qualityScore]] (4dp-exact), order by (quality DESC,
     * doc_id), keep while the inclusive cumulative token count fits.
@@ -54,9 +38,9 @@ object BudgetSelect {
       col("doc_id"),
       TextFns.qualityScore(col("text")).as("quality"),
       TextFns.tokenCount(col("text")).cast("long").as("n_tokens"))
-    distributedPrefixSum(scored,
+    Ranks.prefixSums(scored,
       Seq(col("quality").desc, col("doc_id").asc),
-      col("n_tokens"), "cum_tokens")
+      Seq("cum_tokens" -> col("n_tokens")))
       .where(col("cum_tokens") <= tokenBudget)
       .select(col("doc_id"), col("quality"), col("n_tokens"),
         col("cum_tokens"))

@@ -170,16 +170,9 @@ object Decontaminate {
           greatest(col("n_tokens"), lit(1L)), 6).as("flagged_ratio"))
   }
 
-  /** The span-removal corpus: every doc survives with its matched spans
-    * cut out (tokens re-joined by single spaces in `textCol`; original
-    * whitespace is not preserved — the Lee et al. cut is token-level). */
-  def exactSubstrClean(corpus: DataFrame, benchmark: DataFrame,
-                       minTokens: Int = 10, textCol: String = "text",
-                       idCol: String = "doc_id"): DataFrame =
-    removeSpans(corpus,
-      exactSubstrSpans(corpus, benchmark, minTokens, textCol, idCol),
-      textCol, idCol)
-
+  /** Every doc survives with its matched spans cut out (tokens
+    * re-joined by single spaces in `textCol`; original whitespace is
+    * not preserved — the Lee et al. cut is token-level). */
   private def removeSpans(corpus: DataFrame, spans: DataFrame,
                           textCol: String, idCol: String): DataFrame = {
     val spanSets = spans

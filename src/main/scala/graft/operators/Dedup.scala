@@ -48,14 +48,6 @@ object Dedup {
         col("canonical_quality"), col("n_dups"))
   }
 
-  /** Fingerprint dedup: like exact but on the sorted-distinct-token
-    * fingerprint, catching reordered/duplicated-token copies. */
-  def byFingerprint(docs: DataFrame, textCol: String = "text",
-                    idCol: String = "doc_id"): DataFrame =
-    docs
-      .groupBy(TextFns.fingerprint(col(textCol)).as("fingerprint"))
-      .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("n_dups"))
-
   /** Incremental dedup — the daily-crawl shape: drop batch docs whose
     * content (exact hash or token fingerprint) already exists in the
     * corpus, then dedup within the batch itself (min-id canonical).

@@ -71,11 +71,9 @@ object Drift {
     // term = Δp(8dp-scaled) × ln(6dp) as DECIMAL — contribution·10⁸
     val term = ((pa8 - pe8).cast("decimal(12,0)") * ln6)
       .cast("decimal(28,6)")
-    def half4(su: org.apache.spark.sql.Column) = {
-      val mag = call_function("div",
-        abs(su) * 2 + lit(10000000000L), lit(20000000000L))
-      (when(su < 0, -mag).otherwise(mag)).cast("double") / 10000
-    }
+    def half4(su: org.apache.spark.sql.Column) =
+      graft.functions.ExactRound.signedScaled(su, lit(10000000000L), 0)
+        .cast("double") / 10000
     val scored = tot.withColumn("_t", term)
       .withColumn("_s", sum(col("_t")).over(all))
     scored.select(col("bin"),

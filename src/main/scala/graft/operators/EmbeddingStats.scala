@@ -42,24 +42,6 @@ object EmbeddingStats {
           .divide(lit(1000000.0)).as("c"))
   }
 
-  /** Pairwise cosine similarity between group centroids — k² rows on
-    * k groups, computed after [[groupCentroids]] collapses the corpus.
-    * Not oracle-registered (the centroid assembly into arrays is
-    * position-sensitive); EmbeddingStatsSpec pins it against a driver
-    * computation. */
-  def centroidSimilarities(df: DataFrame, groupCol: String = "label",
-                           vecCol: String = "embedding"): DataFrame = {
-    val cents = groupCentroids(df, groupCol, vecCol)
-      .groupBy(col("g"))
-      .agg(array_sort(collect_list(struct(col("i"), col("c")))).as("_p"))
-      .select(col("g"), transform(col("_p"), p => p("c")).as("vec"))
-    val a = cents.select(col("g").as("g_a"), col("vec").as("vec_a"))
-    val b = cents.select(col("g").as("g_b"), col("vec").as("vec_b"))
-    a.join(broadcast(b), col("g_a") < col("g_b"))
-      .select(col("g_a"), col("g_b"),
-        Similarity.cosine(col("vec_a"), col("vec_b")).as("sim"))
-  }
-
   /** Embedding L2-norm profile with per-label outlier flags — the
     * "corrupt/degenerate vector" data-quality check (zeroed rows,
     * unnormalized batches, encoder regressions all show up as norm

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{Indicators, TextFns, WindowFns}
-import graft.functions.ExactRound.fixed4
+import graft.functions.ExactRound.{fixed4, signedScaled}
 
 /** The reference's stock-pipeline shapes, bound to the `events` fixture.
   *
@@ -47,48 +47,6 @@ object EventSeries {
         round(max_by(col("value"), ord), 4).as("close"),
         count(lit(1)).as("volume"))
   }
-
-  /** dailyBars decomposed into associative partial aggregates: partials
-    * computed over ANY partition of the events (micro-batches, shards,
-    * backfill chunks) re-merge to exactly the batch bar. open/close carry
-    * their arg event ids so the merge keeps the global arg-min/arg-max;
-    * round(4dp) is monotone, so min/max commute with it and rounding
-    * per-partial equals rounding once at the end. */
-  def dailyBarPartials(events: DataFrame): DataFrame = {
-    val ord = col("event_id")
-    events
-      .groupBy(col("user_id"), to_date(col("ts")).as("date"))
-      .agg(
-        min(ord).as("open_eid"),
-        round(min_by(col("value"), ord), 4).as("open"),
-        round(max(col("value")), 4).as("high"),
-        round(min(col("value")), 4).as("low"),
-        max(ord).as("close_eid"),
-        round(max_by(col("value"), ord), 4).as("close"),
-        count(lit(1)).as("volume"))
-  }
-
-  /** Merge step for [[dailyBarPartials]]: one hash aggregation on the
-    * same (user_id, date) key. */
-  def mergeBarPartials(partials: DataFrame): DataFrame =
-    partials
-      .groupBy(col("user_id"), col("date"))
-      .agg(
-        min(col("open_eid")).as("open_eid"),
-        min_by(col("open"), col("open_eid")).as("open"),
-        max(col("high")).as("high"),
-        min(col("low")).as("low"),
-        max(col("close_eid")).as("close_eid"),
-        max_by(col("close"), col("close_eid")).as("close"),
-        sum(col("volume")).as("volume"))
-
-  /** Final bar schema from partials: merge, then drop the merge-state
-    * event ids. Equals dailyBars(events) when the partials cover the
-    * same events exactly once. */
-  def finalizeBars(partials: DataFrame): DataFrame =
-    mergeBarPartials(partials).select(
-      col("user_id"), col("date"), col("open"), col("high"),
-      col("low"), col("close"), col("volume"))
 
   /** Staging model: previous close / price change / pct change via LAG
     * (reference: dbt_project/models/staging/stg_stock_prices.sql:3-14). */
@@ -170,13 +128,14 @@ object EventSeries {
     * once for dailyBars, once for dailySentiment — and broadcast the
     * sentiment side back over a join. Both sides are per-(user, day)
     * reductions of the SAME events, so one per-(user, day, type)
-    * aggregate now carries the bar partials (dailyBarPartials keyed
-    * one level finer) AND the type count; the bars merge via window
-    * aggregates over the (user, day) partition (arg-min/arg-max ride
-    * min/max of (event_id, value) structs — exact, event ids are
-    * unique; round(4dp) is monotone so per-type rounding commutes
-    * with the merge), the dominant-type top-1 is a row_number in the
-    * SAME partitioning, and the join disappears. Value-identical to
+    * aggregate now carries mergeable bar partials (open/close with
+    * their arg event ids, high, low, volume) AND the type count; the
+    * bars merge via window aggregates over the (user, day) partition
+    * (arg-min/arg-max ride min/max of (event_id, value) structs —
+    * exact, event ids are unique; round(4dp) is monotone so per-type
+    * rounding commutes with the merge), the dominant-type top-1 is a
+    * row_number in the SAME partitioning, and the join disappears.
+    * Value-identical to
     * the two-scan form (R13FusedSpec pins ties, single-event days,
     * cross-type open/close; oracle re-proved). 128× A/B
     * (OPTIMIZATION_r13.md item 2, two
@@ -684,12 +643,7 @@ object EventSeries {
       .agg(count(lit(1)).cast("long").as("nm"),
         sum(col("x")).cast("long").as("sm"))
       .select(col("date"),
-        (when(col("sm") < 0,
-          -call_function("div", abs(col("sm")) * 2 + col("nm"),
-            col("nm") * 2))
-          .otherwise(call_function("div",
-            abs(col("sm")) * 2 + col("nm"), col("nm") * 2)))
-          .as("m"))
+        signedScaled(col("sm"), col("nm"), 0).as("m"))
     // unpartitioned window over the per-DATE market frame — bounded
     // by the observation span in days, never by volume (scale-audit r13)
     val wm = Window.orderBy(col("date"))
@@ -815,12 +769,7 @@ object EventSeries {
       .agg(count(lit(1)).cast("long").as("nm"),
         sum(col("x")).cast("long").as("sm"))
       .select(col("date"),
-        (when(col("sm") < 0,
-          -call_function("div", abs(col("sm")) * 2 + col("nm"),
-            col("nm") * 2))
-          .otherwise(call_function("div",
-            abs(col("sm")) * 2 + col("nm"), col("nm") * 2)))
-          .as("m"))
+        signedScaled(col("sm"), col("nm"), 0).as("m"))
     val j = src.join(broadcast(mkt), Seq("date"))
       .select(col("user_id"), (col("x") - col("m")).as("e"))
     val g = j.groupBy(col("user_id"))
@@ -1003,12 +952,7 @@ object EventSeries {
       .agg(count(lit(1)).cast("long").as("nm"),
         sum(col("x")).cast("long").as("sm"))
       .select(col("date"), col("nm"),
-        (when(col("sm") < 0,
-          -call_function("div", abs(col("sm")) * 2 + col("nm"),
-            col("nm") * 2))
-          .otherwise(call_function("div",
-            abs(col("sm")) * 2 + col("nm"), col("nm") * 2)))
-          .as("m4"))
+        signedScaled(col("sm"), col("nm"), 0).as("m4"))
     // index construction winsorizes the market move at ±10% — the
     // fixture's near-zero closes produce 10⁵%-scale "returns" that
     // would blow the level past 1e19 (and into exp-ulp territory)
@@ -1228,12 +1172,7 @@ object EventSeries {
       .agg(count(lit(1)).cast("long").as("nm"),
         sum(col("x")).cast("long").as("sm"))
       .select(col("date"),
-        (when(col("sm") < 0,
-          -call_function("div", abs(col("sm")) * 2 + col("nm"),
-            col("nm") * 2))
-          .otherwise(call_function("div",
-            abs(col("sm")) * 2 + col("nm"), col("nm") * 2)))
-          .as("m4"))
+        signedScaled(col("sm"), col("nm"), 0).as("m4"))
     // unpartitioned rank over the per-DATE market frame — span-bounded
     // (scale-audit r13)
     val wMed = Window.orderBy(col("m4").asc, col("date").asc)
@@ -2373,8 +2312,13 @@ object EventSeries {
     val r = staged.select(col("user_id"), col("date"),
         col("pct_change").as("ret"))
       .where(col("ret").isNotNull)
+    // the beta moments run on the double market mean; the emitted
+    // mkt_ret is the exact mean of the 4dp returns (the double mean
+    // carries agg-order ULP noise onto the 4dp rounding boundary)
     val market = r.groupBy(col("date"))
-      .agg(avg(col("ret")).as("mkt_ret"))
+      .agg(avg(col("ret")).as("mkt_ret"),
+        sum(fixed4(col("ret"))).cast("long").as("_sm"),
+        count(lit(1)).cast("long").as("_nm"))
     val joined = r.join(broadcast(market), Seq("date"))
     val f = WindowFns.series(col("user_id"), col("date"))
       .rowsBetween(-(period - 1), 0)
@@ -2385,8 +2329,7 @@ object EventSeries {
       .withColumn("_var", var_pop(col("mkt_ret")).over(f))
       .withColumn("_n", count(col("ret")).over(f))
       .select(col("user_id"), col("date"), col("ret"),
-        // the raw market mean carries agg-order ULP noise — emit rounded
-        round(col("mkt_ret"), 4).as("mkt_ret"),
+        mean4("_sm", "_nm").as("mkt_ret"),
         when(col("_n") >= period,
           round(col("_cov") / nullif(col("_var"), lit(0.0)), 4))
           .as("rolling_beta"))
@@ -2615,10 +2558,8 @@ object EventSeries {
     val num4 = fixed4(col("close")) * 2 - fixed4(col("high")) -
       fixed4(col("low"))
     val den4 = fixed4(col("high")) - fixed4(col("low"))
-    val mag = call_function("div",
-      abs(num4) * 2000000L + den4, den4 * 2)
     val clv6 = when(den4 === 0, lit(0L))
-      .otherwise(when(num4 < 0, -mag).otherwise(mag))
+      .otherwise(signedScaled(num4, den4, 6))
     val w = WindowFns.series(col("user_id"), col("date"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     bars.withColumn("mf6", clv6 * col("volume").cast("long"))

@@ -200,11 +200,9 @@ object ModelEval {
       .groupBy(col(key))
       .agg(max(col("n")).as("n"), sum(col("_t")).as("_s"))
     val su = (col("_s") * 1000000).cast("long") // micro-nat·count
-    val mag = call_function("div", abs(su) * 2 + col("n") * 100,
-      col("n") * 200)
     agg.select(col(key), col("n"),
-      ((when(su < 0, -mag).otherwise(mag)).cast("double") / 10000)
-        .as("mi"))
+      (graft.functions.ExactRound.signedScaled(su, col("n") * 100, 0)
+        .cast("double") / 10000).as("mi"))
   }
 
   /** Global precision-recall curve table: one row per DISTINCT score

@@ -13,11 +13,11 @@ import org.apache.spark.sql.functions._
   * [[graft.functions.MediaCodecs]] (PNG in all five 8-bit color types,
   * linear and Adam7-interlaced, tRNS transparency; 24-bit BMP; PCM-16
   * WAV; animated GIF), [[ImageIODecoder]] over the JDK's ImageIO
-  * registry for baseline JPEG pixel data, and [[frameSampleAvi]] for
-  * MJPEG-in-AVI video frame extraction (RIFF walk + per-frame JPEG
-  * decode). `decodeStub` remains only as the seam DEMO for codecs that
-  * genuinely need external libraries (modern video formats) — it
-  * derives deterministic fake dimensions from header bytes. Every
+  * registry for baseline JPEG pixel data, and [[frameSampleGif]] for
+  * animated-GIF frame extraction. `decodeStub` remains only as the
+  * seam DEMO for codecs that genuinely need external libraries
+  * (modern video formats) — it derives deterministic fake dimensions
+  * from header bytes. Every
   * decoder runs through the same [[MediaDecoder]] seam, so the
   * Spark-side contract — schema, batch iteration, partition locality,
   * null/corrupt quarantine — is identical and tested for each.
@@ -82,50 +82,6 @@ object Multimodal {
           checksum = checksum, valid = true)
       }
     }
-
-  /** REAL header parsing (not a stub): container-format dimensions read
-    * straight from the payload's magic bytes with pure column functions
-    * — no codec, no UDF, fully codegen'd, so sniffing a 100 TB media
-    * lake is one map-side projection over the first KB of each blob.
-    *
-    *   PNG:  8-byte signature, then the IHDR chunk — width/height are
-    *         big-endian u32 at offsets 17 and 21 (1-indexed).
-    *   GIF:  "GIF87a"/"GIF89a", width/height little-endian u16 at 7/9.
-    *   JPEG: no fixed offsets — the native [[graft.plans.JpegDims]]
-    *         expression walks the marker chain to the SOF header.
-    *
-    * Unknown magics (and JPEGs with truncated/corrupt headers) → null
-    * dims, format 'unknown'/'jpeg' (a real pipeline routes those to the
-    * codec path / quarantine). */
-  def imageDims(payload: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    def beU32(pos: Int) =
-      conv(hex(substring(payload, pos, 4)), 16, 10).cast("long")
-    def leU16(pos: Int) =
-      conv(concat(hex(substring(payload, pos + 1, 1)),
-        hex(substring(payload, pos, 1))), 16, 10).cast("long")
-    // Magic alone is not enough: the fixed-offset reads below need the
-    // whole fixed header present, else conv(hex(short-slice)) yields a
-    // WRONG number, not null. Guard each branch on the minimum length
-    // (PNG: sig+IHDR len/type+w+h = 24B; GIF: sig+w+h = 10B) and let
-    // truncated payloads fall through to the null-dims struct.
-    val pngMagic = hex(substring(payload, 1, 8)) === "89504E470D0A1A0A" &&
-      length(payload) >= 24
-    val gifMagic = hex(substring(payload, 1, 6)).isin(
-      "474946383761", "474946383961") && // GIF87a / GIF89a, full signature
-      length(payload) >= 10
-    val jpegMagic = hex(substring(payload, 1, 3)) === "FFD8FF"
-    val packed = graft.plans.JpegDimsFns.jpegDims(payload)
-    val nullDim = lit(null).cast("long")
-    when(pngMagic, struct(lit("png").as("format"),
-        beU32(17).as("width"), beU32(21).as("height")))
-      .when(gifMagic, struct(lit("gif").as("format"),
-        leU16(7).as("width"), leU16(9).as("height")))
-      .when(jpegMagic, struct(lit("jpeg").as("format"),
-        shiftright(packed, 16).as("width"),
-        (packed.bitwiseAND(lit(0xffffL))).as("height")))
-      .otherwise(struct(lit("unknown").as("format"),
-        nullDim.as("width"), nullDim.as("height")))
-  }
 
   /** REAL pixel decoder (not a stub): sniffs PNG (ALL five 8-bit color
     * types — grayscale, truecolor, palette, gray+alpha, RGBA) then BMP
@@ -240,48 +196,6 @@ object Multimodal {
       y += 1
     }
     s
-  }
-
-  /** REAL video-container frame sampling: walk the RIFF AVI structure
-    * ([[graft.functions.MediaCodecs.decodeAviMjpeg]]), keep every
-    * `everyK`-th MJPG frame, decode each kept frame with the pure-JVM
-    * baseline JPEG codec (each frame is an independent baseline JPEG —
-    * the whole point of MJPEG as the portable container); non-baseline
-    * frames fall back to the ImageIO seam. Lossy frames ⇒ spec-pinned
-    * like [[ImageIODecoder]]; containers or frames that fail both
-    * contribute no rows. Partition-local flatMap: linear,
-    * shuffle-free, scales with executors. */
-  def frameSampleAvi(media: DataFrame, everyK: Int = 2): DataFrame = {
-    require(everyK > 0, "everyK must be positive")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].flatMap { r =>
-      val bytes = Option(r.payload).getOrElse(Array.emptyByteArray)
-      graft.functions.MediaCodecs.decodeAviMjpeg(bytes) match {
-        case Some((_, _, frames)) =>
-          frames.iterator.zipWithIndex
-            .filter(_._2 % everyK == 0)
-            .flatMap { case (jpeg, i) =>
-              val own = graft.functions.MediaCodecs
-                .decodeJpegBaseline(jpeg)
-                .map(img => (r.doc_id, i.toLong, img.width.toLong,
-                  img.height.toLong, argbLumaSum(img.argb)))
-              own.orElse {
-                val bi =
-                  try {
-                    javax.imageio.ImageIO.setUseCache(false)
-                    Option(javax.imageio.ImageIO.read(
-                      new java.io.ByteArrayInputStream(jpeg)))
-                  } catch {
-                    case scala.util.control.NonFatal(_) => None
-                  }
-                bi.map(img => (r.doc_id, i.toLong, img.getWidth.toLong,
-                  img.getHeight.toLong, biLumaSum(img)))
-              }
-            }
-        case None => Iterator.empty
-      }
-    }.toDF("doc_id", "frame_no", "width", "height", "luma_sum")
   }
 
   /** Luma sum over packed ARGB: integer mean of R, G, B per pixel

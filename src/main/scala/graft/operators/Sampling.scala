@@ -37,7 +37,7 @@ object Sampling {
     * kept set stable across runs AND nested in `k`: capPerGroup(10) ⊂
     * capPerGroup(100) for the same group. One shuffle on the group key;
     * rank-within-group never materializes more than the group's rows on
-    * a reducer (pair with salting if a single group is genuinely hot). */
+    * a reducer. */
   def capPerGroup(df: DataFrame, groupCol: String, keyCol: String,
                   k: Int): DataFrame = {
     require(k > 0, "k must be positive")
@@ -46,30 +46,6 @@ object Sampling {
       .orderBy(hashBucket(col(keyCol)), col(keyCol))
     df.withColumn("__rk", row_number().over(w))
       .filter(col("__rk") <= k).drop("__rk")
-  }
-
-  /** Skew-safe [[capPerGroup]]: identical output, two-phase plan. A
-    * single hot group (one domain with 10% of a 100 TB crawl) makes the
-    * one-window formulation sort that whole group on one reducer; here
-    * stage 1 caps within (group, salt) — each reducer sorts at most its
-    * salt's share — and stage 2 ranks only the ≤ k·salts survivors per
-    * group. Correct because the global hash-order top-k of a group is a
-    * subset of the union of its per-salt top-k's. */
-  def capPerGroupSkewSafe(df: DataFrame, groupCol: String,
-                          keyCol: String, k: Int,
-                          salts: Int = 16): DataFrame = {
-    require(k > 0 && salts > 0, "k and salts must be positive")
-    import org.apache.spark.sql.expressions.Window
-    val order: Seq[Column] = Seq(hashBucket(col(keyCol)), col(keyCol))
-    val w1 = Window.partitionBy(col(groupCol), col("_salt"))
-      .orderBy(order: _*)
-    val w2 = Window.partitionBy(col(groupCol)).orderBy(order: _*)
-    df.withColumn("_salt", pmod(hashBucket(col(keyCol)), lit(salts)))
-      .withColumn("_rk1", row_number().over(w1))
-      .filter(col("_rk1") <= k)
-      .withColumn("_rk2", row_number().over(w2))
-      .filter(col("_rk2") <= k)
-      .drop("_salt", "_rk1", "_rk2")
   }
 
   /** Deterministic corpus mixing: keep each group at its target

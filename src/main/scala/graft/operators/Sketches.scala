@@ -14,11 +14,10 @@ import org.apache.spark.sql.functions._
   * cardinality — the only shape that survives a 100 TB distinct-URL or
   * length-distribution profile.
   *
-  * Error contracts (pinned by SketchesSpec against the exact answers):
-  * - `approxDistinct`: HyperLogLog++ relative standard deviation `rsd`
-  *   (default 2.5%; Spark caps rsd ≥ 0.4% ≈ 32KB of registers).
-  * - `approxQuantiles`: `percentile_approx(accuracy)` rank error
-  *   ≤ 1/accuracy of the row count.
+  * Error contracts: HyperLogLog++ distinct counts carry relative
+  * standard deviation `rsd` (Spark caps rsd ≥ 0.4% ≈ 32KB of
+  * registers); `percentile_approx(accuracy)` has rank error
+  * ≤ 1/accuracy of the row count.
   *
   * The SQL-surface twin for EXACT distinct/percentile profiling already
   * exists (q03/q63); these are the drop-in approximate replacements, so
@@ -26,24 +25,6 @@ import org.apache.spark.sql.functions._
   * oracle would pin two engines' sketch internals, not semantics).
   */
 object Sketches {
-
-  /** Per-group HLL++ distinct-count profile of `valueCol`. */
-  def distinctProfile(df: DataFrame, groupCols: Seq[String],
-                      valueCol: String, rsd: Double = 0.025): DataFrame =
-    df.groupBy(groupCols.map(col): _*)
-      .agg(approx_count_distinct(col(valueCol), rsd)
-        .as(s"approx_distinct_$valueCol"))
-
-  /** Per-group approximate quantiles of `valueCol` at the given
-    * probabilities; rank error ≤ n/accuracy. */
-  def quantileProfile(df: DataFrame, groupCols: Seq[String],
-                      valueCol: String, probs: Seq[Double],
-                      accuracy: Int = 10000): DataFrame = {
-    val pArr = array(probs.map(lit): _*)
-    df.groupBy(groupCols.map(col): _*)
-      .agg(percentile_approx(col(valueCol), pArr, lit(accuracy))
-        .as(s"approx_q_$valueCol"))
-  }
 
   /** One-pass corpus profile: distinct sketches + quantile summaries for
     * several columns in a single aggregation (one shuffle total).

@@ -3,13 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Skew mitigation for hot keys at cluster scale.
-  *
-  * A plain `groupBy(key).agg(...)` sends every row of a hot key to one
-  * reducer. Salting splits each key across `salt` reducers with a
-  * deterministic per-row salt, aggregates partially, then merges the
-  * partials — two small shuffles instead of one skewed one. AQE's skew
-  * handling covers joins; aggregation skew still needs this. */
+/** Skew handling for hot keys at cluster scale: an explicit-width
+  * repartition for high-fan-out self-joins, and a per-key skew profile
+  * that shows whether a join key is hot before the join runs. */
 object SkewTools {
 
   /** Repartition on join keys with the session's shuffle parallelism
@@ -27,54 +23,12 @@ object SkewTools {
     df.repartition(
       df.sparkSession.sessionState.conf.numShufflePartitions, keys: _*)
 
-  /** Salted two-phase sum/count/min/max aggregation.
-    * Result is identical to `df.groupBy(keys).agg(sum/count/min/max)` —
-    * these aggregates are associative, so partial-then-merge is exact. */
-  def saltedAgg(df: DataFrame, keys: Seq[String], valueCol: String,
-                salt: Int = 16): DataFrame = {
-    val keyCols = keys.map(col)
-    // deterministic row-level salt: cheap hash of the value column —
-    // spreads a hot key's rows without requiring a random source
-    val partial = df
-      .withColumn("_salt",
-        pmod(xxhash64(col(valueCol)), lit(salt)))
-      .groupBy(keyCols :+ col("_salt"): _*)
-      .agg(sum(col(valueCol)).as("_sum"), count(lit(1)).as("_n"),
-        min(col(valueCol)).as("_min"), max(col(valueCol)).as("_max"))
-    partial
-      .groupBy(keyCols: _*)
-      .agg(sum(col("_sum")).as(s"sum_$valueCol"),
-        sum(col("_n")).as("n"),
-        min(col("_min")).as(s"min_$valueCol"),
-        max(col("_max")).as(s"max_$valueCol"))
-  }
-
-  /** Salted broadcast-side replication for a skewed join: explode the
-    * small side `salt` times and salt the big side's key, so a hot join
-    * key fans across `salt` tasks. Exact same join result. */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-                 salt: Int = 16): DataFrame = {
-    val saltedBig = big.withColumn("_salt",
-      pmod(xxhash64(monotonicallyIncreasingRowMarker(big)), lit(salt)))
-    val replicatedSmall = small.crossJoin(
-      small.sparkSession.range(salt).select(col("id").cast("int")
-        .as("_salt")))
-    saltedBig.join(broadcast(replicatedSmall), Seq(key, "_salt"))
-      .drop("_salt")
-  }
-
-  /** A deterministic per-row discriminator column for salting: prefers
-    * an existing unique id; callers with one should salt on it
-    * directly. Falls back to the full-row hash. */
-  private def monotonicallyIncreasingRowMarker(df: DataFrame): Column =
-    xxhash64(struct(df.columns.map(col).toIndexedSeq: _*))
-
   /** Join-key skew profile — the diagnostic that decides whether
-    * [[saltedJoin]]/AQE skew handling is needed BEFORE the join
-    * ships: per-key frequencies folded to one summary row per labeled
-    * key (n_keys, rows, hottest key and its count, the exact-disc p99
-    * frequency, and the exact skew factor max/mean =
-    * max·n_keys/rows). Two hash aggregates per key column. */
+    * AQE skew handling is needed BEFORE the join ships: per-key
+    * frequencies folded to one summary row per labeled key (n_keys,
+    * rows, hottest key and its count, the exact-disc p99 frequency,
+    * and the exact skew factor max/mean = max·n_keys/rows). Two hash
+    * aggregates per key column. */
   def keySkewProfile(labeled: Seq[(String, DataFrame, String)])
       : DataFrame = {
     val parts = labeled.map { case (label, df, keyCol) =>

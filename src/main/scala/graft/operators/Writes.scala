@@ -83,28 +83,21 @@ object Writes {
     * by the key anti-join, exactly like [[upsert]]; at warehouse scale
     * this is the engine-agnostic core of `MERGE WHEN MATCHED [AND
     * op='D'] THEN DELETE`. */
-  /** The ONE deterministic change-ordering both CDC folds use: seq,
-    * then op ('U' above 'D' on an exact tie, nulls last), then the
-    * value struct — a (key, seq, op)-tied feed must still pick the
-    * same row on every run or replays stop being no-ops. Shared so
-    * [[applyCdc]] and [[cdcCompact]] cannot drift apart. */
-  private def latestChangeWindow(columns: Seq[String], keys: Seq[String],
-                                 opCol: String, seqCol: String) = {
-    import org.apache.spark.sql.expressions.Window
-    val tieCols = columns.filterNot(c =>
-      keys.contains(c) || c == opCol || c == seqCol)
-    val tie = if (tieCols.isEmpty) lit(0)
-              else struct(tieCols.map(col).toIndexedSeq: _*)
-    Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(seqCol).desc, col(opCol).desc_nulls_last, tie.desc)
-  }
-
   def applyCdc(existing: DataFrame, changes: DataFrame,
                keys: Seq[String], opCol: String = "op",
                seqCol: String = "seq"): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val keyCols = keys.map(col)
-    val w = latestChangeWindow(changes.columns.toIndexedSeq, keys,
-      opCol, seqCol)
+    // deterministic change order: seq, then op ('U' above 'D' on an
+    // exact tie, nulls last), then the value struct — a (key, seq,
+    // op)-tied feed must still pick the same row on every run or
+    // replays stop being no-ops
+    val tieCols = changes.columns.toIndexedSeq.filterNot(c =>
+      keys.contains(c) || c == opCol || c == seqCol)
+    val tie = if (tieCols.isEmpty) lit(0)
+              else struct(tieCols.map(col): _*)
+    val w = Window.partitionBy(keyCols: _*)
+      .orderBy(col(seqCol).desc, col(opCol).desc_nulls_last, tie.desc)
     val latest = changes
       .withColumn("_rk", row_number().over(w))
       .filter(col("_rk") === 1).drop("_rk")
@@ -117,36 +110,6 @@ object Writes {
       .join(latest.select(keyCols: _*), keys, "left_anti")
       .unionByName(upserts)
   }
-
-  /** Compacted CDC state fold — the streaming-safe sibling of
-    * [[applyCdc]]: both `state` and `changes` carry (`seqCol`, `opCol`),
-    * and the fold keeps the HIGHEST-seq record per key, RETAINING
-    * delete records as tombstones (the Kafka-compacted-topic model).
-    * Tombstones are what make the fold safe under arbitrary batch
-    * splits: a stale update arriving in a later batch compares against
-    * the stored tombstone's seq and loses, where [[applyCdc]] (which
-    * physically removes rows) would resurrect the key. Keeping max-seq
-    * per key is associative, so folding a feed in any batching equals
-    * folding it at once — the property the streaming wrapper's
-    * equivalence test pins. Read the live view with [[cdcLiveView]].
-    * Ties (same key+seq) resolve deterministically and consistently
-    * with [[applyCdc]]: 'U' sorts above 'D' (update wins an exact
-    * seq tie), then the value struct. */
-  def cdcCompact(state: DataFrame, changes: DataFrame,
-                 keys: Seq[String], opCol: String = "op",
-                 seqCol: String = "seq"): DataFrame = {
-    val w = latestChangeWindow(state.columns.toIndexedSeq, keys,
-      opCol, seqCol)
-    state.unionByName(changes.select(
-        state.columns.map(col).toIndexedSeq: _*))
-      .withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") === 1).drop("_rk")
-  }
-
-  /** The visible rows of a [[cdcCompact]] state: everything that is not
-    * a tombstone. */
-  def cdcLiveView(state: DataFrame, opCol: String = "op"): DataFrame =
-    state.filter(!(col(opCol) <=> "D"))
 
   /** Snapshot diff — the REVERSE of [[applyCdc]]: given two versions of
     * a table, derive the change set between them. One row per key

@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * boundary, a general Jackson tokenization, and an InternalRow
   * allocation just to lift one integer out; this expression is a
   * single allocation-free structural scan over the UTF-8 bytes living
-  * inside the generated code (static-helper pattern, see [[JpegDims]])
+  * inside the generated code (static-helper pattern, see [[ZValue2]])
   * — measured against the from_json twin at 32× scale in BASELINE.md
   * round 4.
   *

@@ -279,10 +279,6 @@ object SeriesQueries {
         .orderBy(col("user_id"), col("date"))
     }),
 
-    // gap-based sessionization: LAG → break flag → running sum →
-    // per-session aggregates; epoch-micro bounds + decimal value sum
-    // keep it oracle-exact. The streaming twin (flatMapGroupsWithState,
-    // graft.streaming.Sessionize) is equivalence-tested in PipelineSpec.
     // SCD2 dimension history from the event change stream: upserts
     // become validity intervals, 'error' events play deletes (they
     // close the predecessor and emit nothing). Interval bounds as
@@ -3357,15 +3353,21 @@ object SeriesQueries {
                   AS DOUBLE) / 10000 AS new_share
          FROM g ORDER BY 1""",
 
-    // q214: same mkt frame as q145, covar/var over the trailing frame
+    // q214: same mkt frame as q145, covar/var over the trailing frame;
+    // the emitted mkt_ret is the bridge-exact mean of the 4dp returns
     "q214_rolling_beta" -> (STAGED +
       """, r AS (
             SELECT user_id, date, pct_change AS ret FROM staged
             WHERE pct_change IS NOT NULL),
-          mkt AS (SELECT date, avg(ret) AS mkt_ret FROM r GROUP BY 1),
-          j AS (SELECT r.user_id, r.date, r.ret, mkt.mkt_ret
+          mkt AS (SELECT date, avg(ret) AS mkt_ret,
+                         CAST(count(*) AS BIGINT) AS nm,
+                         CAST(sum(CAST(CAST(ret AS DECIMAL(14,4)) * 10000
+                           AS BIGINT)) AS BIGINT) AS sm
+                  FROM r GROUP BY 1),
+          j AS (SELECT r.user_id, r.date, r.ret, mkt.mkt_ret, mkt.sm,
+                       mkt.nm
                 FROM r JOIN mkt USING (date)),
-          b AS (SELECT user_id, date, ret, mkt_ret,
+          b AS (SELECT user_id, date, ret, mkt_ret, sm, nm,
                        CASE WHEN count(ret) OVER f >= 30 THEN
                          round(covar_pop(ret, mkt_ret) OVER f
                                / nullif(var_pop(mkt_ret) OVER f, 0), 4)
@@ -3373,7 +3375,10 @@ object SeriesQueries {
                 FROM j WINDOW f AS (PARTITION BY user_id ORDER BY date
                   ROWS BETWEEN 29 PRECEDING AND CURRENT ROW))
           SELECT user_id, strftime(date, '%Y-%m-%d') AS date, ret,
-                 round(mkt_ret, 4) AS mkt_ret, rolling_beta
+                 CAST(CASE WHEN sm < 0
+                   THEN -((abs(sm) * 2 + nm) // (2 * nm))
+                   ELSE (abs(sm) * 2 + nm) // (2 * nm) END
+                   AS DOUBLE) / 10000 AS mkt_ret, rolling_beta
           FROM b ORDER BY 1, 2"""),
 
     // q207: 0-prepended fold; (1e0 - 94e-2) folds to the same double

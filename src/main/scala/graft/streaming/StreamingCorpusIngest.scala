@@ -8,9 +8,8 @@ import graft.jobs.IncrementalIngestJob
 /** Structured Streaming framing of the incremental corpus ingest: an
   * `availableNow` file stream over a documents drop directory, with
   * each micro-batch running the [[IncrementalIngestJob]] ladder
-  * against persisted state via foreachBatch (the same reasoning as
-  * [[StreamingIngest]]: the contract is a set operation against
-  * persisted state, not an event-time window).
+  * against persisted state via foreachBatch (the contract is a set
+  * operation against persisted state, not an event-time window).
   *
   * Idempotency under at-least-once foreachBatch: state is persisted
   * as PER-BATCH DELTAS (`stateDir/delta_<id>`, just that batch's
@@ -19,8 +18,7 @@ import graft.jobs.IncrementalIngestJob
   * N always loads the latest compact with id < N unioned with every
   * delta in between — so a REPLAYED batch reloads the exact state it
   * saw the first time and rewrites an identical delta
-  * (write-by-batch-id overwrite, the
-  * [[StreamingIngest.ingestDailyBars]] discipline). Folding survivors
+  * (write-by-batch-id overwrite). Folding survivors
   * into one running state dir instead would lose the replayed batch's
   * rows: after the state absorbed them, a replay would dedup them all
   * away and overwrite the partition with nothing. Batch 0 clears the

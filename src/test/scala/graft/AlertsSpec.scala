@@ -114,9 +114,6 @@ class AlertsSpec extends SparkSuite {
     val none = new WebhookSender.Recording
     assert(Alerts.notifyFailure(none, Config(), ctx).isEmpty)
     assert(none.posts.isEmpty)
-
-    assert(Alerts.notifySlaMiss(sender, cfg, "daily_etl", Seq("t1")) ==
-      Seq("slack"))
   }
 
   test("Config.fromEnv reads the reference env keys, skipping empties") {

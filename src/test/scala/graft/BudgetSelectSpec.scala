@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.BudgetSelect
+import graft.operators.{BudgetSelect, Ranks}
 
 /** Distributed prefix scan: exact agreement with the naive
   * single-partition global window, on data spread across many input
@@ -10,15 +10,15 @@ import graft.operators.BudgetSelect
 class BudgetSelectSpec extends SparkSuite {
   import spark.implicits._
 
-  test("distributedPrefixSum equals the global-window cumsum") {
+  test("Ranks.prefixSums equals the global-window cumsum") {
     // keys deliberately collide on `grp` so range boundaries land
     // inside runs of equal first-order keys; id breaks ties
     val df = spark.range(0, 1000).repartition(13)
       .select(col("id"),
         (col("id") % 7).as("grp"),
         ((col("id") * 37) % 101 + 1).as("v"))
-    val dist = BudgetSelect.distributedPrefixSum(df,
-      Seq(col("grp").desc, col("id").asc), col("v"), "cum",
+    val dist = Ranks.prefixSums(df,
+      Seq(col("grp").desc, col("id").asc), Seq("cum" -> col("v")),
       numPartitions = 8)
     val naive = df.withColumn("cum",
       sum(col("v")).over(Window.orderBy(col("grp").desc, col("id").asc)

@@ -72,8 +72,7 @@ class DecontaminateSpec extends SparkSuite {
       (201L, 0L, 15L)))
   }
 
-  test("exactSubstrStats zero-pads clean docs; exactSubstrClean removes " +
-    "exactly the span tokens and leaves clean docs byte-identical") {
+  test("exactSubstrStats zero-pads clean docs and counts span tokens") {
     val benchDf = Seq((1L, abc.mkString(" "))).toDF("doc_id", "text")
     val corpusDf = Seq(
       (100L, "x1 x2 " + abc.take(10).mkString(" ") + " y1 y2"),
@@ -85,12 +84,6 @@ class DecontaminateSpec extends SparkSuite {
     assert(stats(100L) == ((100L, 14L, 1L, 10L, math.rint(10.0 / 14 *
       1e6) / 1e6)))
     assert(stats(101L) == ((101L, 5L, 0L, 0L, 0.0)))
-
-    val cleaned = Decontaminate.exactSubstrClean(corpusDf, benchDf,
-        minTokens = 6)
-      .select($"doc_id", $"text").as[(Long, String)].collect().toMap
-    assert(cleaned(100L) == "x1 x2 y1 y2")
-    assert(cleaned(101L) == "completely unrelated text tokens only")
   }
 
   test("exact-substring probe keeps the broadcast shape: corpus grams " +

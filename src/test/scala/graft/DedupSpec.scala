@@ -22,15 +22,6 @@ class DedupSpec extends SparkSuite {
     assert(out.toSeq == Seq((1L, 2L), (3L, 1L), (4L, 1L), (5L, 1L)))
   }
 
-  test("fingerprint dedup additionally folds token-reordered copies") {
-    // doc 5 is a reorder/repeat of a vocab subset — different fingerprint;
-    // docs 1/2 identical fingerprints
-    val fps = Dedup.byFingerprint(docs)
-    assert(fps.count() == 4)
-    assert(fps.filter(col("n_dups") === 2).select("canonical_id")
-      .as[Long].collect().toSeq == Seq(1L))
-  }
-
   test("minhash LSH surfaces the exact and near duplicates, not the " +
     "unrelated pair") {
     val pairs = Dedup.minhashLshPairs(docs, k = 8, bands = 4, n = 2)

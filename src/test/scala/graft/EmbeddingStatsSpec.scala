@@ -25,18 +25,6 @@ class EmbeddingStatsSpec extends SparkSuite {
     assert(got.size == 9)
   }
 
-  test("centroidSimilarities: cosine between label centroids matches " +
-    "a driver computation") {
-    val got = EmbeddingStats.centroidSimilarities(vecs)
-      .select("g_a", "g_b", "sim").as[(Int, Int, Double)].collect()
-      .map(r => (r._1, r._2) -> r._3).toMap
-    // centroid(0)=(2,2,1), centroid(1)=(0,2,0): cos = 4/(3*2) = 0.6667
-    assert(math.abs(got((0, 1)) - 0.6667) < 1e-9)
-    // centroid(2)=(-1,0,0) vs centroid(0): cos = -2/3 = -0.6667
-    assert(math.abs(got((0, 2)) - (-0.6667)) < 1e-9)
-    assert(got.size == 3)
-  }
-
   test("centroid aggregate is partial (map-side combine), not a " +
     "row-per-element shuffle") {
     val plan = EmbeddingStats.groupCentroids(vecs)

@@ -667,55 +667,6 @@ class MediaCodecsSpec extends SparkSuite {
     assert(!got(3L).valid && !got(4L).valid)
   }
 
-  test("MJPEG-AVI container round trips: RIFF walk recovers every " +
-    "frame's JPEG bytes exactly; frameSampleAvi decodes sampled " +
-    "frames through the plan; corrupt containers quarantine") {
-    def jpegFrame(seed: Int, w: Int, h: Int): Array[Byte] = {
-      val bi = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-      for (y <- 0 until h; x <- 0 until w)
-        bi.setRGB(x, y, ((seed + x * 8) % 256) << 16 |
-          ((seed + y * 8) % 256) << 8 | (seed % 256))
-      val out = new java.io.ByteArrayOutputStream()
-      assert(javax.imageio.ImageIO.write(bi, "jpg", out))
-      out.toByteArray
-    }
-    // odd-length JPEG payloads exercise the RIFF even-byte padding
-    val frames = (0 until 5).map(f => jpegFrame(40 * f + 17, 32, 24))
-    val avi = MediaCodecs.encodeAviMjpeg(32, 24, fps = 10, frames)
-    // container walk returns the EXACT frame bytes (MJPEG is stored,
-    // not re-encoded — byte equality, not pixel-approximate)
-    val back = MediaCodecs.decodeAviMjpeg(avi)
-    assert(back.isDefined)
-    assert(back.get._1 == 32 && back.get._2 == 24)
-    assert(back.get._3.size == 5)
-    back.get._3.zip(frames).foreach { case (got, want) =>
-      assert(got.sameElements(want))
-    }
-    // quarantine: bad magic, truncation, crafted negative chunk size
-    assert(MediaCodecs.decodeAviMjpeg("RIFFxxxxWAVE".getBytes).isEmpty)
-    assert(MediaCodecs.decodeAviMjpeg(avi.take(avi.length / 2)).isEmpty)
-    val crafted = avi.clone()
-    java.nio.ByteBuffer.wrap(crafted)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      .putInt(16, Int.MaxValue - 3) // hdrl LIST size → overflow probe
-    assert(MediaCodecs.decodeAviMjpeg(crafted).isEmpty)
-
-    // through the plan: every 2nd frame (0, 2, 4), real decoded dims
-    val media = Seq(
-      Multimodal.MediaRow(1L, "video", avi),
-      Multimodal.MediaRow(2L, "video", "not a container".getBytes),
-      Multimodal.MediaRow(3L, "video", null)
-    ).toDF()
-    val rows = Multimodal.frameSampleAvi(media, everyK = 2)
-      .orderBy("doc_id", "frame_no").collect()
-    assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
-      Seq((1L, 0L), (1L, 2L), (1L, 4L)))
-    assert(rows.forall(r => r.getLong(2) == 32L && r.getLong(3) == 24L))
-    assert(rows.forall(r => r.getLong(4) > 0 &&
-      r.getLong(4) < 255L * 32 * 24))
-  }
-
   test("colorStats through the plan: per-channel sums from DECODED " +
     "rasters across all three encodings; junk quarantines") {
     val imgs = Seq(

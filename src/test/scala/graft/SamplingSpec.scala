@@ -46,22 +46,6 @@ class SamplingSpec extends SparkSuite {
     assert(perGroup.nonEmpty && perGroup.forall(_._2 <= 10))
   }
 
-  test("capPerGroupSkewSafe returns exactly capPerGroup's rows, " +
-    "including on a planted hot group") {
-    val base = docs.select("doc_id", "source")
-    // hot group: every doc also mapped into one giant pseudo-source
-    val hot = base.unionByName(
-      docs.select(col("doc_id") + 1000000L as "doc_id",
-        lit("hot") as "source"))
-    Seq(base, hot).foreach { df =>
-      val plain = Sampling.capPerGroup(df, "source", "doc_id", 7)
-        .as[(Long, String)].collect().toSet
-      val safe = Sampling.capPerGroupSkewSafe(df, "source", "doc_id", 7,
-        salts = 4).as[(Long, String)].collect().toSet
-      assert(safe == plain)
-    }
-  }
-
   test("mixByWeights keeps per-group fractions near target and is " +
     "monotone: raising one weight only ADDS docs") {
     val base = docs.select("doc_id", "lang")

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.EventSeries
 
 /** Round-7 pattern pack (q187-q191): Aroon tie-to-latest, streak
-  * islands, candlestick flags, pivot algebra, DAU/MAU — each pinned on
-  * hand-walked fixtures. */
+  * islands, candlestick flags, pivot algebra, DAU/MAU — plus the gap
+  * sessionizer — each pinned on hand-walked fixtures. */
 class SeriesPatternsSpec extends SparkSuite {
   import spark.implicits._
 
@@ -425,5 +425,22 @@ class SeriesPatternsSpec extends SparkSuite {
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(out == Seq((0L, 4L, 2L, 0.5), (1L, 2L, 1L, 0.25),
       (2L, 1L, 1L, 0.0)))
+  }
+
+  test("sessions: a gap over gapMinutes starts a new session; events " +
+    "within it stay in one") {
+    // user 1: two sessions (gap > 30 min); user 2: one session
+    val events = Seq(
+      (1L, "2024-06-01 10:00:00"), (1L, "2024-06-01 10:10:00"),
+      (1L, "2024-06-01 11:30:00"),
+      (2L, "2024-06-01 09:00:00"), (2L, "2024-06-01 09:20:00"),
+      (2L, "2024-06-01 09:40:00"))
+      .map { case (u, t) => (u, java.sql.Timestamp.valueOf(t), u) }
+      .toDF("user_id", "ts", "event_id")
+      .withColumn("value", col("event_id").cast("double"))
+    val got = EventSeries.sessions(events, 30)
+      .select(col("user_id"), col("n_events").cast("long"))
+      .as[(Long, Long)].collect().sorted.toSeq
+    assert(got == Seq((1L, 1L), (1L, 2L), (2L, 3L)))
   }
 }

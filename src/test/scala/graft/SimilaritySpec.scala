@@ -127,22 +127,6 @@ class SimilaritySpec extends SparkSuite {
     assert(a2 == Seq((1L, 1L, 0.5, 0.25), (2L, 2L, 0.4, 0.7)))
   }
 
-  test("salted aggregation is exact for associative aggregates") {
-    import graft.operators.SkewTools
-    val ev = Tables.events(spark, "/root/testdata/sf0.001")
-    val salted = SkewTools.saltedAgg(ev, Seq("user_id"), "value", salt = 8)
-      .orderBy("user_id")
-      .select("user_id", "n", "min_value", "max_value")
-      .collect().toSeq
-    val plain = ev.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"), min(col("value")).as("min_value"),
-        max(col("value")).as("max_value"))
-      .orderBy("user_id")
-      .select("user_id", "n", "min_value", "max_value")
-      .collect().toSeq
-    assert(salted == plain)
-  }
-
   test("JL random projection preserves norms within the distortion " +
     "bound, is a pure map, and is deterministic across runs") {
     import org.apache.spark.sql.functions._

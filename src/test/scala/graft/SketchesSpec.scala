@@ -8,50 +8,6 @@ class SketchesSpec extends SparkSuite {
 
   private lazy val docs = Tables.documents(spark, "/root/testdata/sf0.01")
 
-  test("approx distinct stays within the HLL rsd contract of the " +
-    "exact per-group distinct count") {
-    val approx = Sketches.distinctProfile(docs, Seq("lang"), "doc_id",
-        rsd = 0.02)
-      .as[(String, Long)].collect().toMap
-    val exact = docs.groupBy("lang")
-      .agg(countDistinct("doc_id").as("nd"))
-      .as[(String, Long)].collect().toMap
-    assert(approx.keySet == exact.keySet)
-    exact.foreach { case (lang, nd) =>
-      val rel = math.abs(approx(lang) - nd).toDouble / nd
-      // 5 sigma of rsd=2%: overwhelmingly safe, still a real bound
-      assert(rel <= 0.10, s"lang=$lang approx=${approx(lang)} exact=$nd")
-    }
-  }
-
-  test("approx quantiles respect the percentile_approx rank-error " +
-    "bound against exact interpolated percentiles") {
-    val docsL = docs.withColumn("n_chars", $"n_chars".cast("long"))
-    val approx = Sketches.quantileProfile(docsL, Seq("lang"), "n_chars",
-        probs = Seq(0.5, 0.9), accuracy = 10000)
-      .as[(String, Seq[Long])].collect().toMap
-    val n = docs.count()
-    docs.groupBy("lang").count().as[(String, Long)].collect()
-      .foreach { case (lang, groupN) =>
-        val sorted = docs.filter($"lang" === lang)
-          .select($"n_chars".cast("long")).as[Long]
-          .collect().sorted
-        Seq(0.5, 0.9).zipWithIndex.foreach { case (p, i) =>
-          val v = approx(lang)(i)
-          // rank error eps = 1/accuracy → returned value's rank must be
-          // within [p - eps, p + eps] of the group's n (plus 1 slack for
-          // discrete ranks at tiny groups)
-          val lo = math.max(0, math.ceil((p - 2.0 / 10000) * groupN)
-            .toInt - 1)
-          val hi = math.min(sorted.length - 1,
-            math.floor((p + 2.0 / 10000) * groupN).toInt + 1)
-          assert(v >= sorted(lo) && v <= sorted(hi),
-            s"lang=$lang p=$p v=$v range=[${sorted(lo)},${sorted(hi)}]")
-        }
-      }
-    assert(n > 0)
-  }
-
   test("corpusProfile computes all sketches in one aggregation (single" +
     " shuffle) and covers every language") {
     val prof = Sketches.corpusProfile(docs)

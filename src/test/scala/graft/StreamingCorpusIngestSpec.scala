@@ -180,6 +180,53 @@ class StreamingCorpusIngestSpec extends SparkSuite {
     assert(compact.sigIndex.count() == chained.sigIndex.count())
   }
 
+  test("into file: URI target and state dirs, batch 0 of a fresh " +
+    "checkpoint clears a stale batch partition and state delta before " +
+    "it writes") {
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    val evalSet = docs.filter(col("doc_id") < 20)
+    val day0 = docs.filter(col("doc_id") >= 20 && col("doc_id") < 80)
+    val stale = docs.filter(col("doc_id") >= 300 && col("doc_id") < 340)
+
+    val root = Files.createTempDirectory("graft_sciuri").toFile
+    val target = new java.io.File(root, "target").toURI.toString
+    val state = new java.io.File(root, "state").toURI.toString
+    assert(target.startsWith("file:") && state.startsWith("file:"))
+    // an earlier run's output: a survivor partition and a state delta
+    stale.write.parquet(s"$target/batch_id=7")
+    IncrementalIngestJob.saveState(IncrementalIngestJob.deriveState(
+      graft.jobs.Ladder.prepText(stale), IncrementalIngestJob.Config()),
+      s"$state/delta_7")
+
+    val srcDir = Files.createTempDirectory("graft_sciuri_src")
+    val tmp = Files.createTempDirectory("graft_sciuri_half").toString
+    day0.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    Files.copy(part.toPath, srcDir.resolve("day0.parquet"))
+    StreamingCorpusIngest.ingest(spark, srcDir.toString, target, state,
+        Files.createTempDirectory("graft_sciuri_cp").toString, evalSet)
+      .awaitTermination()
+
+    val corpus = StreamingCorpusIngest.readCorpus(spark, target)
+    val ingested = corpus.select("doc_id").as[Long].collect().toSet
+    assert(ingested.nonEmpty && ingested.forall(id => id >= 20 && id < 80),
+      ingested)
+    // the state a later batch would load: every snapshot left in the dir
+    val snapshots = new java.io.File(new java.net.URI(state)).list()
+      .filterNot(_.startsWith(".")).sorted.toSeq
+    assert(snapshots == Seq("delta_0"), snapshots)
+    val loaded = IncrementalIngestJob.loadStateUnion(spark,
+      snapshots.map(d => s"$state/$d"))
+    val expected = IncrementalIngestJob.deriveState(corpus,
+      IncrementalIngestJob.Config())
+    def same(a: org.apache.spark.sql.DataFrame,
+             b: org.apache.spark.sql.DataFrame) =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    assert(same(loaded.fingerprints, expected.fingerprints))
+    assert(same(loaded.sigIndex, expected.sigIndex))
+  }
+
   test("a batch whose every document is filtered out before exact dedup " +
     "lands zero survivors, in the batch job and in the stream, instead " +
     "of failing the exact-dedup Bloom filter build") {
