@@ -3,9 +3,8 @@ package graft.cli
 import java.nio.file.{Files, Paths}
 import org.apache.spark.ml.classification.RandomForestClassificationModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Staging, Tables}
 import graft.jobs.DailyEtlJob
 import graft.ml.{ChronoSplit, FeatureEngineering, Predict, Train}
 import graft.operators.{Enrichment, EventSeries, Writes}
@@ -162,7 +161,7 @@ object Main {
         // its lazy input, and a cached plan keeps its uncoalesced
         // shuffle partitions: that is the layout the boosted trees have
         // always trained on, so the gbt path stages it uncoalesced.
-        val (modelType, res) = withLocalCheckpoint(
+        val (modelType, res) = Staging.withLocalCheckpoint(
             features(spark, eventsDir, forPrediction = false),
             coalesce = modelDir != "gbt") { labeled =>
           val (train, valid, test) = ChronoSplit(labeled)
@@ -268,32 +267,6 @@ object Main {
         throw new IllegalArgumentException(s"unknown verb '$other' " +
           "(backfill|run|status|ml-train|ml-best-run|ml-predict)")
     }
-  }
-
-  /** Runs `f` over `df` materialized once, then releases the staged
-    * blocks. `localCheckpoint`, not `persist`: the staged rows keep the
-    * partition layout the lazy (AQE-coalesced) plan produces, and that
-    * layout feeds the model — MLlib's random-forest bagging and split
-    * sampling seed per partition, and tree learners sum non-integer
-    * sample weights partition by partition. A persisted frame keeps its
-    * uncoalesced shuffle partitions (3 where the lazy plan read 1 on a
-    * 40-user feed) and trains a different forest. `coalesce = false`
-    * stages that uncoalesced layout instead, with AQE partition
-    * coalescing off for the one staging job. */
-  private[graft] def withLocalCheckpoint[T](df: DataFrame,
-                                            coalesce: Boolean = true)(
-      f: DataFrame => T): T = {
-    val conf = df.sparkSession.conf
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prior = conf.getOption(key)
-    if (!coalesce) conf.set(key, "false")
-    val staged =
-      try df.localCheckpoint()
-      finally if (!coalesce) prior.fold(conf.unset(key))(conf.set(key, _))
-    try f(staged)
-    finally staged.queryExecution.logical
-      .collect { case r: LogicalRDD => r.rdd }
-      .foreach(_.unpersist(blocking = true))
   }
 
   private[graft] def features(spark: SparkSession, eventsDir: String,

@@ -10,11 +10,12 @@ import graft.operators.{Boilerplate, Decontaminate, Dedup, Sampling}
   * exact dedup → near dedup → optional SemDeDup → benchmark
   * decontamination → mixture sampling → optional token budget).
   * Every stage is one of the library's tested operators;
-  * this job adds only sequencing, caching, and a per-stage row ledger.
+  * this job adds only sequencing, staging, and a per-stage row ledger.
   *
-  * Scale notes: each stage's output is cached before its count (a
-  * production run would persist stage boundaries to the lake instead —
-  * same plan, durable lineage). No stage pairs documents (dedup goes
+  * Scale notes: each stage's output is a local checkpoint whose count
+  * is observed in the same job ([[Ladder.stage]]; a production run
+  * would persist stage boundaries to the lake instead — same plan,
+  * durable lineage). No stage pairs documents (dedup goes
   * through groups, not pairs), the eval index broadcasts, and the mix
   * is a map-side filter, so the job stays linear in corpus bytes
   * end-to-end.

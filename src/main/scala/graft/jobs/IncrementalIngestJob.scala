@@ -37,7 +37,7 @@ import graft.operators.{Decontaminate, Dedup, SemDedup}
 object IncrementalIngestJob {
 
   /** Dev-only observability seam: when set, [[run]] reports each
-    * stage's materialization wall time (name, seconds) — the number
+    * stage's checkpoint wall time (name, seconds) — the number
     * the funnel profile attributes the fixed per-batch cost with.
     * Never set in production paths; the ledger shape is unchanged. */
   private[graft] var stageTimer: Option[(String, Double) => Unit] = None
@@ -170,18 +170,24 @@ object IncrementalIngestJob {
     * pollutes the indexes. `batchEmbeddings` must align vec_id with
     * the batch's doc_id (the corpus convention).
     *
-    * Cache contract: each stage caches and unpersists its superseded
-    * predecessor, so the RETURNED survivor frame is still cached —
-    * long-lived callers should `survivors.unpersist()` once the
+    * Staging contract: every stage is an eager checkpoint barrier
+    * ([[Ladder.stage]]: one job materializes it as a local checkpoint
+    * and observes its ledger count, so no stage's plan carries the
+    * plans before it) and releases its superseded predecessor's
+    * blocks. The RETURNED survivor frame is still staged — long-lived
+    * callers release it with `Staging.release(survivors)` once the
     * survivors and appended state are written (the streaming wrapper
-    * does; a leak here compounds one frame per micro-batch).
+    * does; `unpersist()` is a no-op on a checkpoint, and until the
+    * ContextCleaner reclaims it each batch's frame stays in executor
+    * memory).
     *
-    * (r13 note: a "lean" mode skipping the per-stage counts — pure
-    * instrumentation — was A/B'd and REJECTED: without the eager
-    * materialization the lazily-cached stages race-recompute under
-    * the ladder's fan-out inside the caller's first action, and
-    * `Dev stream-throughput` read 10-22 s/batch vs 8-11 s with the
-    * eager counts. The counts stay.) */
+    * (r13 note: a "lean" mode skipping the per-stage materialization —
+    * the counts looked like pure instrumentation — was A/B'd and
+    * REJECTED: without the eager barriers the lazily-cached stages
+    * race-recompute under the ladder's fan-out inside the caller's
+    * first action, and `Dev stream-throughput` read 10-22 s/batch vs
+    * 8-11 s with them. The barriers stay; since the checkpoint staging
+    * the count rides in the barrier's own job.) */
   def run(state: State, batch: DataFrame, evalSet: DataFrame,
           cfg: Config = Config(),
           batchEmbeddings: Option[DataFrame] = None)

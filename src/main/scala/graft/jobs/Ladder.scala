@@ -2,6 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Staging
 import graft.functions.{TextClean, TextFns}
 
 /** The spine both corpus ladders share ([[CorpusPrepJob]] rebuilds,
@@ -10,25 +11,45 @@ import graft.functions.{TextClean, TextFns}
   * passes before anything hashes or tokenizes it.
   *
   * `timer`, when set, receives each stage's materialization wall time
-  * (name, seconds) — the [[IncrementalIngestJob.stageTimer]] seam. */
+  * (name, seconds) — the [[IncrementalIngestJob.stageTimer]] seam. The
+  * caller owns the last staged frame: [[Staging.release]] frees it. */
 private[graft] final class Ladder(
     timer: Option[(String, Double) => Unit] = None) {
   private val entries =
     scala.collection.mutable.ListBuffer.empty[(String, Long)]
+  private val pending = scala.collection.mutable.ListBuffer.empty[String]
   private var previous: DataFrame = null
 
-  /** Cache `df` for its own count and the next stage's build, record
-    * the count under `name`, then unpersist the PREDECESSOR — only the
-    * live frontier (and the returned final frame) stays pinned in
-    * executor memory. */
+  /** `df` with its row count observed under `name`: the count lands in
+    * the ledger from the job that stages `df` or a frame built on it.
+    * A named `observe`, read back from the staged query's own metrics:
+    * an `Observation` would set the session's `ObservationManager`,
+    * which is not serializable, and every later task whose closure
+    * captures the session (MLlib's logistic-regression scoring UDF
+    * does) would fail with "Task not serializable". */
+  private def observed(name: String, df: DataFrame): DataFrame = {
+    pending += name
+    df.observe(Ladder.RddPrefix + name, count(lit(1)).as("rows"))
+  }
+
+  /** Stage `df` — one eager job, lineage cut ([[Staging.checkpoint]]) —
+    * record its row count under `name` (with every count observed
+    * since the last stage, in order), then release the PREDECESSOR's
+    * blocks: only the live frontier (and the returned final frame)
+    * stays in executor memory, and no stage's plan carries the plans
+    * before it. */
   def stage(name: String, df: DataFrame): DataFrame = {
-    val cached = df.cache()
     val t0 = System.nanoTime()
-    entries += name -> cached.count()
+    val counted = observed(name, df)
+    val staged = Staging.checkpoint(counted,
+      name = Some(Ladder.RddPrefix + name))
+    val rows = counted.queryExecution.observedMetrics
+    entries ++= pending.map(n => n -> rows(Ladder.RddPrefix + n).getLong(0))
+    pending.clear()
     timer.foreach(_(name, (System.nanoTime() - t0) / 1e9))
-    if (previous != null) previous.unpersist()
-    previous = cached
-    cached
+    if (previous != null) Staging.release(previous)
+    previous = staged
+    staged
   }
 
   /** Row count of the last staged frame. */
@@ -36,15 +57,16 @@ private[graft] final class Ladder(
 
   def ledger: List[(String, Long)] = entries.toList
 
-  /** input → canonicalized → scrubbed → quality_gate, each a pure map
-    * staged in that order: text prep before the quality score, so both
-    * ladders gate and later hash the same prepped text. */
+  /** input → canonicalized → scrubbed → quality_gate, pure maps in that
+    * order, staged as ONE frame whose four counts are observed in its
+    * one job: text prep before the quality score, so both ladders gate
+    * and later hash the same prepped text. */
   def prep(docs: DataFrame, minQuality: Double): DataFrame = {
-    val input = stage("input", docs.select(
+    val input = observed("input", docs.select(
       col("doc_id"), col("text"), col("lang"), col("source")))
     val prepped = Ladder.textSteps.foldLeft(input) {
       case (df, (name, step)) =>
-        stage(name, df.withColumn("text", step(col("text"))))
+        observed(name, df.withColumn("text", step(col("text"))))
     }
     stage("quality_gate", prepped
       .filter(TextFns.qualityScore(col("text")) >= minQuality))
@@ -52,6 +74,10 @@ private[graft] final class Ladder(
 }
 
 private[graft] object Ladder {
+
+  /** Name prefix of the RDDs a ladder stages, as they show in
+    * `SparkContext.getPersistentRDDs`, and of its observed metrics. */
+  val RddPrefix = "ladder:"
 
   /** The text transforms, in stage order. Unicode class
     * canonicalization comes first so visually identical docs hash

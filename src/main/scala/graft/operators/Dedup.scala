@@ -790,11 +790,7 @@ object Dedup {
     * freed is never read again — the final labels frame is the one
     * returned, still materialized. */
   private def freeCheckpointed(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+    graft.Staging.release(df, blocking = false)
 
   /** Embedding near-dup GROUPS: connected components of the cosine
     * pair graph, as linear cluster labels (one canonical id per

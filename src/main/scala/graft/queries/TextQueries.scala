@@ -2086,8 +2086,9 @@ object TextQueries {
     * survivors — (doc_id, lang, source, fingerprint of the prepped
     * text, so the transform chain is pinned, not just membership),
     * materialized — and run()'s ledger. run() returns its survivor
-    * frame still cached; it is released here (a leak would compound
-    * one cached frame per bench/gate execution). */
+    * frame still staged; it is released here (a leak would hold one
+    * staged frame per bench/gate execution until the ContextCleaner
+    * reclaims it). */
   private def ingestGate(s: SparkSession, d: String,
                          simhash: Boolean = false,
                          semantic: Option[(Array[(Long, Array[Double])],
@@ -2110,7 +2111,7 @@ object TextQueries {
         col("source"), TextFns.fingerprint(col("text")).as("fingerprint"))
       .orderBy(col("doc_id"))
       .localCheckpoint(true)
-    survivors.unpersist()
+    graft.Staging.release(survivors)
     (out, ledger)
   }
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.Tables
+import graft.{Staging, Tables}
 import graft.jobs.IncrementalIngestJob
 
 /** Structured Streaming framing of the incremental corpus ingest: an
@@ -135,9 +135,10 @@ object StreamingCorpusIngest {
         if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
           IncrementalIngestJob.saveState(next,
             s"$stateDir/after_$batchId")
-        // run() returns its last staged frame still cached — without
-        // this, one cached frame leaks per micro-batch for the session
-        survivors.unpersist()
+        // run() returns its last staged frame still materialized —
+        // without this, one frame per micro-batch stays in executor
+        // memory until the ContextCleaner reclaims it
+        Staging.release(survivors)
         ()
       }
       .option("checkpointLocation", checkpointDir)

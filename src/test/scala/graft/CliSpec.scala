@@ -142,8 +142,8 @@ class CliSpec extends SparkSuite {
       (Train.evaluateModel(model, test).metrics,
         rows(Predict.withoutProbabilities(model, scoring, "gbt")))
     }
-    assert(Main.withLocalCheckpoint(labeled)(rf) == rf(labeled))
-    assert(Main.withLocalCheckpoint(labeled, coalesce = false)(gbt) ==
+    assert(Staging.withLocalCheckpoint(labeled)(rf) == rf(labeled))
+    assert(Staging.withLocalCheckpoint(labeled, coalesce = false)(gbt) ==
       gbt(labeled))
   }
 
@@ -184,6 +184,30 @@ class CliSpec extends SparkSuite {
         .isEmpty, s"--model $model")
       assert(spark.conf.getOption(
         "spark.sql.adaptive.coalescePartitions.enabled") == coalescing)
+    }
+  }
+
+  test("the row counts backfill, run and ml-predict log equal " +
+    "read-back counts of what they wrote") {
+    val wh = Files.createTempDirectory("graft_wh_counts").toString
+    val src = "/root/testdata/sf0.001"
+    def logged(verb: String, opts: Map[String, String] = Map.empty) = {
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(out)(Main.run(spark, verb, src, wh, opts))
+      out.toString("UTF-8").linesIterator.toSeq
+    }
+    def written(t: String) = spark.read.parquet(s"$wh/$t").count()
+
+    val backfill = logged("backfill")
+    assert(backfill.contains(s"[cli] backfill: bars=${written("bars")} " +
+      s"enrichments=${written("enrichments")} fact rows written"), backfill)
+    val run = logged("run")
+    assert(run.contains(s"[cli] run: bars=${written("bars")}"), run)
+    logged("ml-train", Map("trees" -> "2"))
+    // the first predict inserts, the second upserts over its own rows
+    Seq.fill(2)(logged("ml-predict")).foreach { predict =>
+      assert(predict.contains(
+        s"[cli] ml-predict: ${written("predictions")} rows"), predict)
     }
   }
 
