@@ -32,11 +32,20 @@ import java.util.zip.{CRC32, Deflater, Inflater}
   *  - WAV: PCM 16-bit signed little-endian mono (RIFF chunk walk; fmt
   *    and data located by id, not fixed offset, with RIFF even-byte
   *    chunk padding honored).
-  * Anything else (compressed BMP, multi-channel or float WAV, and
-  * formats that genuinely need external codecs — JPEG pixel data,
-  * video) decodes to None and flows to the quarantine path
-  * ([[graft.operators.Multimodal.MediaDecoder]] contract); the stub
-  * decoder remains the seam for those.
+  *  - GIF: animated GIF87a/89a with full LZW, global and local
+  *    palettes, interlace and per-frame delays; pixels decode to
+  *    palette-mean luma.
+  * Anything else (compressed BMP, multi-channel or float WAV, video)
+  * decodes to None and flows to the quarantine path
+  * ([[graft.operators.Multimodal.MediaDecoder]] contract). JPEG is not
+  * here: [[graft.operators.Multimodal.PixelDecoder]] reads it with the
+  * JDK's `jpeg` ImageReader, which every JRE ships.
+  *
+  * Why PNG and GIF stay hand-written although the JDK reads both: the
+  * JDK's PNG reader accepts streams whose IDAT or IEND CRC is wrong,
+  * which [[decodePngAny]] quarantines; and its GIF reader, while it
+  * agrees with [[decodeGif]] frame for frame, is several times slower
+  * on q102-shaped payloads.
   *
   * Decoders never throw on corrupt input: truncated payloads, bad
   * magic, CRC mismatches, and over/under-sized pixel data all yield
@@ -1011,356 +1020,5 @@ object MediaCodecs {
       i += n
     }
     out.write(0) // terminator
-  }
-
-  // ----------------------------------------------------------- JPEG
-  // Baseline sequential JPEG (SOF0) decoder, pure JVM — markers,
-  // canonical Huffman, dequant, 2-D IDCT, chroma upsampling, JFIF
-  // YCbCr→RGB. ITU-T T.81 leaves IDCT rounding implementation-defined,
-  // so decoded pixels may differ by ±1-2 from other conformant
-  // decoders (MediaCodecsSpec cross-validates against ImageIO within
-  // that tolerance on grayscale and smooth-chroma payloads).
-  // Progressive (SOF2), arithmetic coding, and 12-bit precision are
-  // out of scope and return None (the ImageIODecoder seam covers
-  // them).
-
-  /** Decoded JPEG raster: 0xFFRRGGBB ints, row-major. */
-  final case class JpegImage(width: Int, height: Int,
-                             nComponents: Int, argb: Array[Int])
-
-  private final class JpegHuff(counts: Array[Int], symbols: Array[Int]) {
-    // canonical code tables per T.81 annex C: min/max code and the
-    // first symbol index for each code length 1..16
-    val minCode = new Array[Int](17)
-    val maxCode = new Array[Int](17)
-    val valPtr = new Array[Int](17)
-    locally {
-      var code = 0
-      var k = 0
-      var l = 1
-      while (l <= 16) {
-        valPtr(l) = k
-        minCode(l) = code
-        code += counts(l - 1)
-        k += counts(l - 1)
-        maxCode(l) = code - 1
-        if (counts(l - 1) == 0) maxCode(l) = -1
-        code <<= 1
-        l += 1
-      }
-    }
-    def symbol(len: Int, code: Int): Int =
-      symbols(valPtr(len) + code - minCode(len))
-  }
-
-  /** Entropy-coded-segment bit reader: 0xFF00 unstuffing, hard stop at
-    * any real marker (the caller handles RSTn). */
-  private final class JpegBits(bytes: Array[Byte], var pos: Int) {
-    private var acc = 0
-    private var nBits = 0
-    var markerHit = false
-
-    def align(): Unit = { acc = 0; nBits = 0 }
-
-    private def feed(): Boolean = {
-      if (markerHit || pos >= bytes.length) { markerHit = true; false }
-      else {
-        val b = bytes(pos) & 0xff
-        if (b == 0xff) {
-          if (pos + 1 < bytes.length && (bytes(pos + 1) & 0xff) == 0x00) {
-            acc = (acc << 8) | 0xff; nBits += 8; pos += 2; true
-          } else { markerHit = true; false } // real marker — stop
-        } else { acc = (acc << 8) | b; nBits += 8; pos += 1; true }
-      }
-    }
-
-    def bit(): Int = {
-      if (nBits == 0 && !feed()) 0
-      else { nBits -= 1; (acc >> nBits) & 1 }
-    }
-
-    def bits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) { v = (v << 1) | bit(); i += 1 }
-      v
-    }
-
-    def decodeHuff(t: JpegHuff): Int = {
-      var code = bit()
-      var l = 1
-      while (l <= 16) {
-        if (t.maxCode(l) >= 0 && code <= t.maxCode(l))
-          return t.symbol(l, code)
-        code = (code << 1) | bit()
-        l += 1
-      }
-      0 // corrupt stream degrades to symbol 0; caller's dims still bound work
-    }
-  }
-
-  /** T.81 F.2.2.1 EXTEND: map an s-bit magnitude to its signed value. */
-  private def extend(v: Int, s: Int): Int =
-    if (s == 0) 0 else if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
-
-  private val JpegZigzag: Array[Int] = Array(
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63)
-
-  /** Separable 2-D IDCT with level shift, double precision — the
-    * straightforward T.81 A.3.3 form (clarity over AAN speed; the
-    * fixture rasters are tiny and the op is partition-local). */
-  private def idct8x8(coef: Array[Int], out: Array[Int]): Unit = {
-    val c = new Array[Double](8)
-    c(0) = 1.0 / math.sqrt(2.0)
-    var i = 1
-    while (i < 8) { c(i) = 1.0; i += 1 }
-    val cosT = Array.tabulate(8, 8)((x, u) =>
-      math.cos((2 * x + 1) * u * math.Pi / 16.0))
-    var y = 0
-    while (y < 8) {
-      var x = 0
-      while (x < 8) {
-        var s = 0.0
-        var v = 0
-        while (v < 8) {
-          var u = 0
-          while (u < 8) {
-            s += c(u) * c(v) * coef(v * 8 + u) * cosT(x)(u) * cosT(y)(v)
-            u += 1
-          }
-          v += 1
-        }
-        val p = math.round(s / 4.0).toInt + 128
-        out(y * 8 + x) = if (p < 0) 0 else if (p > 255) 255 else p
-        x += 1
-      }
-      y += 1
-    }
-  }
-
-  /** Decode a baseline-sequential (SOF0) JPEG to RGB. Grayscale,
-    * 4:4:4, 4:2:2 and 4:2:0 chroma layouts; DRI/RSTn honored.
-    * Returns None for non-baseline frames or malformed streams. */
-  def decodeJpegBaseline(bytes: Array[Byte]): Option[JpegImage] = {
-    if (bytes.length < 4 || (bytes(0) & 0xff) != 0xff ||
-      (bytes(1) & 0xff) != 0xd8) return None
-    try decodeJpegUnsafe(bytes) catch { case _: Exception => None }
-  }
-
-  // per-component state parsed from the headers
-  private final case class JComp(id: Int, h: Int, v: Int, tq: Int,
-                                 var td: Int = 0, var ta: Int = 0)
-
-  private def decodeJpegUnsafe(bytes: Array[Byte]): Option[JpegImage] = {
-    def u8(p: Int) = bytes(p) & 0xff
-    def u16(p: Int) = (u8(p) << 8) | u8(p + 1)
-
-    val quant = Array.ofDim[Int](4, 64) // natural order
-    val dcTabs = new Array[JpegHuff](4)
-    val acTabs = new Array[JpegHuff](4)
-    var comps: Array[JComp] = null
-    var width = 0
-    var height = 0
-    var restartInterval = 0
-    var pos = 2
-
-    var scanStart = -1
-    while (scanStart < 0) {
-      if (pos + 4 > bytes.length) return None
-      if (u8(pos) != 0xff) return None
-      val marker = u8(pos + 1)
-      if (marker == 0xd8 || (marker >= 0xd0 && marker <= 0xd7)) {
-        pos += 2 // standalone markers
-      } else {
-        val len = u16(pos + 2)
-        val seg = pos + 4
-        marker match {
-          case 0xdb => // DQT — possibly several tables per segment
-            var p = seg
-            while (p < pos + 2 + len) {
-              val pq = u8(p) >> 4
-              val tq = u8(p) & 0x0f
-              var i = 0
-              while (i < 64) {
-                val v = if (pq == 0) u8(p + 1 + i)
-                  else u16(p + 1 + 2 * i)
-                quant(tq)(JpegZigzag(i)) = v
-                i += 1
-              }
-              p += 1 + (if (pq == 0) 64 else 128)
-            }
-          case 0xc4 => // DHT — possibly several tables per segment
-            var p = seg
-            while (p < pos + 2 + len) {
-              val tc = u8(p) >> 4
-              val th = u8(p) & 0x0f
-              val counts = Array.tabulate(16)(i => u8(p + 1 + i))
-              val total = counts.sum
-              val syms = Array.tabulate(total)(i => u8(p + 17 + i))
-              val t = new JpegHuff(counts, syms)
-              if (tc == 0) dcTabs(th) = t else acTabs(th) = t
-              p += 17 + total
-            }
-          case 0xc0 => // SOF0 baseline
-            if (u8(seg) != 8) return None // 8-bit precision only
-            height = u16(seg + 1)
-            width = u16(seg + 3)
-            val nf = u8(seg + 5)
-            comps = Array.tabulate(nf) { i =>
-              val o = seg + 6 + 3 * i
-              JComp(u8(o), u8(o + 1) >> 4, u8(o + 1) & 0x0f, u8(o + 2))
-            }
-          case 0xc1 | 0xc2 | 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca |
-               0xcb | 0xcd | 0xce | 0xcf =>
-            return None // non-baseline frame types
-          case 0xdd => restartInterval = u16(seg)
-          case 0xda => // SOS
-            val ns = u8(seg)
-            var i = 0
-            while (i < ns) {
-              val cid = u8(seg + 1 + 2 * i)
-              val cOpt = comps.find(_.id == cid)
-              if (cOpt.isEmpty) return None
-              cOpt.get.td = u8(seg + 2 + 2 * i) >> 4
-              cOpt.get.ta = u8(seg + 2 + 2 * i) & 0x0f
-              i += 1
-            }
-            scanStart = pos + 2 + len
-          case _ => // APPn / COM / others — skip
-        }
-        if (scanStart < 0) pos += 2 + len
-      }
-    }
-    if (comps == null || width <= 0 || height <= 0) return None
-
-    val hMax = comps.map(_.h).max
-    val vMax = comps.map(_.v).max
-    val mcuW = 8 * hMax
-    val mcuH = 8 * vMax
-    val mcusX = (width + mcuW - 1) / mcuW
-    val mcusY = (height + mcuH - 1) / mcuH
-
-    // full-resolution-per-component planes at the component's own grid
-    val planeW = comps.map(c => mcusX * c.h * 8)
-    val planeH = comps.map(c => mcusY * c.v * 8)
-    val planes = comps.indices.map(i =>
-      new Array[Int](planeW(i) * planeH(i))).toArray
-
-    val bits = new JpegBits(bytes, scanStart)
-    val pred = new Array[Int](comps.length)
-    val coef = new Array[Int](64)
-    val px = new Array[Int](64)
-    var mcu = 0
-    val nMcus = mcusX * mcusY
-    while (mcu < nMcus) {
-      if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-        // expect RSTn: re-align on the marker and reset predictors
-        bits.align()
-        var p = bits.pos
-        while (p + 1 < bytes.length &&
-          !((bytes(p) & 0xff) == 0xff &&
-            (bytes(p + 1) & 0xff) >= 0xd0 &&
-            (bytes(p + 1) & 0xff) <= 0xd7)) p += 1
-        bits.pos = p + 2
-        bits.markerHit = false
-        java.util.Arrays.fill(pred, 0)
-      }
-      val my = mcu / mcusX
-      val mx = mcu % mcusX
-      var ci = 0
-      while (ci < comps.length) {
-        val c = comps(ci)
-        var bv = 0
-        while (bv < c.v) {
-          var bh = 0
-          while (bh < c.h) {
-            java.util.Arrays.fill(coef, 0)
-            // DC
-            val s = bits.decodeHuff(dcTabs(c.td))
-            pred(ci) += extend(bits.bits(s), s)
-            coef(0) = pred(ci) * quant(c.tq)(0)
-            // AC
-            var k = 1
-            var eob = false
-            while (k < 64 && !eob) {
-              val rs = bits.decodeHuff(acTabs(c.ta))
-              val r = rs >> 4
-              val sz = rs & 0x0f
-              if (sz == 0) {
-                if (r == 15) k += 16 else eob = true
-              } else {
-                k += r
-                if (k < 64) {
-                  val nat = JpegZigzag(k)
-                  coef(nat) = extend(bits.bits(sz), sz) *
-                    quant(c.tq)(nat)
-                }
-                k += 1
-              }
-            }
-            idct8x8(coef, px)
-            val ox = (mx * c.h + bh) * 8
-            val oy = (my * c.v + bv) * 8
-            var yy = 0
-            while (yy < 8) {
-              var xx = 0
-              while (xx < 8) {
-                planes(ci)((oy + yy) * planeW(ci) + ox + xx) =
-                  px(yy * 8 + xx)
-                xx += 1
-              }
-              yy += 1
-            }
-            bh += 1
-          }
-          bv += 1
-        }
-        ci += 1
-      }
-      mcu += 1
-    }
-
-    // assemble: nearest-neighbor chroma upsampling, JFIF color space
-    val argb = new Array[Int](width * height)
-    if (comps.length == 1) {
-      var y = 0
-      while (y < height) {
-        var x = 0
-        while (x < width) {
-          val g = planes(0)(y * planeW(0) + x)
-          argb(y * width + x) = 0xff000000 | (g << 16) | (g << 8) | g
-          x += 1
-        }
-        y += 1
-      }
-    } else if (comps.length == 3) {
-      def sample(ci: Int, x: Int, y: Int): Int = {
-        val sx = x * comps(ci).h / hMax
-        val sy = y * comps(ci).v / vMax
-        planes(ci)(sy * planeW(ci) + sx)
-      }
-      def clamp(v: Int) = if (v < 0) 0 else if (v > 255) 255 else v
-      var y = 0
-      while (y < height) {
-        var x = 0
-        while (x < width) {
-          val yy = sample(0, x, y)
-          val cb = sample(1, x, y) - 128
-          val cr = sample(2, x, y) - 128
-          val r = clamp(math.round(yy + 1.402 * cr).toInt)
-          val g = clamp(math.round(yy - 0.344136 * cb -
-            0.714136 * cr).toInt)
-          val b = clamp(math.round(yy + 1.772 * cb).toInt)
-          argb(y * width + x) = 0xff000000 | (r << 16) | (g << 8) | b
-          x += 1
-        }
-        y += 1
-      }
-    } else return None
-
-    Some(JpegImage(width, height, comps.length, argb))
   }
 }

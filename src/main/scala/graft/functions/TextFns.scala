@@ -118,26 +118,11 @@ object TextFns {
   /** Word n-gram shingles (distinct), the MinHash/Jaccard input set —
     * the native [[graft.plans.WordNGrams]] kernel (one traversal; the
     * prior chained-zip_with formulation was interpreted HOF evaluation
-    * and measured ~10× slower at n=5; `shinglesHof` below keeps the
-    * composed formulation as the kernel's differential-test twin). */
+    * and measured ~10× slower at n=5; the test-scope
+    * `TextFnsTwins.shinglesHof` keeps the composed formulation as the
+    * kernel's differential-test twin). */
   def shingles(text: Column, n: Int): Column =
     graft.plans.NGramExpressions.wordNGrams(text, n)
-
-  /** Composed-Catalyst twin of [[shingles]] (zip_with against k-shifted
-    * slices; lambdas touch only their own arguments — an element_at
-    * formulation re-evaluates tokenization per element, O(tokens²)).
-    * Kept for TextFnsSpec equivalence testing only. */
-  def shinglesHof(text: Column, n: Int): Column = {
-    val t = tokens(text)
-    if (n == 1) array_distinct(t)
-    else {
-      val grams = (1 until n).foldLeft(t) { (acc, k) =>
-        zip_with(acc, slice(t, lit(k + 1), size(t)), (g, w) =>
-          when(w.isNotNull && g.isNotNull, concat(g, lit(" "), w)))
-      }
-      array_distinct(filter(grams, g => g.isNotNull))
-    }
-  }
 
   /** 64-bit SimHash over distinct tokens (Charikar 2002), as one fused
     * native expression: per-token hash = first 64 bits of md5 (engine-

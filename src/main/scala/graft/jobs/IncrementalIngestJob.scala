@@ -96,27 +96,9 @@ object IncrementalIngestJob {
       .parquet(s"$dir/simhash_prints"))
   }
 
-  /** Reopen a [[saveState]] layout. The two big side tables stay lazy
-    * parquet scans; only the k-row centroid table is collected. The
-    * optional-side-table probe resolves through Hadoop's FileSystem for
-    * the path's scheme — a java.io.File check would read false on
-    * HDFS/S3 and silently skip the semantic stage saveState wrote. */
+  /** Reopen one [[saveState]] layout: [[loadStateUnion]] of `dir`. */
   def loadState(spark: org.apache.spark.sql.SparkSession,
-                dir: String): State = {
-    def opt(sub: String): Option[String] = {
-      val (fs, p) = Tables.fileSystem(spark, s"$dir/$sub")
-      Option.when(fs.exists(p))(s"$dir/$sub")
-    }
-    val centroids = opt("centroids").map(p =>
-      Tables.parquet(spark, p).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        .sortBy(_._1))
-    State(Tables.parquet(spark, s"$dir/fingerprints"),
-      Tables.parquet(spark, s"$dir/sig_index"),
-      centroids,
-      opt("kept_embeddings").map(Tables.parquet(spark, _)),
-      opt("simhash_prints").map(Tables.parquet(spark, _)))
-  }
+                dir: String): State = loadStateUnion(spark, Seq(dir))
 
   /** Reopen the UNION of several [[saveState]] layouts (a compact
     * snapshot plus the delta chain after it — the streaming wrapper's
@@ -125,7 +107,11 @@ object IncrementalIngestJob {
     * dirs that have them (None when none do); centroids — a fixed
     * k-row array, not append-only — come from the LATEST dir carrying
     * them. Every table must have the same schema in every dir that
-    * has it. Equivalent to loadState(dir) when `dirs` has one element. */
+    * has it. The big tables stay lazy parquet scans; only the k-row
+    * centroid table is collected. The optional-side-table probe
+    * resolves through Hadoop's FileSystem for the path's scheme — a
+    * java.io.File check would read false on HDFS/S3 and silently skip
+    * the semantic stage saveState wrote. */
   def loadStateUnion(spark: org.apache.spark.sql.SparkSession,
                      dirs: Seq[String]): State = {
     require(dirs.nonEmpty, "need at least one state dir")

@@ -380,7 +380,7 @@ object Dedup {
     // labelPropagate materializes its edge list before returning
     val labels = labelPropagate(sigs.select(col(idCol).as("id")), edges,
       maxIterations, smallCutoff)
-    freeCheckpointed(banded)
+    graft.Staging.release(banded, blocking = false)
     labels.select(col("id").as(idCol), col("canonical"))
   }
 
@@ -714,7 +714,7 @@ object Dedup {
       val pairs = sym.collect().iterator
         .map(r => (r.getLong(0), r.getLong(1)))
       val lbl = unionFindMinLabels(pairs)
-      freeCheckpointed(sym)
+      graft.Staging.release(sym, blocking = false)
       val spark = ids.sparkSession
       import spark.implicits._
       val lblDf = lbl.toSeq.toDF("id", "canonical")
@@ -736,11 +736,15 @@ object Dedup {
             .as("canonical"))
       val next = pointerJump(hop).localCheckpoint()
       converged = labelsChanged(next, labels) == 0
-      freeCheckpointed(labels) // superseded round — drop its blocks now
+      // drop the superseded round's blocks now (only after the
+      // convergence count read them): left to driver GC and the
+      // ContextCleaner, a deep component pins O(rounds) label copies
+      // and the loop can evict its own working set
+      graft.Staging.release(labels, blocking = false)
       labels = next
       iter += 1
     }
-    freeCheckpointed(sym)
+    graft.Staging.release(sym, blocking = false)
     labels
   }
 
@@ -779,18 +783,6 @@ object Dedup {
     }
     parent.keysIterator.map(k => k -> find(k)).toMap
   }
-
-  /** Drop the block-manager copies behind a locally-checkpointed frame
-    * the loop no longer references: without this each round's label
-    * frame (O(n) rows) stays cached until driver GC + ContextCleaner
-    * happen to reclaim it, so a deep component pins O(rounds) copies
-    * and the propagation can evict its own working set under memory
-    * pressure. Explicit unpersist bounds live copies to two (prev is
-    * freed only AFTER the convergence count read it). The frame being
-    * freed is never read again — the final labels frame is the one
-    * returned, still materialized. */
-  private def freeCheckpointed(df: DataFrame): Unit =
-    graft.Staging.release(df, blocking = false)
 
   /** Embedding near-dup GROUPS: connected components of the cosine
     * pair graph, as linear cluster labels (one canonical id per

@@ -25,7 +25,8 @@ import org.apache.spark.sql.functions._
   * bucket model is B rows regardless of corpus size; nothing quadratic
   * anywhere. The top-k keep set comes from orderBy+limit
   * (TakeOrderedAndProject: per-partition top-k, topK-row merge)
-  * broadcast back onto the per-doc frame — no corpus-scale
+  * joined back onto the per-doc frame — broadcast while topK rows fit
+  * the planner's threshold, shuffled past it — no corpus-scale
   * single-partition rank window anywhere.
   */
 object Dsir {
@@ -69,14 +70,16 @@ object Dsir {
     // under the tie-free (log-weight DESC NULLS LAST, id) total order
     // the kept set is exactly the topK highest non-null log-weights —
     // orderBy+limit plans as TakeOrderedAndProject (per-partition
-    // top-k, then a topK-row merge) and the flag comes back as a
-    // broadcast join of ≤ topK ids. Identical to
+    // top-k, then a topK-row merge) and the flag comes back as a join
+    // of ≤ topK ids. No broadcast hint: the planner sizes the limit
+    // side at topK rows, so a small topK still broadcasts and a huge
+    // one shuffles. Identical to
     // `row_number() <= topK AND _lw IS NOT NULL` for every doc.
     val topIds = base.where(col("_lw").isNotNull)
       .orderBy(col("_lw").desc, col(idCol).asc)
       .limit(topK)
       .select(col(idCol), lit(1L).as("_in_top"))
-    base.join(broadcast(topIds), Seq(idCol), "left")
+    base.join(topIds, Seq(idCol), "left")
       .select(col(idCol),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
         col("_lw").cast("double").as("log_weight"),

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * [[colorStats]] / [[audioStats]] over the pure-JVM
   * [[graft.functions.MediaCodecs]] (PNG in all five 8-bit color types,
   * linear and Adam7-interlaced, tRNS transparency; 24-bit BMP; PCM-16
-  * WAV; animated GIF), [[ImageIODecoder]] over the JDK's ImageIO
-  * registry for baseline JPEG pixel data, and [[frameSampleGif]] for
+  * WAV; animated GIF), [[PixelDecoder]] also over the JDK's `jpeg`
+  * ImageReader for JPEG pixel data, and [[frameSampleGif]] for
   * animated-GIF frame extraction. `decodeStub` remains only as the
   * seam DEMO for codecs that genuinely need external libraries
   * (modern video formats) — it derives deterministic fake dimensions
@@ -55,8 +55,8 @@ object Multimodal {
 
   /** The default decoder stays the deterministic stub — a DECLARED
     * fake (see object scaladoc) standing in for formats outside
-    * [[graft.functions.MediaCodecs]]' pure-JVM scope; use
-    * [[PixelDecoder]] for real PNG/BMP payloads. */
+    * [[PixelDecoder]]'s scope; use [[PixelDecoder]] for real
+    * PNG/BMP/JPEG payloads. */
   object StubDecoder extends MediaDecoder {
     override def decode(rows: Iterator[MediaRow]): Iterator[MediaFeatures] =
       decodeStub(rows)
@@ -83,14 +83,16 @@ object Multimodal {
       }
     }
 
-  /** REAL pixel decoder (not a stub): sniffs PNG (ALL five 8-bit color
-    * types — grayscale, truecolor, palette, gray+alpha, RGBA) then BMP
-    * via [[graft.functions.MediaCodecs]] and reconstructs actual pixels
-    * — `width`/`height` come from the decoded raster and `checksum`
-    * carries the LUMA SUM over decoded pixels (integer mean of R, G, B
-    * per pixel — for a grayscale source that IS the gray value, so the
-    * stat is color-type-independent). Out-of-scope or corrupt payloads
-    * (and formats needing external codecs) yield `valid = false` —
+  /** REAL pixel decoder (not a stub), the only one: sniffs PNG (ALL
+    * five 8-bit color types — grayscale, truecolor, palette,
+    * gray+alpha, RGBA) then BMP via [[graft.functions.MediaCodecs]],
+    * then JPEG (SOI marker `FF D8`) through the JDK's `jpeg`
+    * ImageReader, and reconstructs actual pixels — `width`/`height`
+    * come from the decoded raster and `checksum` carries the LUMA SUM
+    * over decoded pixels (integer mean of R, G, B per pixel — for a
+    * grayscale source that IS the gray value, so the stat is
+    * color-type-independent). Out-of-scope or corrupt payloads (and
+    * formats needing external codecs) yield `valid = false` —
     * quarantine, never a throw. */
   object PixelDecoder extends MediaDecoder {
     override def decode(rows: Iterator[MediaRow]): Iterator[MediaFeatures] =
@@ -107,11 +109,10 @@ object Multimodal {
                   img.width, img.height, lumaSum(img.pixels),
                   valid = true)
               case None =>
-                graft.functions.MediaCodecs.decodeJpegBaseline(bytes)
-                  match {
-                  case Some(img) =>
+                decodeJpeg(bytes) match {
+                  case Some(bi) =>
                     MediaFeatures(r.doc_id, r.media_type, bytes.length,
-                      img.width, img.height, argbLumaSum(img.argb),
+                      bi.getWidth, bi.getHeight, jpegLumaSum(bi),
                       valid = true)
                   case None =>
                     MediaFeatures(r.doc_id, r.media_type, bytes.length,
@@ -149,55 +150,6 @@ object Multimodal {
       "sum_r", "sum_g", "sum_b", "sum_a", "valid")
   }
 
-  /** Production decoder backed by the JDK's ImageIO registry
-    * (java.desktop ships with every JRE, headless-safe): decodes
-    * whatever readers the executor JVM has — notably BASELINE JPEG
-    * pixel data, which the pure-JVM [[graft.functions.MediaCodecs]]
-    * scope excludes. Same [[MediaFeatures]] contract as
-    * [[PixelDecoder]] (luma = integer mean of R,G,B via getRGB).
-    *
-    * Why this is spec-pinned rather than oracle-checked: lossy DCT
-    * rounding is encoder-specific, so a generative SQL formula cannot
-    * reproduce JPEG pixel values the way the q100/q103 oracles do for
-    * lossless formats — MediaCodecsSpec pins JPEG round trips and
-    * PNG agreement with [[PixelDecoder]] instead. Disk caching is off
-    * (no ImageIO temp files on executor-local disks). */
-  object ImageIODecoder extends MediaDecoder {
-    override def decode(rows: Iterator[MediaRow]): Iterator[MediaFeatures] =
-      rows.map { r =>
-        val bytes = Option(r.payload).getOrElse(Array.emptyByteArray)
-        val img =
-          try {
-            javax.imageio.ImageIO.setUseCache(false)
-            Option(javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(bytes)))
-          } catch { case scala.util.control.NonFatal(_) => None }
-        img match {
-          case Some(bi) =>
-            MediaFeatures(r.doc_id, r.media_type, bytes.length,
-              bi.getWidth, bi.getHeight, biLumaSum(bi), valid = true)
-          case None =>
-            MediaFeatures(r.doc_id, r.media_type, bytes.length, 0, 0, 0L,
-              valid = false)
-        }
-      }
-  }
-
-  private def biLumaSum(bi: java.awt.image.BufferedImage): Long = {
-    var s = 0L
-    var y = 0
-    while (y < bi.getHeight) {
-      var x = 0
-      while (x < bi.getWidth) {
-        val p = bi.getRGB(x, y)
-        s += (((p >> 16) & 0xff) + ((p >> 8) & 0xff) + (p & 0xff)) / 3
-        x += 1
-      }
-      y += 1
-    }
-    s
-  }
-
   /** Luma sum over packed ARGB: integer mean of R, G, B per pixel
     * (matches the BMP decode convention; exact for gray sources). */
   private def argbLumaSum(argb: Array[Int]): Long = {
@@ -208,6 +160,39 @@ object Multimodal {
       i += 1
     }
     s
+  }
+
+  /** JPEG pixels from the JDK's `jpeg` ImageReader. The reader is asked
+    * for by format, not through `ImageIO.read`, so GIF, TIFF and any
+    * other registered format stay out of scope instead of decoding as
+    * "valid". Any failure is None (quarantine, never a throw). */
+  private def decodeJpeg(bytes: Array[Byte])
+      : Option[java.awt.image.BufferedImage] = {
+    if (bytes.length < 4 || (bytes(0) & 0xff) != 0xff ||
+      (bytes(1) & 0xff) != 0xd8) return None
+    imageIoMemoryOnly
+    try {
+      val in = javax.imageio.ImageIO.createImageInputStream(
+        new java.io.ByteArrayInputStream(bytes))
+      val reader =
+        javax.imageio.ImageIO.getImageReadersByFormatName("jpeg").next()
+      try { reader.setInput(in, true, true); Some(reader.read(0)) }
+      finally { reader.dispose(); in.close() }
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** No ImageIO temp files on executor-local disks; set once per JVM. */
+  private lazy val imageIoMemoryOnly: Unit =
+    javax.imageio.ImageIO.setUseCache(false)
+
+  /** A grayscale JPEG decodes to one band of raw samples, summed as is:
+    * `getRGB` would convert them from linear gray to sRGB. Color uses
+    * the integer mean of R, G, B like every other format. */
+  private def jpegLumaSum(bi: java.awt.image.BufferedImage): Long = {
+    val (w, h) = (bi.getWidth, bi.getHeight)
+    if (bi.getRaster.getNumBands == 1)
+      lumaSum(bi.getRaster.getSamples(0, 0, w, h, 0, null: Array[Int]))
+    else argbLumaSum(bi.getRGB(0, 0, w, h, null, 0, w))
   }
 
   /** Primitive accumulation — foldLeft would box every pixel on the
@@ -377,8 +362,8 @@ object Multimodal {
 
   /** Partition-local feature extraction over the media frame; the
     * decoder is a pluggable seam ([[MediaDecoder]]) — [[PixelDecoder]]
-    * for the real pure-JVM formats, [[StubDecoder]] (the default) for
-    * the rest. */
+    * for the real formats (PNG, BMP, JPEG), [[StubDecoder]] (the
+    * default) for the rest. */
   def extractFeatures(media: DataFrame,
                       decoder: MediaDecoder = StubDecoder)
       : Dataset[MediaFeatures] = {

@@ -3,7 +3,7 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.JsonNode
 
-import graft.alerts.{AlertListener, Alerts, StreamingAlertListener, WebhookSender}
+import graft.alerts.{AlertListener, Alerts, StreamingAlertListener}
 import graft.alerts.Alerts.{Config, RunContext}
 
 /** S13 webhook alerts: payload parity with the reference formatter
@@ -95,7 +95,7 @@ class AlertsSpec extends SparkSuite {
   }
 
   test("fan-out posts only configured channels; empty config posts nothing") {
-    val sender = new WebhookSender.Recording
+    val sender = new RecordingWebhookSender
     val cfg = Config(slackUrl = Some("https://hooks.invalid/s"),
       pagerdutyRoutingKey = Some("rk"), teamsUrl = None)
     assert(Alerts.notifyFailure(sender, cfg, ctx) ==
@@ -111,7 +111,7 @@ class AlertsSpec extends SparkSuite {
     assert(resolve.get("dedup_key").asText ==
       parse(sender.posts(1).payload).get("dedup_key").asText)
 
-    val none = new WebhookSender.Recording
+    val none = new RecordingWebhookSender
     assert(Alerts.notifyFailure(none, Config(), ctx).isEmpty)
     assert(none.posts.isEmpty)
   }
@@ -127,7 +127,7 @@ class AlertsSpec extends SparkSuite {
   }
 
   test("AlertListener fires on a failed Spark job, stays quiet on success") {
-    val sender = new WebhookSender.Recording
+    val sender = new RecordingWebhookSender
     val cfg = Config(slackUrl = Some("https://hooks.invalid/s"))
     val listener = new AlertListener(sender, cfg, "spec_pipeline",
       clock = () => java.time.Instant.EPOCH)
@@ -155,7 +155,7 @@ class AlertsSpec extends SparkSuite {
 
   test("CLI verbs fire the DAG-style callbacks: failure alerts + rethrows, " +
     "success announces, unconfigured skips") {
-    val sender = new WebhookSender.Recording
+    val sender = new RecordingWebhookSender
     val cfg = Config(slackUrl = Some("https://hooks.invalid/cli"))
     val wh = java.nio.file.Files
       .createTempDirectory("graft_alert_wh").toString
@@ -177,7 +177,7 @@ class AlertsSpec extends SparkSuite {
       "Pipeline graft-cli completed successfully")
 
     // empty config: alerts add zero behavior, the verb still runs
-    val quiet = new WebhookSender.Recording
+    val quiet = new RecordingWebhookSender
     cli.Main.runWithAlerts(spark, "status",
       "/root/testdata/sf0.001", wh, Map.empty, quiet, Config())
     assert(quiet.posts.isEmpty)
@@ -185,7 +185,7 @@ class AlertsSpec extends SparkSuite {
 
   test("StreamingAlertListener: clean stop announces success, crash alerts") {
     import java.nio.file.Files
-    val sender = new WebhookSender.Recording
+    val sender = new RecordingWebhookSender
     val cfg = Config(pagerdutyRoutingKey = Some("rk_stream"))
     val listener = new StreamingAlertListener(sender, cfg, "ingest",
       clock = () => java.time.Instant.EPOCH)

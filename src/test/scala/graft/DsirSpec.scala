@@ -36,6 +36,25 @@ class DsirSpec extends SparkSuite {
     assert(kept.forall(id => id <= 10L || id == 21L))
   }
 
+  test("the planner sizes the top-k join: a topK past the broadcast " +
+    "threshold shuffles, a small topK still broadcasts") {
+    val docs = Seq((1L, "alpha beta", "en"), (2L, "gamma delta", "de"))
+      .toDF("doc_id", "text", "lang")
+    // BroadcastExchanges whose rows carry the top-ids side's flag
+    def topIdsBroadcasts(topK: Int) = Dsir.dsirScores(docs,
+        col("lang") === "en", buckets = 16, topK = topK)
+      .queryExecution.executedPlan.collect {
+        case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+          if b.output.exists(_.name == "_in_top") => b
+      }
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      assert(topIdsBroadcasts(100000000).isEmpty)
+      assert(topIdsBroadcasts(100).size == 1) // q162's topK
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
   test("a blank document scores null log_weight, zero tokens, never " +
     "kept") {
     val docs = Seq((1L, "alpha beta", "en"), (2L, "", "en"))

@@ -635,9 +635,7 @@ class MediaCodecsSpec extends SparkSuite {
     }
   }
 
-  test("ImageIODecoder decodes baseline JPEG payloads on a bare JVM " +
-    "(the codec class MediaCodecs honestly excludes) and agrees with " +
-    "PixelDecoder on lossless PNG") {
+  test("PixelDecoder decodes a JDK-written JPEG, quarantines junk") {
     // a real lossy JPEG, written by the JDK encoder
     val w = 16; val h = 12
     val bi = new java.awt.image.BufferedImage(w, h,
@@ -646,24 +644,16 @@ class MediaCodecsSpec extends SparkSuite {
       bi.setRGB(x, y, (x * 16) << 16 | (y * 20) << 8 | 0x40)
     val jpegOut = new java.io.ByteArrayOutputStream()
     assert(javax.imageio.ImageIO.write(bi, "jpg", jpegOut))
-    val png = colorPattern(7, 5, 29, alpha = false)
     val media = Seq(
       Multimodal.MediaRow(1L, "image", jpegOut.toByteArray),
-      Multimodal.MediaRow(2L, "image", MediaCodecs.encodePngArgb(png)),
       Multimodal.MediaRow(3L, "image", "not an image".getBytes),
       Multimodal.MediaRow(4L, "image", null)
     ).toDF()
-    val got = Multimodal.extractFeatures(media, Multimodal.ImageIODecoder)
+    val got = Multimodal.extractFeatures(media, Multimodal.PixelDecoder)
       .collect().map(f => f.doc_id -> f).toMap
     // JPEG: dims are exact; pixels are lossy so only sanity-bound luma
     assert(got(1L).valid && got(1L).width == w && got(1L).height == h)
     assert(got(1L).checksum > 0 && got(1L).checksum < 255L * w * h)
-    // PNG is lossless: ImageIO and our own decoder must agree exactly
-    val own = Multimodal.extractFeatures(media, Multimodal.PixelDecoder)
-      .collect().map(f => f.doc_id -> f).toMap
-    assert(got(2L).valid && own(2L).valid)
-    assert(got(2L).checksum == own(2L).checksum)
-    assert(got(2L).width == own(2L).width)
     assert(!got(3L).valid && !got(4L).valid)
   }
 

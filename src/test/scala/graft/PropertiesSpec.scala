@@ -122,7 +122,7 @@ class PropertiesSpec extends SparkSuite {
     (1 to 4).foreach { n =>
       val diffs = df.select(col("text"),
           TextFns.shingles(col("text"), n).as("native"),
-          TextFns.shinglesHof(col("text"), n).as("hof"))
+          TextFnsTwins.shinglesHof(col("text"), n).as("hof"))
         .filter(!(col("native") <=> col("hof")))
       val bad = diffs.collect()
       assert(bad.isEmpty,

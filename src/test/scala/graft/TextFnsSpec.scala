@@ -35,7 +35,7 @@ class TextFnsSpec extends SparkSuite {
     Seq(1, 2, 3, 5).foreach { n =>
       val diffs = corpus.select(
           TextFns.shingles(col("text"), n).as("native"),
-          TextFns.shinglesHof(col("text"), n).as("hof"))
+          TextFnsTwins.shinglesHof(col("text"), n).as("hof"))
         .filter(!(col("native") <=> col("hof"))).count()
       assert(diffs == 0, s"n=$n")
     }
