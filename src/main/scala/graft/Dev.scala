@@ -37,9 +37,8 @@ object Dev {
       case "funnel-scale" => funnelScale()
       case "stream-throughput" => streamThroughput()
       case "scale" =>
-        val cpus = cpusOr(32)
-        withSession(cpus, parallelismFirstOff) { spark =>
-          ScaleCheck.run(spark, sfDirOr(Sf01), scaleOr(32), cpus)
+        withSession(cpusOr(32), parallelismFirstOff) { spark =>
+          ScaleCheck.run(spark, sfDirOr(Sf01), scaleOr(32))
         }
       case "inflate" => inflate(args.drop(1))
       case "explain" => explain(args.drop(1))

@@ -15,8 +15,7 @@ import graft.operators.{Dedup, Enrichment, EventSeries, Multimodal, Similarity}
   *   SPARK_GRAFT_SCALE=32 sbt 'runMain graft.Dev scale'
   */
 private[graft] object ScaleCheck {
-  def run(spark: SparkSession, sfDir: String, mult: Int,
-          cpus: Int): Unit = {
+  def run(spark: SparkSession, sfDir: String, mult: Int): Unit = {
     import spark.implicits._
     def inflated(table: String): DataFrame = InflateFixtures.inflate(
       spark, Tables.table(spark, sfDir, table), table, mult)
@@ -147,36 +146,6 @@ private[graft] object ScaleCheck {
       sink(Writes.insertIgnoreBloom(events, batch, Seq("event_id")))
     }
 
-    // layout contrast: the same selective range scan against a sorted
-    // (disjoint row-group spans → min/max skipping) vs hash-scattered
-    // parquet layout — the write-side half of predicate pushdown
-    val layoutBase = java.nio.file.Files
-      .createTempDirectory("graft_scale_layout").toString
-    // three full copies of the inflated table live under layoutBase —
-    // delete them even when a timed scan throws
-    try {
-      val slim = events.select(col("event_id"), col("user_id"), col("value"))
-      Writes.writeSortedLayout(slim, s"$layoutBase/sorted",
-        Seq("event_id"), partitions = cpus * 2)
-      slim.repartition(cpus * 2).write
-        .mode("overwrite").parquet(s"$layoutBase/plain")
-      def rangeScan(dir: String): Unit =
-        sink(spark.read.parquet(dir)
-          .filter(col("event_id").between(500000L, 510000L)))
-      time("scan_sorted_layout", n) { rangeScan(s"$layoutBase/sorted") }
-      time("scan_hash_layout", n) { rangeScan(s"$layoutBase/plain") }
-      // 2-d: a box predicate over the Z-ordered layout prunes both
-      // dimensions; the hash layout and the 1-d sort cannot
-      Writes.writeZOrderLayout(slim, s"$layoutBase/zorder",
-        "user_id", "value", partitions = cpus * 2)
-      def boxScan(dir: String): Unit =
-        sink(spark.read.parquet(dir)
-          .filter(col("user_id").between(100L, 200L) &&
-            col("value").between(10.0, 20.0)))
-      time("scan_zorder_box", n) { boxScan(s"$layoutBase/zorder") }
-      time("scan_hash_box", n) { boxScan(s"$layoutBase/plain") }
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(layoutBase))
     events.unpersist()
 
     val emb = inflated("embeddings").cache()
@@ -306,11 +275,13 @@ private[graft] object ScaleCheck {
         curve.mkString(" "))
       cells2.unpersist(); ex.unpersist()
     }
-    // PCA: the fit is ONE treeAggregate pass (fixed d(d+3)/2 state);
-    // projection is a pure map with literal components
+    // PCA (q119's pair): the fit is two bounded aggregations (the
+    // micro-int mean and the covariance fan-out) collecting dim-bounded
+    // rows; projection joins the component table by broadcast
     time("pca_fit_project", ne) {
       import graft.operators.Pca
-      sink(Pca.project(emb, Pca.fit(emb, dim = 64, k = 8)))
+      sink(Pca.projectExact(emb,
+        Pca.fitExactMicro(emb, dim = 64, k = 8).toTable(spark), dim = 64))
     }
     time("covariance_relational", ne) {
       sink(graft.operators.Pca.covarianceMatrix(emb, 64))
@@ -374,16 +345,17 @@ private[graft] object ScaleCheck {
         minMatches = 6))
     }
     // the SimHash flavor of the same rebuild-vs-probe contrast:
-    // simhashPairs re-bands and self-joins the whole corpus (and the
+    // the rebuild re-bands and self-joins every print (and the
     // 32-copy clusters make its pair output quadratic per cluster);
     // the incremental probe scans the persisted prints once and
     // broadcasts the banded batch
+    val prints = docs.select(col("doc_id"),
+      graft.functions.TextFns.simhash64(col("text")).as("simhash"))
     time("simhash_pairs_rebuild", nd) {
-      sink(Dedup.simhashPairs(docs))
+      sink(Dedup.hammingBandPairs(prints, "simhash", "doc_id",
+        maxHamming = 3))
     }
     time("incremental_simhash_dedup", nd) {
-      val prints = docs.select(col("doc_id"),
-        graft.functions.TextFns.simhash64(col("text")).as("simhash"))
       sink(Dedup.incrementalSimhashDedup(prints,
         Tables.documents(spark, sfDir)))
     }
@@ -451,8 +423,8 @@ private[graft] object ScaleCheck {
       sink(Dedup.hammingBandPairs(hashed, "phash", "doc_id",
         maxHamming = 3, maxBucket = 1000))
     }
-    // audio DSP at volume: decode + integer activity + FFT spectral,
-    // both pure maps
+    // audio DSP at volume: decode + integer activity + FFT power
+    // spectrum, both map-side
     time("audio_activity_spectral", nd) {
       val media = docs.select(col("doc_id")).as[Long]
         .mapPartitions(_.map { id =>
@@ -463,7 +435,7 @@ private[graft] object ScaleCheck {
             MediaCodecs.encodeWav(MediaCodecs.PcmAudio(16000, samples)))
         }).toDF()
       sink(Multimodal.audioActivity(media))
-      sink(Multimodal.audioSpectral(media))
+      sink(Multimodal.audioSpectrum(media))
     }
     time("rolling_fingerprint", nd) {
       sink(docs.select(col("doc_id"),
@@ -501,11 +473,8 @@ private[graft] object ScaleCheck {
     time("oov_rate_top1000", nd) {
       sink(graft.operators.Relevance.oovRate(docs, 1000))
     }
-    time("char_entropy_relational", nd) {
+    time("char_entropy", nd) {
       sink(graft.operators.Relevance.charEntropy(docs))
-    }
-    time("char_entropy_fused", nd) {
-      sink(graft.operators.Relevance.charEntropyFused(docs))
     }
     time("token_lorenz", nd) {
       sink(graft.operators.Relevance.tokenLorenz(docs))

@@ -7,10 +7,10 @@ package graft.functions
   *
   * Determinism: fixed iteration order, driver-free, no allocation
   * dependence on partitioning — identical input samples produce
-  * bit-identical spectra on every executor. Spectral features stay
-  * double-precision (FP-exact replay in SQL is not practical — the
-  * q129 surface is rows-only, pinned by DspSpec on analytically-known
-  * signals: a bin-exact sine's centroid IS its frequency).
+  * bit-identical spectra on every executor. The spectral features
+  * over a spectrum are relational arithmetic on its quantized bins
+  * (q129); DspSpec pins the kernel on analytically-known signals (a
+  * bin-exact sine's power sits in its own bin).
   */
 object Dsp {
 
@@ -86,32 +86,5 @@ object Dsp {
     var b = 0
     while (b < bins) { acc(b) /= nFrames; b += 1 }
     acc
-  }
-
-  /** Spectral shape features from a power spectrum (bin 0 = DC,
-    * last bin = Nyquist): centroid and 85% rolloff in Hz, flatness
-    * (geometric/arithmetic mean of the non-DC bins — 1.0 for white
-    * noise, → 0 for pure tones). All None when the spectrum carries
-    * no energy. */
-  def spectralFeatures(power: Array[Double], sampleRate: Int,
-                       frameLen: Int)
-      : Option[(Double, Double, Double)] = {
-    if (power.isEmpty) return None
-    val hzPerBin = sampleRate.toDouble / frameLen
-    // skip DC for all three: constant offset is not "spectral shape"
-    val p = power.drop(1)
-    val total = p.sum
-    if (total <= 0.0) return None
-    val centroid = p.indices.map(b => (b + 1) * hzPerBin * p(b)).sum / total
-    var cum = 0.0
-    var roll = p.length
-    var b = 0
-    while (b < p.length && cum < 0.85 * total) {
-      cum += p(b); roll = b + 1; b += 1
-    }
-    val rolloffHz = roll * hzPerBin
-    val logMean = p.map(x => math.log(x + 1e-12)).sum / p.length
-    val flatness = math.exp(logMean) / (total / p.length)
-    Some((centroid, rolloffHz, flatness))
   }
 }

@@ -6,7 +6,7 @@ package graft.functions
   * resized, lightly perturbed, re-encoded — land within a small
   * Hamming distance, which turns image near-dup detection into the
   * SAME banded-Hamming join the text side already runs for SimHash
-  * ([[graft.operators.Dedup.simhashPairs]]).
+  * ([[graft.operators.Dedup.hammingBandPairs]]).
   *
   * Pure JVM (the [[MediaCodecs]] philosophy), deterministic: integer
   * box pooling (each input pixel maps to exactly one cell via integer

@@ -251,7 +251,6 @@ object IncrementalIngestJob {
           verdicts.filter(col("kept"))
             .select(col("vec_id").as("doc_id")),
           Seq("doc_id"), "left_semi"))
-      case (Some(_), Some(_), None) => simDeduped // no batch vectors
       case _ => simDeduped
     }
 

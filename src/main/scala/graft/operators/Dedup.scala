@@ -507,21 +507,12 @@ object Dedup {
         col("cont_a_in_b"), col("cont_b_in_a"))
   }
 
-  /** SimHash near-dup clusters: 64-bit simhash, pairs within `maxHamming`
-    * found by 4×16-bit band bucketing (two docs within Hamming ≤3 of each
-    * other share at least one exact 16-bit band — pigeonhole). */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
-                   textCol: String = "text",
-                   idCol: String = "doc_id"): DataFrame =
-    hammingBandPairs(docs.select(col(idCol),
-      TextFns.simhash64(col(textCol)).as("simhash")),
-      "simhash", idCol, maxHamming)
-
   /** Banded-Hamming candidate join over ANY 64-bit fingerprint column
     * (SimHash text prints, pHash image prints): 4×16-bit pigeonhole
-    * banding, exact Hamming verification within buckets. The shared
-    * core [[simhashPairs]] and [[graft.operators.Multimodal]]'s image
-    * pipeline both ride.
+    * banding, exact Hamming verification within buckets — two prints
+    * within Hamming ≤ 3 share at least one exact 16-bit band. SimHash
+    * text dedup (q38's prints) and [[graft.operators.Multimodal]]'s
+    * image pipeline both ride it.
     *
     * Scale guards, same pair as [[ngramJaccardPairs]]: the
     * explicit-parallelism pin before the quadratic bucket join (AQE
@@ -565,7 +556,7 @@ object Dedup {
     * incremental family ([[incrementalByFingerprint]] exact,
     * [[incrementalLshDedup]] MinHash, `SemDedup.incrementalSemDedup`
     * embedding), completing it for the SimHash flavor
-    * ([[simhashPairs]] is its rebuild form).
+    * ([[hammingBandPairs]] over every print is its rebuild form).
     *
     * `corpusHashes` is (`idCol`, `simhash` int64) — the compact side
     * table a pipeline persists and appends each surviving batch's

@@ -281,44 +281,16 @@ object Multimodal {
       "n_frames", "max_frame_energy", "n_active_frames", "valid")
   }
 
-  /** Spectral shape features over REAL decoded PCM via the pure-JVM
-    * FFT ([[graft.functions.Dsp]]): centroid and 85% rolloff in Hz,
-    * flatness — the tone-vs-noise triage for audio corpus curation.
-    * Double-precision DSP is not SQL-replayable, so the q129 surface
-    * is rows-only; DspSpec pins the kernel on analytically-known
-    * signals (bin-exact sine → centroid = its frequency, flatness → 0;
-    * white noise → flatness near 1). Pure map over partitions. */
-  def audioSpectral(media: DataFrame, frameLen: Int = 256): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions(_.map { r =>
-      val bytes = Option(r.payload).getOrElse(Array.emptyByteArray)
-      graft.functions.MediaCodecs.decodeWav(bytes).flatMap { clip =>
-        val power = graft.functions.Dsp
-          .meanPowerSpectrum(clip.samples, frameLen)
-        graft.functions.Dsp
-          .spectralFeatures(power, clip.sampleRate, frameLen)
-          .map { case (centroid, rolloff, flatness) =>
-            (r.doc_id, clip.samples.length.toLong,
-              math.rint(centroid * 10) / 10,
-              math.rint(rolloff * 10) / 10,
-              math.rint(flatness * 1e6) / 1e6, true)
-          }
-      }.getOrElse((r.doc_id, 0L, 0.0, 0.0, 0.0, false))
-    }).toDF("doc_id", "n_samples", "centroid_hz", "rolloff_hz",
-      "flatness", "valid")
-  }
-
-  /** The mean power SPECTRUM itself, one row per (doc, AC bin):
+  /** The mean power SPECTRUM of each clip, one row per (doc, AC bin):
     * REAL WAV decode → framed FFT ([[graft.functions.Dsp]]) → per-bin
     * mean power quantized to micro units (`p6 = round(p·10⁶)` as an
-    * exact LONG). This is the stageable model-state view of
-    * [[audioSpectral]]: the DSP (decode + FFT) happens once here, and
-    * the downstream feature algebra — centroid, rolloff, flatness —
-    * becomes pure relational arithmetic over (doc_id, bin, p6) that
-    * BOTH engines can replay exactly (q129's staging gate). Bins are
+    * exact LONG). The DSP (decode + FFT) happens once here, and the
+    * spectral shape features — centroid, rolloff, flatness, the
+    * tone-vs-noise triage for audio corpus curation — become pure
+    * relational arithmetic over (doc_id, bin, p6) that BOTH engines
+    * can replay exactly (q129's staging gate). Bins are
     * 1..frameLen/2 (DC dropped — constant offset is not spectral
-    * shape, matching [[graft.functions.Dsp.spectralFeatures]]).
+    * shape).
     * Undecodable or sub-frame-length payloads contribute no rows.
     * Pure flatMap over partitions: linear, shuffle-free. */
   def audioSpectrum(media: DataFrame, frameLen: Int = 256): DataFrame = {

@@ -5,99 +5,28 @@ import org.apache.spark.sql.functions._
 
 /** Principal component analysis over an embedding column — the
   * dimensionality-reduction stage of a training-data pipeline
-  * (whitening before clustering/dedup, compact features for quality
-  * classifiers, the deterministic cousin of the JL projection in
-  * [[Similarity.randomProject]]: JL is data-oblivious, PCA is
-  * data-optimal for a fixed corpus).
+  * (compact features for quality classifiers, the deterministic
+  * cousin of the JL projection in [[Similarity.randomProject]]: JL is
+  * data-oblivious, PCA is data-optimal for a fixed corpus).
   *
   * Reference scope: the reference engine ships no matrix analytics —
   * north-star training-data surface (SURVEY §6), like PQ/IVF/JL.
   *
-  * Scale shape: [[fit]] is ONE `treeAggregate` pass over the corpus
-  * with fixed-size state — (n, Σx, upper-triangular Σxxᵀ) is
-  * d(d+3)/2+1 doubles (d=64 → ~2 KB) regardless of corpus size;
-  * partials merge executor-side (the [[Sketches.heavyHitters]]
-  * shape). The d×d eigen-decomposition runs on the driver (cyclic
-  * Jacobi, microseconds at d=64 — NOT a corpus-scale operation), and
-  * [[project]] is a pure map with the k×d component matrix broadcast
-  * into the plan as literals. Nothing here shuffles corpus rows at
-  * all.
+  * Scale shape: [[fitExactMicro]] runs two bounded aggregations over
+  * the corpus — the micro-int mean and the [[covarianceMatrix]]
+  * fan-out — and collects d and d(d+1)/2 rows; the d×d
+  * eigen-decomposition runs on the driver (cyclic Jacobi, microseconds
+  * at d=64 — NOT a corpus-scale operation). [[projectExact]] joins the
+  * dim-bounded component table by broadcast.
   *
-  * Determinism: the aggregation is floating-point (merge order varies
-  * run to run at the 1e-13 level), so fitted components are stable
-  * only to ~1e-9 — fine for specs, not for hash oracles. The
-  * hash-oracle anchor is [[covarianceMatrix]]: the SAME covariance
-  * computed as exact relational algebra (one groupBy over per-row
-  * upper-triangle products, 6dp-rounded) with a DuckDB twin (q118).
-  * Component sign is canonicalized (largest-|loading| coordinate
-  * positive, first index on ties) so two fits of the same data agree.
+  * Determinism: every step up to a final division is exact integer
+  * arithmetic over 6dp-quantized values, so two runs (any
+  * partitioning) produce bit-identical components and projections, and
+  * DuckDB replays both (q118 covariance, q119 projection). Component
+  * sign is canonicalized (largest-|loading| coordinate positive, first
+  * index on ties).
   */
 object Pca {
-
-  /** Fitted model: `components(i)` is the i-th principal axis (unit
-    * length, canonical sign), eigenvalues descending, `explained` the
-    * per-component fraction of total variance. */
-  final case class PcaModel(dim: Int, mean: Seq[Double],
-                            components: Seq[Seq[Double]],
-                            eigenvalues: Seq[Double]) {
-    def explained: Seq[Double] = {
-      val t = eigenvalues.sum
-      if (t == 0.0) eigenvalues.map(_ => 0.0)
-      else eigenvalues.map(_ / t)
-    }
-  }
-
-  /** One-pass moments: (n, Σx, upper-triangle Σxxᵀ) via
-    * treeAggregate; covariance and eigenpairs on the driver. */
-  def fit(df: DataFrame, dim: Int, k: Int,
-          vecCol: String = "embedding"): PcaModel = {
-    require(k >= 1 && k <= dim, s"need 1 <= k <= $dim")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val tri = dim * (dim + 1) / 2
-    // primitive-array encoder: the Seq[Double] decoder dominated the
-    // aggregate pass at 32× (boxing one java.lang.Double per element)
-    val vecs = df.select(Similarity.asDouble(col(vecCol)).as("v"))
-      .filter(size(col("v")) === dim).as[Array[Double]]
-    type Acc = (Long, Array[Double], Array[Double])
-    val zero: Acc = (0L, new Array[Double](dim), new Array[Double](tri))
-    val (n, sums, prods) = vecs.rdd.treeAggregate(zero)(
-      seqOp = { case ((c, s, p), v) =>
-        var i = 0
-        var t = 0
-        while (i < dim) {
-          s(i) += v(i)
-          var j = i
-          while (j < dim) { p(t) += v(i) * v(j); t += 1; j += 1 }
-          i += 1
-        }
-        (c + 1, s, p)
-      },
-      combOp = { case ((ca, sa, pa), (cb, sb, pb)) =>
-        var i = 0
-        while (i < dim) { sa(i) += sb(i); i += 1 }
-        var t = 0
-        while (t < tri) { pa(t) += pb(t); t += 1 }
-        (ca + cb, sa, pa)
-      })
-    require(n > 0, "empty corpus")
-    val mean = sums.map(_ / n)
-    val cov = Array.ofDim[Double](dim, dim)
-    var t = 0
-    for (i <- 0 until dim; j <- i until dim) {
-      val c = prods(t) / n - mean(i) * mean(j)
-      cov(i)(j) = c; cov(j)(i) = c
-      t += 1
-    }
-    val (evals, evecs) = jacobiEigen(cov)
-    val order = evals.indices.sortBy(i => (-evals(i), i))
-    val comps = order.take(k).map { i =>
-      val v = evecs.map(_(i)) // column i = eigenvector i
-      canonicalSign(v).toIndexedSeq
-    }
-    PcaModel(dim, mean.toIndexedSeq, comps.toIndexedSeq,
-      order.take(k).map(evals).toIndexedSeq)
-  }
 
   /** Flip so the largest-|entry| coordinate is positive (first index
     * wins ties) — removes the eigenvector sign ambiguity. */
@@ -161,35 +90,22 @@ object Pca {
     math.sqrt(s)
   }
 
-  /** Project vectors onto the model's components — pure map, the
-    * mean and k×d matrix ride in the plan as literals. Output:
-    * (id, proj array<double> of length k), 6dp-rounded. With
-    * `whiten`, each coordinate is scaled by 1/√λᵢ so every component
-    * has unit variance — the preprocessing k-means/cosine stages want
-    * when leading components would otherwise dominate distance.
-    * Components with λ ≤ 0 (numerically dead directions) whiten to
-    * 0 rather than blowing up. */
-  def project(df: DataFrame, model: PcaModel,
-              vecCol: String = "embedding",
-              idCol: String = "vec_id",
-              whiten: Boolean = false): DataFrame = {
-    val meanLit = array(model.mean.map(lit): _*)
-    val centered = zip_with(Similarity.asDouble(col(vecCol)), meanLit,
-      (x, m) => x - m)
-    val proj = array(model.components.zip(model.eigenvalues).map {
-      case (comp, lambda) =>
-        val raw = Similarity.dot(centered, array(comp.map(lit): _*))
-        val scaled =
-          if (!whiten) raw
-          else if (lambda <= 0.0) lit(0.0)
-          else raw / lit(math.sqrt(lambda))
-        round(scaled, 6)
-    }: _*)
-    df.select(col(idCol), proj.as("proj"))
-  }
+  /** 6dp micro-int lift: `round(x,6)·10⁶` as an exact LONG — the
+    * shared quantization of the exact-arithmetic surface (q118/q119
+    * covariance + projection, mirroring EmbeddingStats' dec6). */
+  private[graft] def micro6(c: Column): Column =
+    (round(c, 6).cast("decimal(28,6)") * 1000000).cast("long")
 
-  /** The covariance matrix as EXACT relational algebra — the q118
-    * hash-oracle twin of [[fit]]'s aggregate: per row, the upper
+  /** The exact-arithmetic envelope of [[covarianceMatrix]]'s hi/lo
+    * LONG split (default `maxAbs`): per-row products stay ≤ 2⁴⁰ (so
+    * the shifted hi half is ≤ 2²⁰ and plain LONG sums hold to ~2⁴³
+    * rows per group) while every micro-lifted element satisfies
+    * |x6| ≤ 2²⁰ — i.e. elements in [−1.048576, 1.048576]. Any
+    * [-1,1]-normalized embedding qualifies. */
+  private[graft] val DefaultMaxAbs: Double = (1L << 20) / 1e6
+
+  /** The covariance matrix as EXACT relational algebra — q118's
+    * output and [[fitExactMicro]]'s input: per row, the upper
     * triangle of xxᵀ is generated map-side (d(d+1)/2 structs — no
     * self-join), then one groupBy(i,j) computes the covariance of the
     * 6dp-QUANTIZED values in exact integer arithmetic. Output
@@ -230,23 +146,9 @@ object Pca {
     * HOF 24.1 s vs this plan 3.45 s (~7× from codegen alone, the rest
     * was the partition collapse). A literal-unrolled 2080-element
     * array was rejected too — the ~8000-node expression tree stalls
-    * driver-side planning. */
-  /** 6dp micro-int lift: `round(x,6)·10⁶` as an exact LONG — the
-    * shared quantization of the exact-arithmetic surface (q118/q119
-    * covariance + projection, mirroring EmbeddingStats' dec6). */
-  private[graft] def micro6(c: Column): Column =
-    (round(c, 6).cast("decimal(28,6)") * 1000000).cast("long")
-
-  /** The exact-arithmetic envelope of [[covarianceMatrix]]'s hi/lo
-    * LONG split (default `maxAbs`): per-row products stay ≤ 2⁴⁰ (so
-    * the shifted hi half is ≤ 2²⁰ and plain LONG sums hold to ~2⁴³
-    * rows per group) while every micro-lifted element satisfies
-    * |x6| ≤ 2²⁰ — i.e. elements in [−1.048576, 1.048576]. Any
-    * [-1,1]-normalized embedding qualifies. */
-  private[graft] val DefaultMaxAbs: Double = (1L << 20) / 1e6
-
-  /** Exact 6dp covariance as relational algebra — see the plan notes
-    * above. `maxAbs` is the element-magnitude envelope the hi/lo LONG
+    * driver-side planning.
+    *
+    * `maxAbs` is the element-magnitude envelope the hi/lo LONG
     * split is exact under (r08 advice: the overflow condition is a
     * property of the PUBLIC operator, not just the q118 fixture
     * path). Elements whose |value| exceeds it fail LOUDLY via
@@ -316,10 +218,9 @@ object Pca {
     * [[covarianceMatrix]] — so two runs (any partitioning) produce
     * bit-identical tables. Fixed-sweep [[jacobiEigen]] on the 6dp
     * covariance runs driver-side (d×d, microseconds); component
-    * weights are quantized to micro-ints. This is the hash-gradeable
-    * twin of [[fit]] (whose float treeAggregate is stable only to
-    * ~1e-9): q119 persists this table and BOTH engines replay the
-    * projection algebra over it in exact integer arithmetic.
+    * weights are quantized to micro-ints. q119 persists this table
+    * and BOTH engines replay the projection algebra over it in exact
+    * integer arithmetic.
     *
     * Scale: two bounded aggregations over the corpus (mean + the
     * covariance fan-out) collecting d and d(d+1)/2 rows — driver state

@@ -771,52 +771,18 @@ object Relevance {
   /** Per-document CHARACTER-level Shannon entropy (nats) + a keep gate —
     * the cheap binary/gibberish filter run before any tokenization
     * (compressed blobs and key-mash read ≪ natural text's ~2.8 nats;
-    * repeated-char spam reads near 0). Same micro-nat DECIMAL bridge and
-    * exact half-up division as [[lexicalDiversity]], so the 4dp entropy
-    * and the threshold comparison are engine-exact. Two hash aggregates
-    * keyed by doc — linear in bytes, co-partitioned, no shuffle beyond
-    * the per-doc key. */
+    * repeated-char spam reads near 0). Same micro-nat state and exact
+    * half-up division as [[lexicalDiversity]], so the 4dp entropy and
+    * the threshold comparison are engine-exact (q182 hash-pinned).
+    * The state comes from the fused native kernel
+    * ([[graft.plans.CharEntropyState]]) in ONE map-side pass: a
+    * relational per-CHARACTER explode + two hash aggregates multiplies
+    * rows by mean doc length, so at corpus scale this is the
+    * difference between a linear scan and shuffling ~1k× the corpus
+    * row count. */
   def charEntropy(docs: DataFrame, textCol: String = "text",
                   idCol: String = "doc_id",
                   minEntropy: Double = 2.0): DataFrame = {
-    val ch = docs.select(col(idCol),
-        explode(split(col(textCol), "")).as("ch"))
-      .where(col("ch") =!= "")
-    val cf = ch.groupBy(col(idCol), col("ch")).agg(count(lit(1)).as("c"))
-    val tot = cf.groupBy(col(idCol))
-      .agg(sum(col("c")).as("n"), count(lit(1)).as("n_distinct"))
-    val term = (col("c").cast("decimal(12,0)") *
-      round(log(col("c").cast("double") / col("n")), 6)
-        .cast("decimal(10,6)")).cast("decimal(28,6)")
-    val summed = cf.join(tot, Seq(idCol))
-      .withColumn("_t", term)
-      .groupBy(col(idCol))
-      .agg(max(col("n")).as("n"), max(col("n_distinct")).as("nd"),
-        sum(col("_t")).as("_s"))
-    val su = (-col("_s") * 1000000).cast("long") // micro-nats, ≥ 0
-    val h4 = call_function("div", su * 2 + col("n") * 100, col("n") * 200)
-    val scored = summed.select(col(idCol),
-      col("n").cast("long").as("n_chars_counted"),
-      col("nd").as("n_distinct_chars"),
-      (h4.cast("double") / 10000).as("entropy"))
-    docs.select(col(idCol)).join(scored, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_chars_counted"), lit(0L)).as("n_chars_counted"),
-        coalesce(col("n_distinct_chars"), lit(0L)).as("n_distinct_chars"),
-        col("entropy"),
-        coalesce(col("entropy") >= minEntropy, lit(false)).as("keep"))
-  }
-
-  /** [[charEntropy]] on the fused native kernel
-    * ([[graft.plans.CharEntropyState]]): identical output (same
-    * micro-nat state, same half-up bridge — q182 hash-pinned), but
-    * ONE map-side pass instead of the per-CHARACTER explode + two
-    * hash aggregates. The explode multiplies rows by mean doc length,
-    * so at corpus scale this is the difference between a linear scan
-    * and shuffling ~1k× the corpus row count. */
-  def charEntropyFused(docs: DataFrame, textCol: String = "text",
-                       idCol: String = "doc_id",
-                       minEntropy: Double = 2.0): DataFrame = {
     val base = docs.select(col(idCol),
       graft.plans.CharEntropyExpressions.charEntropyState(col(textCol))
         .as("_s"))

@@ -198,47 +198,6 @@ object Writes {
       .drop("_to", opCol, tsCol)
   }
 
-  /** Scan-pruning layout: range-partition on the dominant filter
-    * column(s) and sort within partitions before writing. Each parquet
-    * file (and each row group inside it) then covers a narrow, disjoint
-    * key span, so the reader's min/max statistics skip everything a
-    * selective predicate can't match — the same scan that touches every
-    * row group of a hash-scattered layout touches O(selectivity) of a
-    * sorted one. This is the write-side half of predicate pushdown:
-    * Catalyst pushes the filter, the layout decides whether the push
-    * prunes. At warehouse scale, combine with directory partitioning on
-    * the coarse key (date) and use this ordering for the within-partition
-    * fine key. */
-  def writeSortedLayout(df: DataFrame, path: String,
-                        rangeCols: Seq[String],
-                        partitions: Int): Unit =
-    df.repartitionByRange(partitions, rangeCols.map(col): _*)
-      .sortWithinPartitions(rangeCols.map(col): _*)
-      .write.mode("overwrite").parquet(path)
-
-  /** Two-dimensional scan-pruning layout: cluster by a Z-order curve
-    * over `(colX, colY)` so each written file covers a small min/max BOX
-    * in both dimensions — selective predicates on EITHER column prune,
-    * where [[writeSortedLayout]] only prunes its sort key. Bucket
-    * boundaries come from `approxQuantile` (one sample-sized driver job,
-    * skew-robust); the curve key itself is a codegen'd expression
-    * ([[graft.plans.ZValue2]]), so the clustering write is one
-    * range-partition + local sort — exactly the cost of the
-    * single-column layout. The lakehouse `OPTIMIZE ZORDER BY` shape. */
-  def writeZOrderLayout(df: DataFrame, path: String,
-                        colX: String, colY: String,
-                        partitions: Int, buckets: Int = 256): Unit = {
-    val probs = (1 until buckets).map(_.toDouble / buckets).toArray
-    val Seq(ex, ey) = df.stat.approxQuantile(
-      Array(colX, colY), probs, 0.01).toSeq.map(_.distinct.sorted)
-    df.withColumn("_z", graft.plans.ZOrderFns.zValue(
-        col(colX).cast("double"), col(colY).cast("double"), ex, ey))
-      .repartitionByRange(partitions, col("_z"))
-      .sortWithinPartitions(col("_z"))
-      .drop("_z")
-      .write.mode("overwrite").parquet(path)
-  }
-
   /** Insert-ignore for the warehouse-scale shape: `existing` is huge
     * (the 100 TB table), `incoming` is a bounded batch. The plain
     * formulation anti-joins against ALL existing keys — a full shuffle

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * row count by average document length).
   *
   * Emits the EXACT same micro-nat state the relational bridge
-  * computes (`graft.operators.Relevance.charEntropy`): per distinct
+  * computes (the test-scope `RelevanceTwins.charEntropy`): per distinct
   * code point c with count k, the term is
   * `k · round(ln(k/n), 6)` accumulated in exact micro-nat LONGS
   * (`BigDecimal.valueOf(double).setScale(6, HALF_UP)` — bit-identical

@@ -14,8 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * boundary, a general Jackson tokenization, and an InternalRow
   * allocation just to lift one integer out; this expression is a
   * single allocation-free structural scan over the UTF-8 bytes living
-  * inside the generated code (static-helper pattern, see [[ZValue2]])
-  * — measured against the from_json twin at 32× scale in BASELINE.md
+  * inside the generated code (the generated code calls a static
+  * helper on the companion object) — measured against the from_json twin at 32× scale in BASELINE.md
   * round 4.
   *
   * Semantics (the expression's OWN contract, pinned against

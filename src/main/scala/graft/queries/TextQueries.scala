@@ -454,15 +454,15 @@ object TextQueries {
         .orderBy(col("mmr_rank"))
     }),
 
-    // per-doc lexical diversity: TTR/hapax in exact integer rounding,
-    // unigram self-entropy via the micro-nat DECIMAL bridge
     // per-doc character-entropy gate — the pre-tokenization binary/
-    // gibberish filter; FUSED native kernel (same micro-nat state the
-    // relational charEntropy computes — RelevanceSpec pins equality)
+    // gibberish filter; FUSED native kernel (same micro-nat state as
+    // the relational twin RelevanceSpec pins it to)
     "q182_char_entropy" -> ((s, d) =>
-      Relevance.charEntropyFused(Tables.documents(s, d))
+      Relevance.charEntropy(Tables.documents(s, d))
         .orderBy(col("doc_id"))),
 
+    // per-doc lexical diversity: TTR/hapax in exact integer rounding,
+    // unigram self-entropy via the micro-nat DECIMAL bridge
     "q164_lexical_diversity" -> ((s, d) =>
       Relevance.lexicalDiversity(Tables.documents(s, d))
         .orderBy(col("doc_id"))),
@@ -749,8 +749,7 @@ object TextQueries {
 
     // full covariance matrix of the embedding corpus as exact
     // relational algebra — upper-triangle xx^T generated map-side per
-    // row (no self-join), one groupBy(i,j); the hash-oracle twin of
-    // Pca.fit's one-pass treeAggregate moments
+    // row (no self-join), one groupBy(i,j); q119's fit decomposes it
     "q118_covariance" -> ((s, d) =>
       Pca.covarianceMatrix(Tables.embeddings(s, d), dim = 64)
         .orderBy(col("i"), col("j"))),
@@ -764,8 +763,8 @@ object TextQueries {
     // recomputes every dot product, only the dim-bounded fitted
     // weights pass through. Output is scalar (vec_id, component,
     // value) rows (an array column broke the driver's pandas sort at
-    // r07). The float-path Pca.fit/project stays spec-pinned (PcaSpec:
-    // eigen property, planted-direction recovery, reconstruction).
+    // r07). PcaSpec pins the fit and projection (eigen property,
+    // planted-direction recovery, reconstruction).
     "q119_pca_project" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
       val comps = Pca.fitExactMicro(e, dim = 64, k = 8)
@@ -1005,15 +1004,13 @@ object TextQueries {
     }),
 
     // spectral shape over the same WAV round trip via the pure-JVM
-    // FFT — rows-only (double-precision DSP has no SQL replay);
-    // DspSpec pins the kernel on analytically-known signals
-    // graded via staging: the REAL decode+FFT happens once
+    // FFT, graded via staging: the REAL decode+FFT happens once
     // (audioSpectrum → quantized per-bin mean power persisted); both
     // engines then replay the feature algebra — centroid (exact
     // integer ratio, 1dp), rolloff (exact integer cumulative
     // threshold), flatness (micro-nat lift, the q88 scheme) — over the
-    // staged bins. The double-DSP operator surface (audioSpectral)
-    // stays spec-pinned by DspSpec on analytically-known signals.
+    // staged bins. DspSpec pins the FFT and the power spectrum on
+    // analytically-known signals.
     // The per-bin micro-nat ln is STAGED too (r08 advice): Java
     // Math.log and DuckDB's libm are not bit-identical, so a value
     // within an ulp of a 6dp boundary could flip lnsum between

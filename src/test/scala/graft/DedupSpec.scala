@@ -67,7 +67,10 @@ class DedupSpec extends SparkSuite {
   }
 
   test("simhash pairs exact and near duplicates within small hamming") {
-    val pairs = Dedup.simhashPairs(docs, maxHamming = 10)
+    val prints = docs.select(col("doc_id"),
+      graft.functions.TextFns.simhash64(col("text")).as("simhash"))
+    val pairs = Dedup.hammingBandPairs(prints, "simhash", "doc_id",
+        maxHamming = 10)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)))   // hamming 0
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L))

@@ -25,6 +25,13 @@ class DevSpec extends AnyFunSuite {
   private def isCode(line: String): Boolean =
     !Seq("//", "*", "/*").exists(line.trim.startsWith)
 
+  /** Whether a line of `g` can name something defined in `f`.
+    * `ScaleCheck` (`Dev scale`) only times what the entry points run,
+    * so it is no caller of another file's code; its own helpers still
+    * resolve inside it. */
+  private def callerOf(g: java.io.File, f: java.io.File): Boolean =
+    g == f || g.getName != "ScaleCheck.scala"
+
   /** The objects of `src` that own a `def main(`: the innermost object
     * declared before each main. */
   private def mainOwners(src: String): Seq[String] =
@@ -50,7 +57,9 @@ class DevSpec extends AnyFunSuite {
     * it stays in `src/main`. */
   private val callerless = Map(
     "PriceSource" -> ("the reference's Extract stage: the seam a live " +
-      "price fetcher implements, with the wide-to-long unpivot it needs"))
+      "price fetcher implements, with the wide-to-long unpivot it needs"),
+    "CorpusPrepJob" -> ("the composed corpus rebuild ladder the " +
+      "end-to-end measurements name; `Dev scale` runs it"))
 
   test("every top-level object under src/main/scala that is not a " +
     "class companion and defines no main is named by another file, " +
@@ -69,7 +78,7 @@ class DevSpec extends AnyFunSuite {
       (mods + """object\s+(\w+)""").r.findAllMatchIn(src).map(_.group(1))
         .filter { n =>
           !companion(n) && !mainOwners(src).contains(n) &&
-            !named.exists(g => g != f &&
+            !named.exists(g => g != f && callerOf(g, f) &&
               ("""\b""" + n + """\b""").r.findFirstIn(codeOf(g)).nonEmpty)
         }
     }.toSet
@@ -87,9 +96,7 @@ class DevSpec extends AnyFunSuite {
     "encodeBmp" -> ("fixture builder for the BMP decode PixelDecoder " +
       "runs"),
     "slackSlaMiss" -> ("the reference's SLA-miss payload, byte-pinned " +
-      "by AlertsSpec; no verb has an SLA to miss yet"),
-    "explained" -> ("PcaModel's variance-explained fractions: part of " +
-      "the fitted model's result, read by PcaSpec"))
+      "by AlertsSpec; no verb has an SLA to miss yet"))
 
   test("every public def and nested object under src/main/scala that " +
     "is not an override is named on another code line, or is " +
@@ -119,11 +126,28 @@ class DevSpec extends AnyFunSuite {
       }
     }.groupMap(_._1)(_._2)
     val orphans = defs.filter { case (f, i, n) =>
-      seenOn.getOrElse(n, Nil).forall(_ == (f, i))
+      seenOn.getOrElse(n, Nil).forall { case (g, j) =>
+        (g, j) == (f, i) || !callerOf(g, f) }
     }
     assert(orphans.map(_._3).toSet == callerlessMembers.keySet,
       "caller-less members: " + orphans.map { case (f, i, n) =>
         s"${f.getPath}:${i + 1} $n" }.sorted.mkString(", "))
+  }
+
+  test("no .scala file under src contains a control byte other than " +
+    "tab, newline or carriage return") {
+    // grep reports a file holding one as "binary file matches" and
+    // prints none of its lines, so caller searches miss it
+    val allowed = Set[Byte]('\t', '\n', '\r')
+    val hits = files(new java.io.File("src")).flatMap { f =>
+      val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+      bytes.zipWithIndex.collectFirst {
+        case (b, i) if (b >= 0 && b < 0x20 || b == 0x7f) && !allowed(b) =>
+          val line = bytes.take(i).count(_ == '\n') + 1
+          f"${f.getPath}:$line byte 0x$b%02x"
+      }
+    }
+    assert(hits.isEmpty, "control bytes: " + hits.sorted.mkString(", "))
   }
 
   test("an unknown Dev subcommand fails before any session starts, " +

@@ -35,28 +35,31 @@ class DspSpec extends AnyFunSuite {
     assert(math.abs(t - f) < 1e-8)
   }
 
-  test("spectral features: bin-exact sine centroid is its frequency, " +
-    "flatness near zero; noise flatness near one") {
+  test("mean power spectrum: a bin-exact sine's power sits in its own " +
+    "bin; noise spreads its power across the band") {
     val sr = 16000; val fl = 256
     // 4000 Hz = bin 64 exactly (62.5 Hz/bin), integer cycles per frame
     val sine = Array.tabulate(fl * 4)(i =>
       math.round(10000 * math.sin(2 * math.Pi * 4000 * i / sr)).toInt)
     val ps = Dsp.meanPowerSpectrum(sine, fl)
-    val Some((centroid, rolloff, flat)) =
-      Dsp.spectralFeatures(ps, sr, fl)
-    assert(math.abs(centroid - 4000.0) < 1.0, s"centroid $centroid")
-    assert(math.abs(rolloff - 4000.0) < 62.6, s"rolloff $rolloff")
-    assert(flat < 0.01, s"flatness $flat")
-    // seeded uniform noise: flatness well above the tone's
+    assert(ps.length == fl / 2 + 1) // DC..Nyquist
+    assert(ps.indices.maxBy(ps(_)) == 64)
+    // the rounded samples leak a little power; the rest of the band
+    // together holds under 1% of the tone bin's
+    val rest = ps.indices.filter(_ != 64).map(ps(_)).sum
+    assert(rest < 0.01 * ps(64), s"off-bin power $rest vs ${ps(64)}")
+    // seeded uniform noise: no bin holds more than a tenth of the
+    // AC power
     val rng = new scala.util.Random(3L)
     val noise = Array.fill(fl * 4)(rng.nextInt(20001) - 10000)
-    val Some((_, _, nf)) =
-      Dsp.spectralFeatures(Dsp.meanPowerSpectrum(noise, fl), sr, fl)
-    assert(nf > 0.5, s"noise flatness $nf")
+    val pn = Dsp.meanPowerSpectrum(noise, fl).drop(1)
+    assert(pn.max < 0.1 * pn.sum, s"noise peak ${pn.max} of ${pn.sum}")
   }
 
   test("clip shorter than one frame yields no features") {
     assert(Dsp.meanPowerSpectrum(Array(1, 2, 3), 256).isEmpty)
-    assert(Dsp.spectralFeatures(Array.emptyDoubleArray, 16000, 256).isEmpty)
+    // one whole frame is enough; the partial tail is dropped
+    assert(Dsp.meanPowerSpectrum(Array.fill(256 + 3)(1), 256).length ==
+      129)
   }
 }

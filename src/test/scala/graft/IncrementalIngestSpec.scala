@@ -8,7 +8,12 @@ import graft.operators.Dedup
 /** The incremental ingest composition: batch-sized work against
   * persisted state, state appended from survivors only, and the
   * property that makes the whole design auditable — re-ingesting a
-  * batch against the state it just produced is a total no-op. */
+  * batch against the state it just produced is a total no-op.
+  *
+  * Each case releases every survivor frame once nothing reads it: a
+  * survivor stays staged until [[Staging.release]] (`unpersist()` is a
+  * no-op on it), and the appended state reads the survivors lazily,
+  * so the release waits for the case's last run. */
 class IncrementalIngestSpec extends SparkSuite {
   import spark.implicits._
 
@@ -67,6 +72,7 @@ class IncrementalIngestSpec extends SparkSuite {
     val again = s3.select("doc_id").as[Long].collect().toSet
     assert(again.intersect(kept1).isEmpty,
       s"previously-kept docs re-survived: ${again.intersect(kept1)}")
+    Seq(s0, s1, s2, s3).foreach(Staging.release(_))
   }
 
   test("semantic stage wires in when state carries centroids + kept " +
@@ -119,6 +125,7 @@ class IncrementalIngestSpec extends SparkSuite {
     val (surv2, _, _) = IncrementalIngestJob.run(reopened, batch,
       evalSet, IncrementalIngestJob.Config(minQuality = 0.0), Some(be))
     assert(surv2.select("doc_id").as[Long].collect().toSet == ids)
+    Seq(surv, surv2).foreach(Staging.release(_))
   }
 
   test("simhash stage wires in when state carries prints: a batch " +
@@ -178,6 +185,7 @@ class IncrementalIngestSpec extends SparkSuite {
     val (reRun, _, _) = IncrementalIngestJob.run(reopened, surv,
       evalSet, cfg)
     assert(reRun.count() == 0)
+    Seq(surv, survOff, reRun).foreach(Staging.release(_))
   }
 
   test("ALL FIVE stages live (the q362 configuration): the ladder " +
@@ -210,7 +218,6 @@ class IncrementalIngestSpec extends SparkSuite {
     val (s1, st2, ledger) = IncrementalIngestJob.run(st, batch,
       evalSet50, cfg, Some(be))
     val surv = s1.localCheckpoint(true)
-    s1.unpersist()
     // every stage materialized, in run()'s documented order
     assert(ledger.map(_._1) == Seq("input", "canonicalized",
       "scrubbed", "quality_gate", "decontaminated", "exact_deduped",
@@ -230,6 +237,6 @@ class IncrementalIngestSpec extends SparkSuite {
       evalSet50, cfg, Some(survEmb))
     assert(s2.count() == 0, s"survivor re-ingest must be a no-op " +
       s"with all stages live; ledger: ${led2.mkString(", ")}")
-    s2.unpersist()
+    Seq(s1, surv, s2).foreach(Staging.release(_))
   }
 }

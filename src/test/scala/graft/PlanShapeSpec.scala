@@ -35,13 +35,6 @@ class PlanShapeSpec extends SparkSuite {
       graft.operators.Similarity.jlSigns(4, 8).flatten.map(_.toByte).toArray, 8)
     assert((s1.signs ne s2.signs) && s1 == s2 && s1.hashCode == s2.hashCode)
     assert(s1.semanticEquals(s2))
-    // ZValue2: content-equal quantile edges
-    val x = Bridge.expression(col("x")); val y = Bridge.expression(col("y"))
-    val z1 = ZValue2(x, y, Array(1.0, 2.0), Array(3.0, 4.0))
-    val z2 = ZValue2(x, y, Array(1.0, 2.0), Array(3.0, 4.0))
-    assert(z1 == z2 && z1.hashCode == z2.hashCode && z1.semanticEquals(z2))
-    // and inequality still discriminates real content differences
-    assert(ZValue2(x, y, Array(1.0, 2.5), Array(3.0, 4.0)) != z1)
     // PqEncode: independently materialized identical codebooks
     val q1 = PqEncode(child, Array(1.0, 2.0, 3.0, 4.0), Array(2), 2)
     val q2 = PqEncode(child, Array(1.0, 2.0, 3.0, 4.0), Array(2), 2)

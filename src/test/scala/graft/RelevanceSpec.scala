@@ -232,15 +232,15 @@ class RelevanceSpec extends SparkSuite {
       (2L, 4L, 1L, Some(0.0), false), (3L, 0L, 0L, None, false)))
   }
 
-  test("charEntropyFused ≡ charEntropy cell-for-cell, including " +
+  test("charEntropy ≡ its relational twin cell-for-cell, including " +
     "unicode, empty, and single-char docs") {
     import spark.implicits._
     val docs = Seq((1L, "abcdefghijklmnop"), (2L, "aaaa"), (3L, ""),
         (4L, "héllø wörld — ünïcode"), (5L, "a b a b  c"))
       .toDF("doc_id", "text")
-    val a = graft.operators.Relevance.charEntropy(docs)
+    val a = RelevanceTwins.charEntropy(docs)
       .orderBy("doc_id").collect().toSeq
-    val b = graft.operators.Relevance.charEntropyFused(docs)
+    val b = graft.operators.Relevance.charEntropy(docs)
       .orderBy("doc_id").collect().toSeq
     assert(a == b)
   }

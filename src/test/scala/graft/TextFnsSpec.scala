@@ -12,7 +12,7 @@ class TextFnsSpec extends SparkSuite {
     val corpus = Tables.documents(spark, "/root/testdata/sf0.01")
       .select("text")
       .unionByName(Seq("", " ", "  ", "\t", "\t\t", "\n", "a", " a ",
-        "\ta b\n", "a  b", "é ☃ x", "ab", "x\r", "\fx",
+        "\ta b\n", "a  b", "é ☃ x", "a\u000bb", "x\r", "\fx",
         "многа слов", null).map(Tuple1(_)).toDF("text"))
     val t = TextFns.tokens(col("text"))
     val st = graft.plans.TokenStats.column(col("text"))

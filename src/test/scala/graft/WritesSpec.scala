@@ -67,44 +67,6 @@ class WritesSpec extends SparkSuite {
     assert(twice == plain) // idempotent
   }
 
-  test("writeSortedLayout yields disjoint per-file key spans (the " +
-    "precondition for parquet min/max row-group skipping); a hash " +
-    "layout does not") {
-    import org.apache.spark.sql.functions._
-    val df = spark.range(0, 40000)
-      .select(col("id").as("k"), (col("id") % 97).as("v"))
-      // hash-scatter the row order so the unsorted layout is realistic
-      .repartition(8, col("v"))
-    val tmpDir = java.nio.file.Files
-      .createTempDirectory("graft_layout").toString
-    val sortedDir = s"$tmpDir/sorted_layout"
-    val plainDir = s"$tmpDir/plain_layout"
-    Writes.writeSortedLayout(df, sortedDir, Seq("k"), partitions = 8)
-    df.write.mode("overwrite").parquet(plainDir)
-    def spans(dir: String): Seq[(Long, Long)] = {
-      val files = new java.io.File(dir).listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSeq
-      files.map { f =>
-        val r = spark.read.parquet(f).agg(min("k"), max("k")).head()
-        (r.getLong(0), r.getLong(1))
-      }
-    }
-    val sortedSpans = spans(sortedDir).sortBy(_._1)
-    assert(sortedSpans.size > 1)
-    sortedSpans.sliding(2).foreach {
-      case Seq((_, hi), (lo2, _)) => assert(hi < lo2,
-        s"overlapping file spans in sorted layout: $sortedSpans")
-      case _ =>
-    }
-    // every hash-layout file spans ~the full key range → nothing prunes
-    val plainSpans = spans(plainDir)
-    assert(plainSpans.forall { case (lo, hi) => hi - lo > 30000 })
-    // a selective filter's matching rows live in exactly one sorted file
-    val hit = spark.read.parquet(sortedDir).filter(col("k") === 12345)
-      .select(input_file_name()).distinct().count()
-    assert(hit == 1)
-  }
-
   test("applyCdc: latest change per key wins — delete removes, update " +
     "replaces, untouched keys survive, stale changes are ignored") {
     val table = Seq((1, "a", 10), (2, "a", 20), (3, "a", 30))
@@ -159,66 +121,6 @@ class WritesSpec extends SparkSuite {
       .orderBy("k").collect().toSeq
     assert(bloom == plain)
     assert(bloom.size == 110) // 100 kept + 10 genuinely new
-  }
-
-  test("z-order kernel: quantile bucket search and bit interleave") {
-    import graft.plans.ZValue2._
-    assert(bucketOf(-1.0, Array(0.0, 10.0)) == 0)
-    assert(bucketOf(0.0, Array(0.0, 10.0)) == 1)
-    assert(bucketOf(5.0, Array(0.0, 10.0)) == 1)
-    assert(bucketOf(10.0, Array(0.0, 10.0)) == 2)
-    assert(bucketOf(99.0, Array(0.0, 10.0)) == 2)
-    // x=0b11 occupies even bit positions {0,2}=5; y=0b01 odd position 1=2
-    assert(interleave16(3, 1) == 7L)
-    assert(interleave16(0xffff, 0) == 0x55555555L)
-    assert(interleave16(0, 0xffff) == 0xaaaaaaaaL)
-  }
-
-  test("zvalue2 column output (codegen path) matches the interpreted " +
-    "kernel") {
-    import org.apache.spark.sql.functions._
-    val edges = Array(10.0, 20.0, 30.0)
-    val rows = spark.range(0, 40)
-      .select(col("id").cast("double").as("x"),
-        (lit(40.0) - col("id")).as("y"))
-    val got = rows.select(col("x"), col("y"),
-        graft.plans.ZOrderFns.zValue(col("x"), col("y"), edges, edges)
-          .as("z"))
-      .collect().map(r => (r.getDouble(0), r.getDouble(1), r.getLong(2)))
-    got.foreach { case (x, y, z) =>
-      val want = graft.plans.ZValue2.interleave16(
-        graft.plans.ZValue2.bucketOf(x, edges),
-        graft.plans.ZValue2.bucketOf(y, edges))
-      assert(z == want, s"($x,$y)")
-    }
-  }
-
-  test("z-order layout bounds per-file min/max boxes in BOTH dimensions " +
-    "— a selective predicate on either column prunes") {
-    import org.apache.spark.sql.functions._
-    val df = spark.range(0, 40000).select(
-      (col("id") % 200).cast("double").as("x"),
-      ((col("id") * 7919) % 200).cast("double").as("y"))
-    val base = java.nio.file.Files.createTempDirectory("graft_z").toString
-    Writes.writeZOrderLayout(df, s"$base/z", "x", "y", partitions = 16)
-    val files = new java.io.File(s"$base/z").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSeq
-    assert(files.size > 4)
-    val boxes = files.map { f =>
-      val r = spark.read.parquet(f)
-        .agg(min("x"), max("x"), min("y"), max("y")).head()
-      (r.getDouble(1) - r.getDouble(0), r.getDouble(3) - r.getDouble(2))
-    }
-    // mean box area ≪ the full domain: both dims are bounded at once
-    // (a single-column sort leaves the other dim's span ≈ full range)
-    val meanArea = boxes.map { case (dx, dy) => dx * dy }.sum / boxes.size
-    assert(meanArea < 0.25 * 199.0 * 199.0,
-      s"boxes not clustered: $boxes")
-    // 2-d point query: matching rows live in a small minority of files
-    val hit = spark.read.parquet(s"$base/z")
-      .filter(col("x").between(50, 59) && col("y").between(50, 59))
-      .select(input_file_name()).distinct().count()
-    assert(hit <= files.size / 2, s"$hit of ${files.size} files")
   }
 
   test("insertIgnoreBloom never shuffles the existing table: its only " +
@@ -311,7 +213,7 @@ class WritesSpec extends SparkSuite {
     val a = Seq((1L, Option.empty[String], Option("x")),
       (2L, Option("p"), Option("q"))).toDF("doc_id", "c1", "c2")
     val b = Seq((1L, Option(""), Option("x")),
-      (2L, Option("pq"), Option.empty[String]))
+      (2L, Option("p\u0001q"), Option.empty[String]))
       .toDF("doc_id", "c1", "c2")
     val out = Writes.snapshotDiff(a, b, Seq("doc_id"), Seq("c1", "c2"))
       .orderBy("doc_id").as[(Long, String)].collect().toSeq
