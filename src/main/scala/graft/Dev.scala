@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.jobs.{IncrementalIngestJob, Ladder}
 import graft.operators.SemDedup
 import graft.streaming.StreamingCorpusIngest
@@ -163,9 +166,11 @@ object Dev {
 
   /** Attributes the funnel probe's FIXED per-batch cost
     * (SCALECHECK_funnel_r12: a flat ~25-30 s across 8k-2.05M state
-    * docs) to its stages, via the [[IncrementalIngestJob.stageTimer]]
-    * seam. Same layout as `funnel-scale`'s probe leg, default mult 2
-    * (the smallest curve point — at that size the cost is ~all fixed),
+    * docs) to its stages. Each ladder stage is one `localCheckpoint`
+    * action whose plan root observes its `ladder:<name>` ledger count;
+    * a query-execution listener times those actions. Same layout as
+    * `funnel-scale`'s probe leg, default mult 2 (the smallest curve
+    * point — at that size the cost is ~all fixed),
     * SPARK_GRAFT_BENCH_RUNS probe runs (default 2). */
   private def funnelProfile(): Unit = {
     val mult = scaleOr(2)
@@ -180,21 +185,31 @@ object Dev {
         // staged = the stage's checkpoint job (its ledger count is
         // observed in it); gap = the EAGER work between stage events
         // (bloom builds, the label-propagation loops) — the hidden share
-        var last = System.nanoTime()
-        IncrementalIngestJob.stageTimer = Some { (name, sec) =>
-          val now = System.nanoTime()
-          val gap = (now - last) / 1e9 - sec
-          last = now
-          println(f"[profile] stage $name%-18s staged $sec%7.2f s   " +
-            f"eager-gap $gap%7.2f s")
+        val timer = new QueryExecutionListener {
+          private var last = System.nanoTime()
+          def onSuccess(funcName: String, qe: QueryExecution,
+                        durationNs: Long): Unit = qe.logical match {
+            case m: CollectMetrics if m.name.startsWith(Ladder.RddPrefix) =>
+              val now = System.nanoTime()
+              val sec = durationNs / 1e9
+              val gap = (now - last) / 1e9 - sec
+              last = now
+              val name = m.name.stripPrefix(Ladder.RddPrefix)
+              println(f"[profile] stage $name%-18s staged $sec%7.2f s   " +
+                f"eager-gap $gap%7.2f s")
+            case _ =>
+          }
+          def onFailure(funcName: String, qe: QueryExecution,
+                        exception: Exception): Unit = ()
         }
+        spark.listenerManager.register(timer)
         val t0 = System.nanoTime()
         val (surv, _, _) = IncrementalIngestJob.run(state, f.batch,
           f.evalSet, f.cfg, Some(f.batchEmb))
         surv.write.format("noop").mode("overwrite").save()
         Staging.release(surv)
         println(f"[profile] TOTAL probe ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-        IncrementalIngestJob.stageTimer = None
+        spark.listenerManager.unregister(timer)
       }
       f.batch.unpersist()
       org.apache.commons.io.FileUtils.deleteQuietly(

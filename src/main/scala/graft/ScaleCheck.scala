@@ -403,26 +403,6 @@ private[graft] object ScaleCheck {
     time("zipf_slope", nd) {
       sink(graft.operators.Relevance.zipfSlope(docs))
     }
-    // image near-dup at volume: real PNG encode+decode+pool+DCT per
-    // row (pure map), then the banded-Hamming join with the hot-bucket
-    // cap binding (constant-gradient fixtures collide by design — the
-    // cap is what keeps the bucket join linear; siblings still pair)
-    time("image_phash_pairs_capped", nd) {
-      val media = docs.select(col("doc_id")).as[Long]
-        .mapPartitions(_.map { id =>
-          val base = id / 2
-          val w = (16 + base % 13).toInt
-          val h = (16 + base % 7).toInt
-          val px = Array.tabulate(w * h)(i =>
-            ((base * 3 + 7 * (i % w) + 13 * (i / w)) % 256).toInt)
-          if (id % 2 == 1) px(0) = (px(0) + 8) % 256
-          Multimodal.MediaRow(id, "image", MediaCodecs.encodePng(
-            MediaCodecs.GrayImage(w, h, px)))
-        }).toDF()
-      val hashed = Multimodal.imagePhash(media).filter(col("valid"))
-      sink(Dedup.hammingBandPairs(hashed, "phash", "doc_id",
-        maxHamming = 3, maxBucket = 1000))
-    }
     // audio DSP at volume: decode + integer activity + FFT power
     // spectrum, both map-side
     time("audio_activity_spectral", nd) {

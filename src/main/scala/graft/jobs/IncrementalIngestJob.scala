@@ -36,12 +36,6 @@ import graft.operators.{Decontaminate, Dedup, SemDedup}
   */
 object IncrementalIngestJob {
 
-  /** Dev-only observability seam: when set, [[run]] reports each
-    * stage's checkpoint wall time (name, seconds) — the number
-    * the funnel profile attributes the fixed per-batch cost with.
-    * Never set in production paths; the ledger shape is unchanged. */
-  private[graft] var stageTimer: Option[(String, Double) => Unit] = None
-
   /** The persisted between-batches state. `fingerprints` is one
     * column (`fingerprint`, the [[TextFns.fingerprint]] hex form);
     * `sigIndex` is [[Dedup.minhashSignatures]] output; the semantic
@@ -180,7 +174,7 @@ object IncrementalIngestJob {
       : (DataFrame, State, Seq[(String, Long)]) = {
     require(state.centroids.isDefined == state.keptEmbeddings.isDefined,
       "semantic state must come as a (centroids, keptEmbeddings) pair")
-    val ladder = new Ladder(stageTimer)
+    val ladder = new Ladder()
     import ladder.stage
 
     // map-side gates first (cheapest per row, shrink before any probe):
@@ -201,42 +195,34 @@ object IncrementalIngestJob {
       Dedup.incrementalByFingerprint(state.fingerprints, decontaminated,
         expectedItems = Some(ladder.lastCount)))
 
-    // near dedup, two verdicts: (a) the banded probe of the signature
-    // index at `minMatches` agreement (corpus wins); (b) within-batch
-    // group labeling at band-collision granularity (the q58 scale
-    // contract — min-id canonical survives). Both are batch-sized.
-    val nearVerdicts = Dedup.incrementalLshDedup(state.sigIndex,
-      exactDeduped, cfg.minhashK, cfg.bands, cfg.shingleN,
-      cfg.minMatches)
-    val vsIndex = exactDeduped.join(
-      nearVerdicts.filter(col("kept") === 1L).select(col("doc_id")),
-      Seq("doc_id"), "left_semi")
-    val groups = Dedup.minhashDedupGroups(vsIndex, cfg.minhashK,
-      cfg.bands, cfg.shingleN)
-    val nearDeduped = stage("near_deduped", vsIndex.join(
-      groups.filter(col("doc_id") === col("canonical"))
-        .select(col("doc_id")),
-      Seq("doc_id"), "left_semi"))
-
-    // SimHash near dedup (optional fourth flavor): the q358 probe of
-    // the persisted prints, then within-batch hamming groups — the
-    // same two-verdict shape as the MinHash stage above
-    val simDeduped = state.simhashPrints match {
-      case Some(prints) =>
-        val verdicts = Dedup.incrementalSimhashDedup(prints,
-          nearDeduped, cfg.simhashMaxHamming)
-        val vsPrints = nearDeduped.join(
-          verdicts.filter(col("kept") === 1L).select(col("doc_id")),
-          Seq("doc_id"), "left_semi")
-        val hashed = vsPrints.select(col("doc_id"),
-          TextFns.simhash64(col("text")).as("simhash"))
-        val groups = Dedup.hammingDedupGroups(hashed, "simhash",
-          "doc_id", cfg.simhashMaxHamming)
-        stage("simhash_deduped", vsPrints.join(
-          groups.filter(col("doc_id") === col("canonical"))
-            .select(col("doc_id")),
-          Seq("doc_id"), "left_semi"))
-      case None => nearDeduped
+    // near dedup, two verdicts per print family: (a) the banded probe
+    // of the persisted index (corpus wins); (b) within-batch group
+    // labeling at band-collision granularity (the q58 scale contract —
+    // min-id canonical survives). Both are batch-sized.
+    def nearDedup(name: String, docs: DataFrame,
+                  probe: DataFrame => DataFrame,
+                  groups: DataFrame => DataFrame): DataFrame = {
+      val vsIndex = docs.join(
+        probe(docs).filter(col("kept") === 1L).select(col("doc_id")),
+        Seq("doc_id"), "left_semi")
+      stage(name, vsIndex.join(
+        groups(vsIndex).filter(col("doc_id") === col("canonical"))
+          .select(col("doc_id")),
+        Seq("doc_id"), "left_semi"))
+    }
+    // MinHash: the signature index at `minMatches` agreement
+    val nearDeduped = nearDedup("near_deduped", exactDeduped,
+      Dedup.incrementalLshDedup(state.sigIndex, _, cfg.minhashK,
+        cfg.bands, cfg.shingleN, cfg.minMatches),
+      Dedup.minhashDedupGroups(_, cfg.minhashK, cfg.bands, cfg.shingleN))
+    // SimHash (optional fourth flavor): the q358 probe of the
+    // persisted prints, then within-batch hamming groups
+    val simDeduped = state.simhashPrints.fold(nearDeduped) { prints =>
+      nearDedup("simhash_deduped", nearDeduped,
+        Dedup.incrementalSimhashDedup(prints, _, cfg.simhashMaxHamming),
+        vs => Dedup.hammingDedupGroups(vs.select(col("doc_id"),
+            TextFns.simhash64(col("text")).as("simhash")), "simhash",
+          "doc_id", cfg.simhashMaxHamming))
     }
 
     // semantic dedup (optional): assigned batch probes the kept corpus

@@ -8,13 +8,9 @@ import graft.functions.{TextClean, TextFns}
 /** The spine both corpus ladders share ([[CorpusPrepJob]] rebuilds,
   * [[IncrementalIngestJob]] ingests a batch): the staged runner with
   * its per-stage row ledger, and the map-side prep prefix every doc
-  * passes before anything hashes or tokenizes it.
-  *
-  * `timer`, when set, receives each stage's materialization wall time
-  * (name, seconds) — the [[IncrementalIngestJob.stageTimer]] seam. The
-  * caller owns the last staged frame: [[Staging.release]] frees it. */
-private[graft] final class Ladder(
-    timer: Option[(String, Double) => Unit] = None) {
+  * passes before anything hashes or tokenizes it. The caller owns the
+  * last staged frame: [[Staging.release]] frees it. */
+private[graft] final class Ladder {
   private val entries =
     scala.collection.mutable.ListBuffer.empty[(String, Long)]
   private val pending = scala.collection.mutable.ListBuffer.empty[String]
@@ -39,14 +35,12 @@ private[graft] final class Ladder(
     * stays in executor memory, and no stage's plan carries the plans
     * before it. */
   def stage(name: String, df: DataFrame): DataFrame = {
-    val t0 = System.nanoTime()
     val counted = observed(name, df)
     val staged = Staging.checkpoint(counted,
       name = Some(Ladder.RddPrefix + name))
     val rows = counted.queryExecution.observedMetrics
     entries ++= pending.map(n => n -> rows(Ladder.RddPrefix + n).getLong(0))
     pending.clear()
-    timer.foreach(_(name, (System.nanoTime() - t0) / 1e9))
     if (previous != null) Staging.release(previous)
     previous = staged
     staged

@@ -25,9 +25,7 @@ import org.apache.spark.sql.functions._
   */
 object Train {
 
-  case class Result(model: Transformer,
-                    metrics: Map[String, Double],
-                    confusion: DataFrame,
+  case class Result(metrics: Map[String, Double],
                     importances: Seq[(String, Double)])
 
   def assembler: VectorAssembler = new VectorAssembler()
@@ -131,14 +129,9 @@ object Train {
   def evaluateModel(model: Transformer, test: DataFrame,
                     importances: Seq[(String, Double)] = Seq.empty): Result = {
     val predictions = model.transform(assembler.transform(test)).cache()
-    val confusion = predictions
-      .groupBy(FeatureEngineering.classOf(col("prediction"))
-          .as("predicted_class"),
-        FeatureEngineering.classOf(col("label")).as("actual_class"))
-      .agg(count(lit(1)).as("n"))
     val metrics = metricsOf(predictions)
     predictions.unpersist()
-    Result(model, metrics, confusion, importances)
+    Result(metrics, importances)
   }
 
   /** The metric map for a frame already carrying (prediction, label):

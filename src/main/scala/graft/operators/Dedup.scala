@@ -82,32 +82,23 @@ object Dedup {
       org.apache.spark.sql.types.StringType,
       "corpusFingerprints.fingerprint must be StringType (the hex " +
         "form TextFns.fingerprint emits)")
-    // sizing count on the raw batch unless supplied; an upper bound of
-    // zero is an empty batch, which has no survivors (and over zero rows
-    // stat.bloomFilter reads a null buffer and throws)
-    val expected = expectedItems.getOrElse(batch.count())
-    if (expected == 0) batch.limit(0)
-    else {
-      val printed = batch.withColumn("fingerprint",
-        TextFns.fingerprint(col(textCol)))
-      // bloom over the PRE-dedup prints (identical distinct-key set, no
-      // window shuffle)
-      val keyHash = xxhash64(col("fingerprint"))
-      val bf = printed.stat.bloomFilter(keyHash, expected, fpp)
-      // within-batch dedup (min id per fingerprint survives)
-      val w = Window.partitionBy(col("fingerprint"))
-      val batchCanonical = printed
-        .withColumn("rk",
-          row_number().over(w.orderBy(col(idCol))))
-        .filter(col("rk") === 1).drop("rk")
-      val seen = corpusFingerprints
-        .filter(graft.plans.BloomFns.mightContain(
-          xxhash64(col("fingerprint")), bf))
-        .select(col("fingerprint"))
-      batchCanonical
-        .join(broadcast(seen), Seq("fingerprint"), "left_anti")
-        .select(batch.columns.map(col).toIndexedSeq: _*)
-    }
+    val printed = batch.withColumn("fingerprint",
+      TextFns.fingerprint(col(textCol)))
+    // bloom over the PRE-dedup prints (identical distinct-key set, no
+    // window shuffle); an empty batch has no survivors
+    val key = Seq(col("fingerprint"))
+    graft.plans.BloomFns.probe(corpusFingerprints, key, printed, key,
+        expectedItems, fpp)
+      .fold(batch.limit(0)) { hits =>
+        // within-batch dedup (min id per fingerprint survives)
+        val w = Window.partitionBy(col("fingerprint"))
+        printed
+          .withColumn("rk", row_number().over(w.orderBy(col(idCol))))
+          .filter(col("rk") === 1).drop("rk")
+          .join(broadcast(hits.select(col("fingerprint"))),
+            Seq("fingerprint"), "left_anti")
+          .select(batch.columns.map(col).toIndexedSeq: _*)
+      }
   }
 
   /** MinHash signatures: `k` md5-seeded min-hashes over `n`-gram shingles.
@@ -136,6 +127,17 @@ object Dedup {
     graft.plans.FastMd5.column(
       sigs.foldLeft(prefix)((acc, s) => concat(acc, lit("|"), s)))
 
+  /** The `bands` MinHash band buckets of a row's sig_0..sig_{k-1}, as
+    * one array: band b hashes signatures b·r until (b+1)·r, r = k/bands.
+    * The band index prefixes each hash, so buckets of different bands
+    * never collide and one bucket column keys every band's join. */
+  private def minhashBuckets(k: Int, bands: Int): Column = {
+    require(k % bands == 0, "k must be divisible by bands")
+    val r = k / bands
+    array((0 until bands).map(b => bandBucket(lit(b.toString),
+      (b * r until (b + 1) * r).map(i => col(s"sig_$i")))): _*)
+  }
+
   /** MinHash-LSH candidate pairs: signatures split into `bands` bands of
     * `k/bands` rows; docs sharing any band bucket become a candidate pair.
     * Pair generation is a self-join on the band key — shuffle by bucket,
@@ -151,25 +153,10 @@ object Dedup {
     * signatures compute once per caller. */
   private def lshCandidates(sigs: DataFrame, k: Int, bands: Int,
                             idCol: String): DataFrame = {
-    require(k % bands == 0, "k must be divisible by bands")
-    val r = k / bands
-    val banded = sigs.select(col(idCol),
-      explode(array((0 until bands).map(b => struct(lit(b).as("band"),
-        bandBucket(lit(b.toString), (b * r until (b + 1) * r)
-          .map(i => col(s"sig_$i"))).as("bucket"))): _*)).as("bb"))
-      .select(col(idCol), col("bb.band"), col("bb.bucket"))
+    val banded = sigs.select(col(idCol).as("id"),
+        explode(minhashBuckets(k, bands)).as("bucket"))
       .filter(col("bucket").isNotNull)
-    // explicit-parallelism exchange: the pair fan-out is quadratic in
-    // bucket size while the pre-join input is tiny — without this AQE
-    // coalesces the join to a few tasks (SkewTools.fanoutRepartition)
-    val bandedMat = SkewTools.fanoutRepartition(banded,
-      col("band"), col("bucket"))
-    val a = bandedMat.select(col("band"), col("bucket"),
-      col(idCol).as("id_a"))
-    val b = bandedMat.select(col("band"), col("bucket"),
-      col(idCol).as("id_b"))
-    a.join(b, Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
+    SkewTools.selfPairs(banded, Seq("bucket"), Seq("id"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_shared_bands"))
   }
@@ -183,22 +170,16 @@ object Dedup {
     *
     * `corpusSigs` is [[minhashSignatures]] output (`idCol`,
     * sig_0..sig_{k-1}) — the compact side table a pipeline persists and
-    * appends each surviving batch's signatures to. Scale shape: the
-    * index is scanned ONCE, collapsed to distinct signature vectors
-    * with multiplicity (one narrow map-side-combined exchange), and
-    * banded map-side; the banded distinct BATCH signatures are
-    * broadcast (an ingest batch, not a second corpus — for corpus-sized
-    * "batches" re-band the union with [[minhashLshPairs]] instead), so
-    * the corpus never shuffles full rows and only bucket-collision
-    * candidates — once per distinct content pair, copies multiplying
-    * through counts — reach the pair aggregation. The verdict is
-    * integer signature agreement (never a float Jaccard), so it is
-    * exactly reproducible cross-engine (the q346 hash oracle).
+    * appends each surviving batch's signatures to. The scale shape is
+    * [[bandedIndexProbe]]'s (for corpus-sized "batches" re-band the
+    * union with [[minhashLshPairs]] instead). The verdict is integer
+    * signature agreement (never a float Jaccard), so it is exactly
+    * reproducible cross-engine (the q346 hash oracle).
     *
     * Returns one row per batch doc: (`idCol`, n_candidates, n_dups,
     * kept) with kept = 1 iff no indexed doc reached `minMatches`.
-    * Shingle-less docs (null signatures) never band, on either side —
-    * the [[bandBucket]] null discipline — so such batch docs come back
+    * Shingle-less docs (null signatures) never band — the
+    * [[bandBucket]] null discipline — so such batch docs come back
     * (0, 0, kept=1). */
   def incrementalLshDedup(corpusSigs: DataFrame, batch: DataFrame,
                           k: Int = 8, bands: Int = 4, n: Int = 2,
@@ -214,56 +195,78 @@ object Dedup {
         s"corpusSigs missing column $c — pass minhashSignatures(corpus, " +
           s"k = $k) output")
     }
-    val r = k / bands
-    // band-bucket explode carrying the full signature as one array
-    // column: verification happens right at the bucket match, so the
-    // corpus index is never re-joined by id (one pass total). The
-    // band index needs no join key of its own — bandBucket md5-prefixes
-    // it, so cross-band buckets cannot collide. BOTH sides collapse to
-    // distinct signature VECTORS first (corpus with multiplicity,
-    // batch as the verdict key): docs with identical signatures get
-    // identical verdicts, so the bucket join runs once per distinct
-    // content and copy mass on either side multiplies back through
-    // counts instead of through join rows (the q358 512× lesson —
-    // pre-collapse, the both-sides-inflated probe read 504-662 s).
-    def bucketsOf(sigs: DataFrame): Column =
-      explode(array((0 until bands).map(b =>
-        bandBucket(lit(b.toString), (b * r until (b + 1) * r)
-          .map(i => sigs(s"sig_$i")))): _*))
-    val bsigs = minhashSignatures(batch, k, n, textCol, idCol)
-      .localCheckpoint() // feeds both the probe and the output spine
-    val cdist = corpusSigs.filter(col("sig_0").isNotNull)
-      .groupBy(sigCols.map(col): _*)
-      .agg(count(lit(1)).cast("long").as("_n"))
-    val cb = cdist.select(array(sigCols.map(col): _*).as("_csig"),
-        col("_n"), bucketsOf(cdist).as("bucket"))
-      .filter(col("bucket").isNotNull)
-    val bdist = bsigs.filter(col("sig_0").isNotNull)
-      .select(sigCols.map(col): _*).distinct()
-    // the batch side keeps sig_0..sig_{k-1} as plain columns through
-    // to the verdict join: join keys re-extracted from an array let
-    // Catalyst infer isnotnull(element_at(array(...), i)) filters that
-    // whole-stage codegen cannot compile (janino "is not an rvalue")
-    val bb = bdist.select(sigCols.map(col) :+ bucketsOf(bdist).as("bucket"): _*)
-      .filter(col("bucket").isNotNull)
+    // the index side carries its full signature as one array column:
+    // verification happens right at the bucket match, so the corpus
+    // index is never re-joined by id (one pass total)
     val matches = (0 until k).map(i =>
-        when(element_at(col("_csig"), i + 1) === col(s"sig_$i"), 1)
+        when(element_at(col("_c"), i + 1) === col(s"sig_$i"), 1)
           .otherwise(0))
       .reduce(_ + _)
+    bandedIndexProbe(corpusSigs,
+      minhashSignatures(batch, k, n, textCol, idCol), idCol, sigCols,
+      minhashBuckets(k, bands), matches >= minMatches)
+  }
+
+  /** The probe of a persisted print index by a batch, shared by
+    * [[incrementalLshDedup]] (`keys` sig_0..sig_{k-1}) and
+    * [[incrementalSimhashDedup]] (`keys` simhash). `batchPrints` is
+    * (`idCol`, `keys`); it is staged once, because it feeds both the
+    * probe and the output spine. `buckets` is an array of band buckets
+    * over the `keys` columns, each unique to its band. `isDup` is the
+    * exact verdict for one candidate pair: the index side's prints
+    * come packed in `_c` (the one key itself, or an array of the keys),
+    * the batch side's as the plain `keys` columns.
+    *
+    * BOTH sides collapse to distinct prints first (the index with its
+    * multiplicity, the batch as the verdict key): identical prints get
+    * identical verdicts, so the bucket join runs once per distinct
+    * content and copy mass on either side multiplies back through
+    * counts instead of through join rows. Without the index collapse
+    * the 32×-copy SimHash ScaleCheck probe read 373 s (12.4 s with it,
+    * against a 509 s full rebuild); without the batch collapse the 512×
+    * crossover's copy-heavy batches read 504-885 s. The index is scanned once and its only
+    * exchange is the narrow (prints, count) pre-aggregation; the banded
+    * distinct batch prints are broadcast (an ingest batch, not a second
+    * corpus), so the index never shuffles full rows.
+    *
+    * The batch side keeps `keys` as plain columns through to the
+    * verdict join: join keys re-extracted from an array let Catalyst
+    * infer isnotnull(element_at(array(...), i)) filters that
+    * whole-stage codegen cannot compile (janino "is not an rvalue").
+    *
+    * Returns one row per batch doc: (`idCol`, n_candidates, n_dups,
+    * kept), counting INDEX ROWS (copies included); kept = 1 iff no
+    * indexed print is a dup. Null prints never band, on either side,
+    * so such batch docs come back (0, 0, kept=1). */
+  private def bandedIndexProbe(index: DataFrame, batchPrints: DataFrame,
+                               idCol: String, keys: Seq[String],
+                               buckets: Column,
+                               isDup: Column): DataFrame = {
+    val spine = batchPrints.localCheckpoint()
+    val keyCols = keys.map(col)
+    val packed = if (keys.size == 1) keyCols.head else array(keyCols: _*)
+    val cdist = index.filter(keyCols.head.isNotNull)
+      .groupBy(keyCols: _*)
+      .agg(count(lit(1)).cast("long").as("_n"))
+    val cb = cdist.select(packed.as("_c"), col("_n"),
+        explode(buckets).as("bucket"))
+      .filter(col("bucket").isNotNull)
+    val bb = spine.filter(keyCols.head.isNotNull)
+      .select(keyCols: _*).distinct()
+      .select(keyCols :+ explode(buckets).as("bucket"): _*)
+      .filter(col("bucket").isNotNull)
+    // a pair sharing several bands repeats with the SAME verdict and
+    // multiplicity — max() collapses the band fanout
     val pairs = cb.join(broadcast(bb), Seq("bucket"))
-      .select(sigCols.map(col) ++
-        Seq(col("_csig"), col("_n"), matches.as("_m")): _*)
-      // a pair sharing several bands repeats with the SAME agreement
-      // and multiplicity — max() collapses the band fanout
-      .groupBy(sigCols.map(col) :+ col("_csig"): _*)
-      .agg(max(col("_n")).as("n"), max(col("_m")).as("m"))
-    // verdicts fan back out over the spine by the signature columns
-    // (null signatures never match — shingle-less docs read (0, 0, 1))
-    val verdictCols = pairs.groupBy(sigCols.map(col): _*).agg(
+      .select(keyCols ++ Seq(col("_c"), col("_n"),
+        when(isDup, 1).otherwise(0).as("_dup")): _*)
+      .groupBy(keyCols :+ col("_c"): _*)
+      .agg(max(col("_n")).as("n"), max(col("_dup")).as("dup"))
+    val verdicts = pairs.groupBy(keyCols: _*).agg(
       sum(col("n")).cast("long").as("n_candidates"),
-      sum(when(col("m") >= minMatches, col("n")).otherwise(0L))
+      sum(when(col("dup") === 1, col("n")).otherwise(0L))
         .cast("long").as("n_dups"))
-    bsigs.join(broadcast(verdictCols), sigCols, "left")
+    spine.join(broadcast(verdicts), keys, "left")
       .select(col(idCol),
         coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
         coalesce(col("n_dups"), lit(0L)).as("n_dups"),
@@ -278,12 +281,10 @@ object Dedup {
     * per group), with unmatched fingerprints as singletons. */
   def hammingDedupGroups(hashed: DataFrame, hashCol: String,
                          idCol: String, maxHamming: Int = 3,
-                         maxBucket: Int = Int.MaxValue,
                          maxIterations: Int = 16,
                          smallCutoff: Long = defaultSmallCutoff)
       : DataFrame = {
-    val edges = hammingBandPairs(hashed, hashCol, idCol, maxHamming,
-      maxBucket)
+    val edges = hammingBandPairs(hashed, hashCol, idCol, maxHamming)
     labelPropagate(hashed.select(col(idCol).as("id")), edges,
         maxIterations, smallCutoff)
       .select(col("id").as(idCol), col("canonical"))
@@ -360,16 +361,12 @@ object Dedup {
                          idCol: String = "doc_id",
                          smallCutoff: Long = defaultSmallCutoff)
       : DataFrame = {
-    require(k % bands == 0, "k must be divisible by bands")
-    val r = k / bands
     val sigs = minhashSignatures(docs, k, n, textCol, idCol)
     // null buckets (shingle-less docs) never band. banded feeds both
     // halves of labelPropagate's symmetric edge list: materialize once
     // instead of re-running the minhash scan
     val banded = sigs.select(col(idCol).as("id"),
-      explode(array((0 until bands).map(b =>
-        bandBucket(lit(b.toString), (b * r until (b + 1) * r)
-          .map(i => col(s"sig_$i")))): _*)).as("bucket"))
+        explode(minhashBuckets(k, bands)).as("bucket"))
       .filter(col("bucket").isNotNull)
       .localCheckpoint()
     val edges = banded
@@ -428,36 +425,34 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, n: Int = 2, threshold: Double = 0.5,
                         maxDf: Int = 1000,
                         textCol: String = "text",
-                        idCol: String = "doc_id"): DataFrame = {
-    val withSets = docs.select(col(idCol),
-      TextFns.shingles(col(textCol), n).as("sh"))
-      .withColumn("set_size", size(col("sh")))
-    // document frequency via one window over the shingle key — the same
-    // exchange the self-join below shuffles on, so the filter costs a
-    // sort within already-shuffled partitions, not an extra shuffle
-    val inverted = withSets
-      .select(col(idCol), col("set_size"), explode(col("sh")).as("shingle"))
-      .withColumn("df", count(lit(1)).over(
-        Window.partitionBy(col("shingle"))))
-      .filter(col("df") <= maxDf)
-      .drop("df")
-    // explicit-parallelism exchange before the quadratic posting-list
-    // join (see SkewTools.fanoutRepartition); the window above already
-    // shuffled by shingle, so this re-pins the SAME partitioning with
-    // a user count AQE cannot coalesce
-    val invertedMat = SkewTools.fanoutRepartition(inverted, col("shingle"))
-    val a = invertedMat.select(col("shingle"), col(idCol).as("id_a"),
-      col("set_size").as("size_a"))
-    val b = invertedMat.select(col("shingle"), col(idCol).as("id_b"),
-      col("set_size").as("size_b"))
-    a.join(b, Seq("shingle"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"), col("size_a"), col("size_b"))
-      .agg(count(lit(1)).as("inter"))
+                        idCol: String = "doc_id"): DataFrame =
+    shingleOverlap(docs, n, maxDf, textCol, idCol)
       .withColumn("jaccard", graft.functions.ExactRound.ratio(
         col("inter"), col("size_a") + col("size_b") - col("inter"), 6))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("inter"), col("jaccard"))
+
+  /** The shingle overlap of every doc pair sharing a surviving
+    * shingle: (id_a, id_b, size_a, size_b, inter), id_a < id_b, with
+    * full shingle-set sizes and the count of shared surviving shingles —
+    * the posting-list self-join under [[ngramJaccardPairs]] and
+    * [[containmentPairs]]. Shingles in more than `maxDf` docs drop out
+    * first; df comes from one window over the shingle key, the same
+    * key the pair join shuffles on, so the cap costs a sort within
+    * already-shuffled partitions, not an extra shuffle. A doc with no
+    * shingles explodes to no posting rows and pairs with nothing. */
+  private def shingleOverlap(docs: DataFrame, n: Int, maxDf: Int,
+                             textCol: String, idCol: String): DataFrame = {
+    val inverted = docs
+      .select(col(idCol).as("id"), TextFns.shingles(col(textCol), n).as("sh"))
+      .select(col("id"), size(col("sh")).as("size"),
+        explode(col("sh")).as("shingle"))
+      .withColumn("df", count(lit(1)).over(
+        Window.partitionBy(col("shingle"))))
+      .filter(col("df") <= maxDf)
+    SkewTools.selfPairs(inverted, Seq("shingle"), Seq("id", "size"))
+      .groupBy(col("id_a"), col("id_b"), col("size_a"), col("size_b"))
+      .agg(count(lit(1)).as("inter"))
   }
 
   /** Directed shingle-containment near-dup pairs: C(a→b) =
@@ -468,35 +463,15 @@ object Dedup {
     * unordered pair carrying BOTH directions, kept when either side's
     * containment clears `threshold`.
     *
-    * Scale shape is identical to [[ngramJaccardPairs]] — posting-list
-    * self-join on the shingle key with the `maxDf` hot-shingle cap
-    * (df computed in the same exchange the join shuffles on) and the
-    * explicit-parallelism pin before the quadratic join. Ratios in
-    * exact integer arithmetic (half-up, 6dp) so the DuckDB oracle
-    * (q121) reproduces them bit-for-bit. */
+    * Scale shape is [[ngramJaccardPairs]]'s: the same
+    * [[shingleOverlap]] posting-list join with the `maxDf` hot-shingle
+    * cap. Ratios in exact integer arithmetic (half-up, 6dp) so the
+    * DuckDB oracle (q121) reproduces them bit-for-bit. */
   def containmentPairs(docs: DataFrame, n: Int = 2,
                        threshold: Double = 0.8, maxDf: Int = 1000,
                        textCol: String = "text",
-                       idCol: String = "doc_id"): DataFrame = {
-    val withSets = docs.select(col(idCol),
-      TextFns.shingles(col(textCol), n).as("sh"))
-      .withColumn("set_size", size(col("sh")))
-      .filter(col("set_size") > 0)
-    val inverted = withSets
-      .select(col(idCol), col("set_size"), explode(col("sh")).as("shingle"))
-      .withColumn("df", count(lit(1)).over(
-        Window.partitionBy(col("shingle"))))
-      .filter(col("df") <= maxDf)
-      .drop("df")
-    val invertedMat = SkewTools.fanoutRepartition(inverted, col("shingle"))
-    val a = invertedMat.select(col("shingle"), col(idCol).as("id_a"),
-      col("set_size").as("size_a"))
-    val b = invertedMat.select(col("shingle"), col(idCol).as("id_b"),
-      col("set_size").as("size_b"))
-    a.join(b, Seq("shingle"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"), col("size_a"), col("size_b"))
-      .agg(count(lit(1)).as("inter"))
+                       idCol: String = "doc_id"): DataFrame =
+    shingleOverlap(docs, n, maxDf, textCol, idCol)
       .withColumn("cont_a_in_b", graft.functions.ExactRound.ratio(
         col("inter"), col("size_a"), 6))
       .withColumn("cont_b_in_a", graft.functions.ExactRound.ratio(
@@ -505,7 +480,6 @@ object Dedup {
         >= threshold)
       .select(col("id_a"), col("id_b"), col("inter"),
         col("cont_a_in_b"), col("cont_b_in_a"))
-  }
 
   /** Banded-Hamming candidate join over ANY 64-bit fingerprint column
     * (SimHash text prints, pHash image prints): 4×16-bit pigeonhole
@@ -514,41 +488,30 @@ object Dedup {
     * text dedup (q38's prints) and [[graft.operators.Multimodal]]'s
     * image pipeline both ride it.
     *
-    * Scale guards, same pair as [[ngramJaccardPairs]]: the
-    * explicit-parallelism pin before the quadratic bucket join (AQE
-    * sees the small banded input, not the pair fan-out), and an
-    * optional `maxBucket` cap — a bucket holding b fingerprints emits
-    * b² candidate rows, so one degenerate value (an all-identical
-    * boilerplate image/template) turns the join cartesian; capped
-    * buckets drop out like capped postings (dedup of a value that
-    * common belongs to the GROUP path, not pair enumeration). The
-    * default keeps every bucket — q38/q131 semantics unchanged. */
+    * Pairs come from [[SkewTools.selfPairs]] on the band bucket. A
+    * bucket holding b fingerprints emits b² candidate rows, so one
+    * degenerate value (an all-identical boilerplate image or template)
+    * makes the join quadratic in its copies: dedup of a value that
+    * common belongs to the group path ([[hammingDedupGroups]]). */
   def hammingBandPairs(hashed: DataFrame, hashCol: String,
-                       idCol: String, maxHamming: Int,
-                       maxBucket: Int = Int.MaxValue): DataFrame = {
-    val banded0 = hashed.select(col(idCol), col(hashCol),
-      explode(array((0 until 4).map(b => struct(lit(b).as("band"),
-        shiftright(col(hashCol), b * 16).bitwiseAND(lit(0xFFFFL))
-          .as("bucket"))): _*)).as("bb"))
-      .select(col(idCol), col(hashCol), col("bb.band"), col("bb.bucket"))
-    val banded =
-      if (maxBucket == Int.MaxValue) banded0
-      else banded0.withColumn("_df", count(lit(1)).over(
-          Window.partitionBy(col("band"), col("bucket"))))
-        .filter(col("_df") <= maxBucket).drop("_df")
-    val bandedMat = SkewTools.fanoutRepartition(banded,
-      col("band"), col("bucket"))
-    val a = bandedMat.select(col("band"), col("bucket"),
-      col(idCol).as("id_a"), col(hashCol).as("sim_a"))
-    val b = bandedMat.select(col("band"), col("bucket"),
-      col(idCol).as("id_b"), col(hashCol).as("sim_b"))
-    a.join(b, Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
+                       idCol: String, maxHamming: Int): DataFrame = {
+    val banded = hashed.select(col(idCol).as("id"), col(hashCol).as("sim"),
+      explode(hammingBuckets(col(hashCol))).as("bucket"))
+    SkewTools.selfPairs(banded, Seq("bucket"), Seq("id", "sim"))
       .select(col("id_a"), col("id_b"),
         TextFns.hamming64(col("sim_a"), col("sim_b")).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
   }
+
+  /** The 4×16-bit pigeonhole bands of a 64-bit print as one array of
+    * buckets: two prints within Hamming ≤ 3 share at least one exact
+    * band. Band b's 16 bits sit above the band index (b << 16), so
+    * buckets of different bands never collide. A null print has null
+    * buckets, which join nothing. */
+  private def hammingBuckets(h: Column): Column =
+    array((0 until 4).map(b => shiftright(h, b * 16)
+      .bitwiseAND(lit(0xFFFFL)).bitwiseOR(lit(b.toLong << 16))): _*)
 
   /** Incremental SimHash dedup: probe a PERSISTED corpus fingerprint
     * table with a new batch, flagging batch docs within `maxHamming`
@@ -560,26 +523,16 @@ object Dedup {
     *
     * `corpusHashes` is (`idCol`, `simhash` int64) — the compact side
     * table a pipeline persists and appends each surviving batch's
-    * prints to. Scale shape: the index is first collapsed to DISTINCT
-    * prints with multiplicity (one map-side-combined hash aggregation
-    * whose exchange carries only (print, count) — identical prints are
-    * interchangeable for a Hamming verdict, and exact-copy mass is
-    * precisely what a dedup index accumulates, so without this the
-    * bucket join fans out per COPY: measured 373 s pre-collapse vs
-    * 12.4 s with it at the 32×-copy ScaleCheck, against a 509 s
-    * full rebuild), then banded map-side (4×16-bit pigeonhole —
-    * two prints within Hamming ≤ 3 share at least one exact 16-bit
-    * band) and probed by the BROADCAST banded batch; only
-    * bucket-collision candidates reach the exact Hamming
-    * verification, and candidate counts multiply back through the
-    * stored multiplicities. The verdict is integer bit algebra
-    * (bit_count of xor), exactly reproducible cross-engine (q358).
+    * prints to. The scale shape is [[bandedIndexProbe]]'s over the
+    * [[hammingBuckets]] bands: only bucket-collision candidates reach
+    * the exact Hamming verification. The verdict is integer bit
+    * algebra (bit_count of xor), exactly reproducible cross-engine
+    * (q358).
     *
     * Returns one row per batch doc: (`idCol`, n_candidates, n_dups,
-    * kept) with kept = 1 iff no indexed print is within `maxHamming`
-    * (candidates/dups count INDEX ROWS, copies included). Null prints
-    * (null text) never band on either side, so such batch docs come
-    * back (0, 0, kept=1) — the [[bandBucket]] discipline. */
+    * kept) with kept = 1 iff no indexed print is within `maxHamming`.
+    * Null prints (null text) never band, so such batch docs come back
+    * (0, 0, kept=1). */
   def incrementalSimhashDedup(corpusHashes: DataFrame, batch: DataFrame,
                               maxHamming: Int = 3,
                               textCol: String = "text",
@@ -590,48 +543,10 @@ object Dedup {
     require(corpusHashes.columns.contains("simhash"),
       "corpusHashes needs a 'simhash' column — pass the persisted " +
         "(id, simhash) side table (TextFns.simhash64 output)")
-    val bh = batch.select(col(idCol),
-        TextFns.simhash64(col(textCol)).as("simhash"))
-      .localCheckpoint() // feeds both the probe and the output spine
-    def bands(h: Column): Column =
-      explode(array((0 until 4).map(b => struct(lit(b).as("band"),
-        shiftright(h, b * 16).bitwiseAND(lit(0xFFFFL))
-          .as("bucket"))): _*))
-    // distinct prints + multiplicity, THEN band — the exchange is
-    // (print, count)-narrow and map-side combined
-    val cd = corpusHashes.filter(col("simhash").isNotNull)
-      .groupBy(col("simhash").as("_ch"))
-      .agg(count(lit(1)).cast("long").as("_n"))
-      .select(col("_ch"), col("_n"), bands(col("_ch")).as("bb"))
-      .select(col("_ch"), col("_n"), col("bb.band"), col("bb.bucket"))
-    // the BATCH side collapses to distinct prints too: docs with the
-    // same print get the same verdict, so the bucket join runs once
-    // per distinct content and verdicts fan back out over the spine —
-    // without this, a copy-heavy batch pays the join per copy (the
-    // 512× crossover's both-sides-inflated shape read 792-885 s
-    // pre-collapse)
-    val bd = bh.filter(col("simhash").isNotNull)
-      .select(col("simhash").as("_bh")).distinct()
-      .select(col("_bh"), bands(col("_bh")).as("bb"))
-      .select(col("_bh"), col("bb.band"), col("bb.bucket"))
-    // a (print, print) pair sharing several bands repeats with the
-    // SAME distance and multiplicity — max() collapses the band fanout
-    val pairs = cd.join(broadcast(bd), Seq("band", "bucket"))
-      .select(col("_bh"), col("_ch"), col("_n"),
-        TextFns.hamming64(col("_ch"), col("_bh")).as("_hd"))
-      .groupBy(col("_bh"), col("_ch"))
-      .agg(max(col("_n")).as("n"), min(col("_hd")).as("hd"))
-    val perPrint = pairs.groupBy(col("_bh")).agg(
-      sum(col("n")).cast("long").as("n_candidates"),
-      sum(when(col("hd") <= maxHamming, col("n")).otherwise(0L))
-        .cast("long").as("n_dups"))
-    bh.join(broadcast(perPrint.withColumnRenamed("_bh", "simhash")),
-        Seq("simhash"), "left")
-      .select(col(idCol),
-        coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
-        coalesce(col("n_dups"), lit(0L)).as("n_dups"),
-        when(coalesce(col("n_dups"), lit(0L)) === 0, 1L).otherwise(0L)
-          .as("kept"))
+    bandedIndexProbe(corpusHashes,
+      batch.select(col(idCol), TextFns.simhash64(col(textCol)).as("simhash")),
+      idCol, Seq("simhash"), hammingBuckets(col("simhash")),
+      TextFns.hamming64(col("_c"), col("simhash")) <= maxHamming)
   }
 
   /** C4-style chunk-level duplication stats: each doc is cut into

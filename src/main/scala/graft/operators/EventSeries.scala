@@ -530,20 +530,10 @@ object EventSeries {
     * itself co-partitions on date. `minDays` guards the estimator
     * against noise pairs. */
   def pairCorrelation(staged: DataFrame, minDays: Int = 10): DataFrame = {
-    val r = staged.select(col("user_id"), col("date"),
+    val r = staged.select(col("user_id").as("user"), col("date"),
         col("pct_change").as("ret"))
       .where(col("ret").isNotNull)
-    // explicit-parallelism exchange: the self-join fans out |users|²
-    // rows per date from a tiny input — without a user-pinned count
-    // AQE coalesces the join to a few tasks that then carry the whole
-    // quadratic fan-out (the SkewTools.fanoutRepartition lesson)
-    val rm = SkewTools.fanoutRepartition(r, col("date"))
-    val a = rm.select(col("user_id").as("user_a"), col("date"),
-      col("ret").as("ret_a"))
-    val b = rm.select(col("user_id").as("user_b"), col("date"),
-      col("ret").as("ret_b"))
-    a.join(b, Seq("date"))
-      .where(col("user_a") < col("user_b"))
+    SkewTools.selfPairs(r, Seq("date"), Seq("user", "ret"))
       .groupBy(col("user_a"), col("user_b"))
       .agg(count(lit(1)).as("n_days"),
         round(corr(col("ret_a"), col("ret_b")), 4).as("ret_corr"))

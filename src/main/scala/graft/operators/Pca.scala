@@ -180,7 +180,7 @@ object Pca {
         .otherwise(m)
     }
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    // pre-fan-out explicit parallelism (the fanoutRepartition lesson,
+    // pre-fan-out explicit parallelism (the SkewTools.selfPairs lesson,
     // round-robin flavor): each input row becomes d(d+1)/2 pair rows,
     // so a few-partition upstream (a cache, a coalesced scan) would
     // serialize the whole expansion

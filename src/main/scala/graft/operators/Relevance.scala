@@ -919,11 +919,7 @@ object Relevance {
       .distinct()
     val dfreq = tok.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
-    val tokMat = SkewTools.fanoutRepartition(tok, col(idCol))
-    val a = tokMat.select(col(idCol), col("token").as("token_a"))
-    val b = tokMat.select(col(idCol), col("token").as("token_b"))
-    a.join(b, Seq(idCol))
-      .where(col("token_a") < col("token_b"))
+    SkewTools.selfPairs(tok, Seq(idCol), Seq("token"))
       .groupBy(col("token_a"), col("token_b"))
       .agg(count(lit(1)).as("df_ab"))
       .where(col("df_ab") >= minPairDocs)

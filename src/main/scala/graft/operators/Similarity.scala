@@ -637,18 +637,10 @@ object Similarity {
     // precisely when duplicates exist. Measured on the 32× near-dup
     // corpus (64k vectors, 2.13M surviving pairs, 4 bands): inline
     // 18-22 s vs dedup-then-join 61-81 s, identical output. Vectors
-    // shuffle once per (vector, band) here — never per pair.
-    // explicit-parallelism exchange before the quadratic bucket join
-    // (see SkewTools.fanoutRepartition) — also materializes the LSH
-    // bucket projection once per row instead of per matched pair
-    val bandedMat = SkewTools.fanoutRepartition(banded,
-      col("band"), col("bucket"))
-    val a = bandedMat.select(col("band"), col("bucket"),
-      col("id").as("id_a"), col("vec").as("vec_a"))
-    val b = bandedMat.select(col("band"), col("bucket"),
-      col("id").as("id_b"), col("vec").as("vec_b"))
-    a.join(b, Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
+    // shuffle once per (vector, band) here — never per pair. The
+    // pair join's one exchange also materializes the LSH bucket
+    // projection once per row instead of per matched pair.
+    SkewTools.selfPairs(banded, Seq("band", "bucket"), Seq("id", "vec"))
       .select(col("id_a"), col("id_b"),
         cosine(col("vec_a"), col("vec_b")).as("sim"))
       .distinct()

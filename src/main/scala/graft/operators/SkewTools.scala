@@ -1,27 +1,42 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skew handling for hot keys at cluster scale: an explicit-width
-  * repartition for high-fan-out self-joins, and a per-key skew profile
-  * that shows whether a join key is hot before the join runs. */
+/** Skew handling for hot keys at cluster scale: the candidate-pair
+  * self-join every pair generator runs, and a per-key skew profile that
+  * shows whether a join key is hot before the join runs. */
 object SkewTools {
 
-  /** Repartition on join keys with the session's shuffle parallelism
-    * as an EXPLICIT count. For a high-fan-out self-join (candidate
-    * pair generation: quadratic output from small input), AQE's
-    * size-first coalescing reads the tiny PRE-join byte count and
-    * collapses the join to a handful of tasks that then each carry
-    * millions of pairs (measured on the SemDeDup join: 510 s
-    * single-task vs seconds wide — BASELINE.md round 6). A
-    * user-specified partition count is exempt from coalescing, and the
-    * join reuses this exchange, so the only cost is pinning the
-    * parallelism the join would have wanted anyway. */
-  def fanoutRepartition(df: org.apache.spark.sql.DataFrame,
-                        keys: Column*): org.apache.spark.sql.DataFrame =
-    df.repartition(
-      df.sparkSession.sessionState.conf.numShufflePartitions, keys: _*)
+  /** Candidate pairs: `df` self-joined on `keys`, keeping the rows
+    * whose first `sides` column is smaller on the `_a` side than on the
+    * `_b` side. Output: the `keys`, then every `sides` column twice,
+    * suffixed `_a` and `_b`. Dedup (band buckets, shingle postings),
+    * ANN (LSH buckets), PMI (doc ids) and pair correlation (dates) all
+    * build their pairs here.
+    *
+    * The join reads one repartition on `keys` at the session's shuffle
+    * parallelism, an EXPLICIT count. Pair generation is quadratic
+    * output from small input, and AQE's size-first coalescing reads the
+    * tiny PRE-join byte count and collapses the join to a handful of
+    * tasks that then each carry millions of pairs (measured on the
+    * SemDeDup join: 510 s single-task vs seconds wide — BASELINE.md
+    * round 6). A user-specified partition count is exempt from
+    * coalescing, and both sides of the join reuse this one exchange, so
+    * the only cost is pinning the parallelism the join would have wanted
+    * anyway. Where `df` already arrives hash-partitioned on `keys` at
+    * that width (a window over the same keys), the planner drops the
+    * repartition and the join reads the earlier exchange instead. */
+  def selfPairs(df: DataFrame, keys: Seq[String],
+                sides: Seq[String]): DataFrame = {
+    val pinned = df.repartition(
+      df.sparkSession.sessionState.conf.numShufflePartitions,
+      keys.map(col): _*)
+    def side(s: String): DataFrame = pinned.select(keys.map(col) ++
+      sides.map(c => col(c).as(s"${c}_$s")): _*)
+    side("a").join(side("b"), keys)
+      .filter(col(s"${sides.head}_a") < col(s"${sides.head}_b"))
+  }
 
   /** Join-key skew profile — the diagnostic that decides whether
     * AQE skew handling is needed BEFORE the join ships: per-key

@@ -218,27 +218,25 @@ object Writes {
     * fpp·|existing|. The default fpp=1e-6 keeps a trillion-row existing
     * table's false positives around 10⁶ rows (megabytes of keys).
     * `expectedItems` sizes the filter without the extra count pass when
-    * the batch size is already known (the usual ingest case). The local
-    * ScaleCheck contrast is honest about single-node sizes: the filter
-    * build ≈ the saved shuffle at 3.2M existing rows — the win is that
-    * the existing-side cost grows with the table under the plain plan
-    * and stays O(batch) here. */
+    * the batch size is already known (the usual ingest case); a bound
+    * of zero is an empty batch, which returns `existing` as it is. The
+    * local ScaleCheck contrast is honest about single-node sizes: the
+    * filter build ≈ the saved shuffle at 3.2M existing rows — the win
+    * is that the existing-side cost grows with the table under the
+    * plain plan and stays O(batch) here. */
   def insertIgnoreBloom(existing: DataFrame, incoming: DataFrame,
                         keys: Seq[String], fpp: Double = 1e-6,
                         expectedItems: Option[Long] = None): DataFrame = {
     val keyTypes = keys.map(k => existing.schema(k).dataType)
-    val existingHash = xxhash64(keys.map(col): _*)
-    val incomingHash = xxhash64(keys.zip(keyTypes).map {
-      case (k, t) => col(k).cast(t) }: _*)
-    val dedupedIncoming =
-      dedupeByKey(incoming, keys, existing.columns.toIndexedSeq)
-    val expected = math.max(expectedItems.getOrElse(incoming.count()), 1L)
-    val bf = incoming.stat.bloomFilter(incomingHash, expected, fpp)
-    val conflicts = existing
-      .filter(graft.plans.BloomFns.mightContain(existingHash, bf))
-      .select(keys.map(col): _*)
-    existing.unionByName(
-      dedupedIncoming.join(broadcast(conflicts), keys, "left_anti"))
+    graft.plans.BloomFns.probe(existing, keys.map(col), incoming,
+        keys.zip(keyTypes).map { case (k, t) => col(k).cast(t) },
+        expectedItems, fpp)
+      .fold(existing) { hits =>
+        existing.unionByName(
+          dedupeByKey(incoming, keys, existing.columns.toIndexedSeq)
+            .join(broadcast(hits.select(keys.map(col): _*)), keys,
+              "left_anti"))
+      }
   }
 
   /** Slowly-changing-dimension Type 2 history from an observed

@@ -2,7 +2,8 @@ package graft.plans
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.xxhash64
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -72,8 +73,25 @@ object BloomFns {
     bos.toByteArray
   }
 
-  /** Column probe: `mightContain(xxhash64(k1,k2), bf)`. */
-  def mightContain(keyHash: Column, bf: BloomFilter): Column =
-    Bridge.column(BloomMightContain(Bridge.expression(keyHash),
-      serialize(bf)))
+  /** The rows of `table` whose `tableKeys` might occur among `batch`'s
+    * `batchKeys`: a Bloom filter over the batch's xxhash64 key hashes,
+    * built once, probes the table's scan map-side. No false
+    * negatives, so every true match survives, plus about `fpp` of the
+    * rest. xxhash64 is type-sensitive: both key lists must hash the
+    * same types. `expectedItems` sizes the filter (any upper bound
+    * works) and defaults to a count of `batch`. None when that bound is
+    * zero: the batch is empty, nothing can match, and a filter over
+    * zero rows cannot be built (`stat.bloomFilter` reads a null
+    * buffer and throws). */
+  def probe(table: DataFrame, tableKeys: Seq[Column], batch: DataFrame,
+            batchKeys: Seq[Column], expectedItems: Option[Long],
+            fpp: Double): Option[DataFrame] = {
+    val expected = expectedItems.getOrElse(batch.count())
+    Option.when(expected > 0) {
+      val bf = batch.stat.bloomFilter(xxhash64(batchKeys: _*), expected,
+        fpp)
+      table.filter(Bridge.column(BloomMightContain(
+        Bridge.expression(xxhash64(tableKeys: _*)), serialize(bf))))
+    }
+  }
 }

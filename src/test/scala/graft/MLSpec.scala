@@ -139,8 +139,13 @@ class MLSpec extends SparkSuite {
     val (model, _) = Train.fitBoosted(train, maxIter = 5)
     val res = Train.evaluateModel(model, test)
     assert(res.metrics("accuracy") >= 0.0 && res.metrics("accuracy") <= 1.0)
-    assert(res.confusion.count() > 0)
-    val classes = res.confusion.select("predicted_class").distinct()
+    val scored = model.transform(Train.assembler.transform(test))
+      .select(FeatureEngineering.classOf(col("prediction"))
+          .as("predicted_class"),
+        FeatureEngineering.classOf(col("label")).as("actual_class"))
+    val confusion = graft.operators.AnalyticsViews.confusionMatrix(scored)
+    assert(confusion.count() > 0)
+    val classes = confusion.select("predicted_class").distinct()
       .as[String].collect().toSet
     assert(classes.subsetOf(Set("low", "medium", "high")))
   }

@@ -312,6 +312,68 @@ class PlanShapeSpec extends SparkSuite {
     assert(!p.contains("SortMergeJoin [cluster"), p)
   }
 
+  test("each pair generator's self-join reads ONE exchange on its join " +
+    "key on both sides, an explicit-count repartition wherever the " +
+    "planner keeps it (AQE on, executed)") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    // query stages and reused exchanges hide their plans from children
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case r: ReusedExchangeExec => nodes(r.child)
+      case o => o.children.flatMap(nodes)
+    })
+    def names(es: Seq[Expression]): Seq[String] =
+      es.flatMap(_.references.map(_.name))
+    // the shingle joins' repartition sits on the df window's exchange
+    // on the same key at the same width, and EnsureRequirements drops a
+    // user repartition whose child is already partitioned that way: the
+    // join reads the window's exchange instead
+    val pinned = Set("bucket", "date", "doc_id")
+    val width = spark.sessionState.conf.numShufflePartitions
+    val failures = Seq("q34_jaccard_pairs" -> "shingle",
+      "q39_minhash_lsh_pairs" -> "bucket", "q40_lsh_cosine_pairs" -> "bucket",
+      "q121_containment_pairs" -> "shingle",
+      "q131_image_phash_pairs" -> "bucket", "q144_pair_corr" -> "date",
+      "q158_pmi_pairs" -> "doc_id").flatMap { case (q, key) =>
+      val df = SparkEntry.queries(q)(spark, dir)
+      df.collect()
+      val all = nodes(df.queryExecution.executedPlan)
+      // the self-join: a join on `key` whose two sides read one and the
+      // same exchange instance (AQE reuse points both sides at it)
+      val selfJoins = all.collect {
+        case j: BaseJoinExec if names(j.leftKeys).contains(key) &&
+            names(j.leftKeys) == names(j.rightKeys) =>
+          def read(c: SparkPlan) = nodes(c).collect {
+            case e: ShuffleExchangeExec => e
+          }.filter(_.outputPartitioning match {
+            case h: HashPartitioning => names(h.expressions) == names(j.leftKeys)
+            case _ => false
+          })
+          read(j.left).filter(e => read(j.right).exists(_ eq e))
+      }.filter(_.size == 1)
+      val byNum = all.collect {
+        case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e
+      }.foldLeft(List.empty[ShuffleExchangeExec]) { (seen, e) =>
+        if (seen.exists(_ eq e)) seen else e :: seen
+      }.size
+      val ok = selfJoins.size == 1 && {
+        val e = selfJoins.head.head
+        e.numPartitions == width &&
+          (e.shuffleOrigin == REPARTITION_BY_NUM) == pinned(key) &&
+          byNum == (if (pinned(key)) 1 else 0)
+      }
+      if (ok) None else Some(s"$q:\n${df.queryExecution.executedPlan}")
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
   test("q203 triplet mining is broadcast-anchor + partial struct-max " +
     "aggregate — no window, map-side partials before the exchange") {
     val p = plan("q203_triplets")

@@ -67,6 +67,16 @@ class WritesSpec extends SparkSuite {
     assert(twice == plain) // idempotent
   }
 
+  test("insertIgnoreBloom with an empty batch returns existing unchanged") {
+    import org.apache.spark.sql.functions._
+    val big = spark.range(0, 50)
+      .select(col("id").as("k"), (col("id") * 10).cast("int").as("v"))
+    val empty = big.limit(0)
+    val out = Writes.insertIgnoreBloom(big, empty, Seq("k"))
+    assert(out.orderBy("k").collect().toSeq ==
+      big.orderBy("k").collect().toSeq)
+  }
+
   test("applyCdc: latest change per key wins — delete removes, update " +
     "replaces, untouched keys survive, stale changes are ignored") {
     val table = Seq((1, "a", 10), (2, "a", 20), (3, "a", 30))
